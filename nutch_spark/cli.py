@@ -108,8 +108,11 @@ def _rounds_of(out_dir: str, name: str) -> list[int]:
     base = os.path.join(out_dir, name)
     if not os.path.isdir(base):
         return []
+    # .tmp (staged) and .old (mid-install) dirs are not rounds; skip
+    # them as CrawlRun.resume_round does
     return sorted(int(d.split("=")[1]) for d in os.listdir(base)
-                  if d.startswith("round=") and not d.endswith(".tmp"))
+                  if d.startswith("round=")
+                  and not d.endswith((".tmp", ".old")))
 
 
 def _load_crawldb(spark, out_dir: str, rnd: int | None = None):

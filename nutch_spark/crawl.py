@@ -6,19 +6,38 @@ Reference: src/bin/crawl:18-279 — inject once, then loop generate
 dedup; the loop exits when generate yields an empty fetchlist.
 
 Spark shape: each stage is a DataFrame program; round boundaries are
-parquet snapshot directories (``crawldb/round=N``) standing in for
-Iceberg snapshot commits (atomic install, CrawlDb.java:155-173 — on a
-cluster these become ``overwritePartitions`` on an Iceberg table
-bucket-partitioned by url hash). A ``_metrics`` table accumulates
-per-round, per-stage row counts and virtual-clock stats — the
-per-partition lineage + metrics the north rule requires for
-resumability; ``resume_round`` restarts from the latest snapshot.
+snapshot commits (``crawldb`` as a url-bucketed
+:class:`~nutch_spark.storage.SnapshotTable`, the segment, linkdb and
+URL-seen tables as ``<name>/round=N`` parquet dirs with a
+``_snapshot.json`` commit record) standing in for Iceberg snapshot
+commits (atomic install, CrawlDb.java:155-173). Committed tables are
+read back with the schema their writer had, so no read runs a
+schema-inference job. A ``_metrics`` table accumulates per-round,
+per-stage row counts; ``resume_round`` restarts from the latest
+committed crawldb snapshot.
+
+Lineage boundary. The reference's updatedb reads only the segment's
+committed ``crawl_fetch`` and ``crawl_parse`` outputs. Here the round's
+message stream (``crawl_fetch`` ∪ ``crawl_parse`` ∪ fetch redirects) is
+materialized once with an eager ``localCheckpoint`` right after parse,
+so the URL-seen split, updatedb, dedup and the bucketed crawldb write
+plan over one ``LogicalRDD`` plus committed tables — never over the
+fetch and parse lineage. Cache lifetimes within a round:
+
+- fetch schedule, parse output and (mime dispatch) page content:
+  persisted by their operators so fetch and parse compute once; they
+  are unpersisted right after the message checkpoint, their last
+  reader;
+- message checkpoint: its blocks live until the NEXT ``run_round``
+  starts, so ``debug_split``/``debug_plans`` stay readable after a
+  round returns — one round's checkpoint at most per ``CrawlRun``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark import StorageLevel
@@ -35,6 +54,7 @@ from .operators import updatedb as update_op
 from .operators import cuckoo as cuckoo_op
 from .operators import urlseen
 from . import schema as S
+from .storage import SnapshotTable, partition_lineage
 
 
 def _lineage_rows(lineage: list[dict]) -> int | None:
@@ -92,7 +112,6 @@ class CrawlRun:
         self.storage = storage
         self.db_table = None
         if storage == "bucketed":
-            from .storage import SnapshotTable
             # sort=False: the crawldb is rewritten every round and its
             # consumers hash-aggregate/filter — per-bucket url order
             # would be pure write-side sort cost at 10^10 rows
@@ -101,65 +120,72 @@ class CrawlRun:
                                           n_buckets=db_buckets,
                                           sort=False)
         self.metrics: list[dict] = []
+        # writer schema of each staged ``.tmp`` dir, consumed by
+        # _install so the committed table reads back without inference
+        self._staged_schema: dict = {}
+        # JVM RDD behind the latest round's message checkpoint
+        self._messages_rdd = None
 
     # --- checkpoint helpers --------------------------------------------
     def _path(self, name: str, rnd: int | None = None) -> str:
         p = os.path.join(self.out, name)
         return p if rnd is None else os.path.join(p, f"round={rnd}")
 
+    def _read(self, path: str, schema, lineage: list[dict]) -> DataFrame:
+        """Read a table this run wrote, with its writer's schema (no
+        schema-inference job) and its footer row count attached."""
+        out = self.spark.read.schema(schema).parquet(path)
+        out._nutch_lineage_rows = _lineage_rows(lineage)
+        return out
+
+    def _stage_files(self, df: DataFrame, name: str,
+                     rnd: int | None) -> str:
+        """Write ``df`` to the table's ``.tmp`` dir; returns that dir."""
+        tmp = self._path(name, rnd) + ".tmp"
+        if os.path.isdir(tmp):
+            shutil.rmtree(tmp)
+        df.write.mode("overwrite").parquet(tmp)
+        self._staged_schema[tmp] = df.schema
+        return tmp
+
     def _write_tmp(self, df: DataFrame, name: str,
-                   rnd: int | None = None,
-                   partition_by: str | None = None) -> DataFrame:
+                   rnd: int | None = None) -> DataFrame:
         """Stage half of the atomic install: write the table to the
         ``.tmp`` dir (durable, but NOT yet committed — resume ignores
         it) and return a read of the staged data. :meth:`_install`
         performs the commit; :meth:`_write` composes both."""
-        path = self._path(name, rnd)
-        tmp = path + ".tmp"
-        if os.path.isdir(tmp):
-            import shutil
-            shutil.rmtree(tmp)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(partition_by)
-        w.parquet(tmp)
-        from .storage import partition_lineage
-        out = self.spark.read.parquet(tmp)
-        out._nutch_lineage_rows = _lineage_rows(partition_lineage(tmp))
-        return out
+        tmp = self._stage_files(df, name, rnd)
+        return self._read(tmp, df.schema, partition_lineage(tmp))
 
-    def _install(self, name: str, rnd: int | None = None) -> DataFrame:
+    def _install(self, name: str, rnd: int | None = None,
+                 **record) -> DataFrame:
         """Commit half: stamp the ``_snapshot.json`` commit record
-        (with per-partition lineage) and install with the reference's
-        current/old rename dance (CrawlDb.install). A crash before
-        this point leaves only the ``.tmp`` dir, which resume
-        ignores."""
+        (with per-partition lineage and any extra ``record`` fields)
+        and install with the reference's current/old rename dance
+        (CrawlDb.install). A crash before this point leaves only the
+        ``.tmp`` dir, which resume ignores."""
         path = self._path(name, rnd)
         tmp = path + ".tmp"
         old = path + ".old"
-        from .storage import partition_lineage
+        schema = self._staged_schema.pop(tmp)
         lineage = partition_lineage(tmp)
         with open(os.path.join(tmp, "_snapshot.json"), "w") as f:
             json.dump({"name": name, "round": rnd, "ts": time.time(),
                        "rows": sum(p["rows"] or 0 for p in lineage),
-                       "partitions": lineage}, f)
+                       "partitions": lineage, **record}, f)
         # install: current -> old, tmp -> current, drop old
         # (CrawlDb.install; dir renames are atomic on POSIX)
         if os.path.isdir(old):
-            import shutil
             shutil.rmtree(old)
         if os.path.isdir(path):
             os.rename(path, old)
         os.rename(tmp, path)
         if os.path.isdir(old):
-            import shutil
             shutil.rmtree(old)
-        out = self.spark.read.parquet(path)
-        out._nutch_lineage_rows = _lineage_rows(lineage)
-        return out
+        return self._read(path, schema, lineage)
 
     def _write(self, df: DataFrame, name: str, rnd: int | None = None,
-               partition_by: str | None = None) -> DataFrame:
+               **record) -> DataFrame:
         """Atomic snapshot install (CrawlDb.java:155-173 / Iceberg
         ``overwritePartitions`` semantics on a cluster): the table is
         written to a temp dir, a ``_snapshot.json`` commit record is
@@ -169,8 +195,8 @@ class CrawlRun:
         committed snapshot in place or a temp dir that resume ignores —
         never a half-written table that :meth:`resume_round` would
         treat as committed."""
-        self._write_tmp(df, name, rnd, partition_by)
-        return self._install(name, rnd)
+        self._stage_files(df, name, rnd)
+        return self._install(name, rnd, **record)
 
     @staticmethod
     def _committed(path: str) -> bool:
@@ -251,16 +277,29 @@ class CrawlRun:
         return ("urlseen_bloom" if self.seen_filter == "bloom"
                 else f"urlseen_{self.seen_filter}")
 
+    def _seen_record(self, rnd: int) -> dict | None:
+        """Commit record of round ``rnd``'s URL-seen layer, or None
+        when there is no committed layer to split against."""
+        if not self.use_bloom or rnd < 0:
+            return None
+        try:
+            with open(os.path.join(self._path(self._seen_dir, rnd),
+                                   "_snapshot.json")) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
+
     def _load_bloom(self, rnd: int) -> DataFrame | None:
         """Committed URL-seen layer (bloom or cuckoo table rows) for
         round ``rnd`` (covers that round's crawldb snapshot), or
         None."""
-        if not self.use_bloom or rnd < 0:
+        rec = self._seen_record(rnd)
+        if rec is None:
             return None
-        path = self._path(self._seen_dir, rnd)
-        if not self._committed(path):
-            return None
-        return self.spark.read.parquet(path)
+        schema = (cuckoo_op.CUCKOO_SCHEMA if self.seen_filter == "cuckoo"
+                  else urlseen.BLOOM_SCHEMA)
+        return self._read(self._path(self._seen_dir, rnd), schema,
+                          rec["partitions"])
 
     def _write_bloom(self, db: DataFrame, rnd: int) -> None:
         if self.seen_filter == "cuckoo":
@@ -269,14 +308,24 @@ class CrawlRun:
         else:
             layer = urlseen.build_bloom(db.select("url"),
                                         n_buckets=self.bloom_buckets)
-        self._write(layer, self._seen_dir, rnd)
+        # the bucket count goes in the commit record, so readers of the
+        # layer never run a job to learn it
+        self._write(layer, self._seen_dir, rnd,
+                    n_buckets=self.bloom_buckets)
 
-    def _split_seen(self, linked: DataFrame,
-                    layer: DataFrame) -> tuple[DataFrame, DataFrame]:
+    def _split_seen(self, linked: DataFrame, layer: DataFrame,
+                    n_buckets: int | None
+                    ) -> tuple[DataFrame, DataFrame]:
         """(definitely_new, maybe_seen) via the active seen layer."""
         if self.seen_filter == "cuckoo":
-            return cuckoo_op.split_seen(linked, layer)
-        return urlseen.split_seen(linked, layer)
+            return cuckoo_op.split_seen(linked, layer, n_buckets=n_buckets)
+        return urlseen.split_seen(linked, layer, n_buckets=n_buckets)
+
+    def _release_messages(self) -> None:
+        """Drop the blocks of the last round's message checkpoint."""
+        if self._messages_rdd is not None:
+            self._messages_rdd.unpersist(True)
+            self._messages_rdd = None
 
     def purge_gone(self, rnd: int) -> dict:
         """Frontier purge (the CleaningJob deletion semantic,
@@ -297,8 +346,9 @@ class CrawlRun:
         if self.seen_filter == "cuckoo":
             layer = self._load_bloom(rnd)
             if layer is not None:
-                layer = cuckoo_op.cuckoo_delete(layer, gone)
-                self._write(layer, self._seen_dir, nxt)
+                nb = self._seen_record(rnd).get("n_buckets")
+                layer = cuckoo_op.cuckoo_delete(layer, gone, n_buckets=nb)
+                self._write(layer, self._seen_dir, nxt, n_buckets=nb)
             else:
                 self._write_bloom(staged, nxt)
         elif self.use_bloom:
@@ -328,6 +378,7 @@ class CrawlRun:
         Returns the per-stage row counts; ``fetchlist_rows == 0``
         signals the caller to stop (bin/crawl:195-207)."""
         cfg = self.cfg
+        self._release_messages()
         db = self.load_crawldb(rnd - 1 if rnd > 0 else 0)
         t0 = time.time()
 
@@ -347,7 +398,6 @@ class CrawlRun:
                                   "segments/crawl_fetch", rnd)
         n_fetched = self._rows_or_count(crawl_fetch)
         content = fr["content"]
-        linked_redir = fr["linked"]
         self._metric(rnd, "fetch", rows=n_fetched, sec=time.time() - t0,
                      partitions=cfg.num_fetch_partitions)
 
@@ -364,51 +414,60 @@ class CrawlRun:
         n_parsed = self._rows_or_count(parse_text)
         parse_data = self._write(pr["parse_data"], "segments/parse_data",
                                  rnd)
-        crawl_parse = pr["crawl_parse"].unionByName(linked_redir)
         self._metric(rnd, "parse", rows=n_parsed,
                      sec=time.time() - t0)
 
-        # URL-seen bloom pre-split (north rule's partitioned-bloom
-        # URL-seen layer): discovered linked rows that the previous
-        # round's bloom rules out are DEFINITELY not in the frontier,
-        # so they go through a db-less updatedb aggregation and never
-        # enter the frontier merge — only bloom hits (true seen +
-        # ~fpp false positives, which the merge itself resolves
-        # exactly) reach the 10^10-row db join. Correctness is exact:
-        # blooms have no false negatives, and the split is skipped in
-        # normalize/filter mode where message urls may re-key into
-        # frontier urls after the split decision.
+        # the lineage boundary: the round's message stream is computed
+        # once from the fetch and parse caches and checkpointed, so the
+        # seen split, the merge, dedup and the bucketed write below
+        # plan over one LogicalRDD plus committed tables. The caches'
+        # last reader is this checkpoint; the checkpoint itself is
+        # released when the next round starts (_release_messages). It
+        # holds round-sized data, so it keeps at most the session's
+        # shuffle partition count: every stage that scans it runs that
+        # many tasks, not one per fetch/parse input partition
         t0 = time.time()
+        n_part = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         messages = crawl_fetch.drop("queue_id", "virtual_time") \
-            .unionByName(crawl_parse)
-        # the message stream feeds several plan branches (bloom split,
-        # frontier merge, db-less fresh merge) — without a persist each
-        # branch re-derives it from the parse/fetch frames, and the
-        # duplicated subtrees multiply the round's compute
-        messages = messages.persist(StorageLevel.MEMORY_AND_DISK)
-        bloom = self._load_bloom(rnd - 1)
-        can_split = (bloom is not None and not cfg.db_update_normalize
+            .unionByName(pr["crawl_parse"]).unionByName(fr["linked"]) \
+            .coalesce(n_part) \
+            .localCheckpoint(eager=True,
+                             storageLevel=StorageLevel.MEMORY_AND_DISK)
+        self._messages_rdd = messages._jdf.queryExecution().logical().rdd()
+        for cached in (fr.get("schedule"), pr.get("parsed"),
+                       pr.get("content_cache")):
+            if cached is not None:
+                cached.unpersist()
+
+        # URL-seen pre-split (north rule's partitioned bloom/cuckoo
+        # URL-seen layer): discovered linked rows that the previous
+        # round's layer rules out are DEFINITELY not in the frontier,
+        # so updatedb aggregates them without the frontier join — only
+        # layer hits (true seen + ~fpp false positives, which the merge
+        # itself resolves exactly) reach the 10^10-row db join.
+        # Correctness is exact: the layers have no false negatives, and
+        # the split is skipped in normalize/filter mode where message
+        # urls may re-key into frontier urls after the split decision.
+        seen = self._seen_record(rnd - 1)
+        can_split = (seen is not None and not cfg.db_update_normalize
                      and not cfg.db_update_filter)
         if can_split:
             linked = messages.where(F.col("status") == S.STATUS_LINKED)
             others = messages.where(F.col("status") != S.STATUS_LINKED)
-            new_rows, maybe = self._split_seen(linked, bloom)
+            new_rows, maybe = self._split_seen(
+                linked, self._load_bloom(rnd - 1), seen.get("n_buckets"))
             self.debug_split = {"new": new_rows, "maybe": maybe}
-            merged = update_op.updatedb(db, others.unionByName(maybe),
-                                        cfg, now_ms)
-            # fresh urls: same state machine, no frontier side at all
-            # (old = null ⇒ the link_new branch; additions_allowed
-            # off drops them exactly as the merge would)
-            fresh = update_op.updatedb(None, new_rows, cfg, now_ms)
-            new_db = merged.unionByName(fresh)
+            new_db = update_op.updatedb(db, others.unionByName(maybe),
+                                        cfg, now_ms, fresh=new_rows)
         else:
             new_db = update_op.updatedb(db, messages, cfg, now_ms)
-        # dedup references its input TWICE (crawldb ⋈ marked losers),
-        # which would duplicate — and re-execute — the entire merge
-        # subtree inside one plan; materialize the merge once
-        new_db = new_db.persist(StorageLevel.MEMORY_AND_DISK)
-        merge_cached = new_db
-        new_db = dedup_op.dedup(new_db)
+        # dedup references the merge twice (crawldb ⋈ marked losers).
+        # Hash-partitioning the merge on url first gives both references
+        # one shared exchange, so the merge runs once. In bucketed
+        # storage this is the crawldb write's own exchange moved up: same
+        # key and count, so the write's repartition is then elided
+        n_out = n_part if self.db_table is None else self.db_table.n_buckets
+        new_db = dedup_op.dedup(new_db.repartition(n_out, "url"))
         # plan introspection for tests/bench: the pre-write frames whose
         # physical plans carry the round's shuffle structure
         self.debug_plans = {"updatedb": new_db, "schedule": fr["schedule"]}
@@ -474,14 +533,6 @@ class CrawlRun:
         # commit the crawldb snapshot LAST: resume_round() only counts
         # a round done once every per-round product exists
         new_db = self._commit_crawldb(rnd)
-
-        # release the within-round reuse caches (fetch schedule, parse
-        # output): every consumer has materialized by now, and persisted
-        # blocks would otherwise accumulate across rounds in one session
-        for cached in (fr.get("schedule"), pr.get("parsed"),
-                       pr.get("content_cache"), messages, merge_cached):
-            if cached is not None:
-                cached.unpersist()
 
         return {"fetchlist_rows": n_fl, "fetched_rows": n_fetched,
                 "crawldb_rows": n_db}

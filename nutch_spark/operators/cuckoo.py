@@ -150,11 +150,13 @@ def build_cuckoo(urls: DataFrame, url_col: str = "url",
     """Per-coarse-bucket cuckoo filters over the url set; returns
     CUCKOO_SCHEMA rows (one per non-empty bucket). ``n_buckets=None``
     sizes the bucket count from the url count so each table stays
-    ≤ ~4 MB."""
+    ≤ ~4 MB: a table holds ~n/load uint16 fingerprints (2 bytes each,
+    whatever ``SLOTS`` is), and one more factor 2 leaves room for the
+    power-of-two rounding of its slot-bucket count."""
     if n_buckets is None:
         n = urls.count()
         n_buckets = max(64, math.ceil(
-            n / load * SLOTS * 2 / _TARGET_BUCKET_BYTES))
+            n / load * 2 * 2 / _TARGET_BUCKET_BYTES))
     nb = int(n_buckets)
     hashed = _hash_cols(urls.select(url_col), url_col, nb) \
         .select("_bucket", "_h64")
@@ -262,7 +264,8 @@ def _delete_from(table: np.ndarray, stash: np.ndarray, m: int,
 
 
 def cuckoo_delete(cuckoo: DataFrame, urls: DataFrame,
-                  url_col: str = "url") -> DataFrame:
+                  url_col: str = "url",
+                  n_buckets: int | None = None) -> DataFrame:
     """Remove one stored fingerprint per DISTINCT url of ``urls`` from
     the layer; returns the updated CUCKOO_SCHEMA DataFrame (buckets
     with no deletions pass through unchanged). Only delete urls known
@@ -276,8 +279,13 @@ def cuckoo_delete(cuckoo: DataFrame, urls: DataFrame,
     fingerprint, so clearing the slot once removes one occurrence for
     one of them and the second delete falls through to i2/stash on
     the next call — to keep one call = one pass, colliding seconds
-    within a call resolve against i2 in the same pass."""
-    nb = int(cuckoo.select(F.max("n_buckets")).first()[0])
+    within a call resolve against i2 in the same pass.
+
+    ``n_buckets``: the layer's coarse bucket count when the caller
+    knows it (a commit record); otherwise one job reads it from the
+    layer."""
+    nb = n_buckets if n_buckets is not None else \
+        int(cuckoo.select(F.max("n_buckets")).first()[0])
     hashed = _hash_cols(urls.select(F.col(url_col).alias("_u"))
                         .distinct(), "_u", nb) \
         .select("_h64", "_bucket")

@@ -45,11 +45,66 @@ def _struct(prefix: str = "") -> Column:
     return F.struct(*[F.col(prefix + f).alias(f) for f in _VALUE_FIELDS])
 
 
+def _kind_capped(messages: DataFrame, cfg: CrawlConfig) -> DataFrame:
+    """Message rows tagged with their ``_kind`` (db / fetch / marker
+    status), linked rows capped to the top-N by score per url."""
+    kind = (F.when(F.col("status").isin(*DB_STATUSES), "db")
+             .when(F.col("status").isin(*FETCH_STATUSES), "fetch")
+             .otherwise(F.col("status")))
+    df = messages.withColumn("_kind", kind)
+    if cfg.db_update_max_inlinks is None:
+        return df
+
+    # inlink cap: keep top-N linked rows per url by score
+    # (InlinkPriorityQueue, CrawlDbReducer.java:57-58,326-339).
+    # Only the linked subset pays the window sort — db/fetch/marker
+    # rows bypass it entirely (they'd otherwise drag the full message
+    # stream through an extra shuffle+sort before the groupBy).
+    cap = cfg.db_update_max_inlinks
+    linked = df.where(F.col("_kind") == STATUS_LINKED)
+    others = df.where(F.col("_kind") != STATUS_LINKED)
+    # deterministic tie-break: score desc, then newest fetch_time,
+    # then signature/modified_time — the partition key itself is
+    # constant within the window and cannot break ties
+    w = Window.partitionBy("url").orderBy(
+        F.desc("score"), F.desc("fetch_time"),
+        F.asc("modified_time"), F.asc_nulls_last("signature"))
+    if cfg.inlink_cap_hot_split:
+        # NON-default (measured slower, see config.py): a
+        # partial-agg count finds the over-cap urls (at most
+        # total/cap — broadcastable), the window sorts only their
+        # rows. Saves the full-width sort but references the
+        # linked stream 3× — when the stream is not materialized,
+        # each reference re-executes the parse/fetch subtree, and
+        # the interleaved A/B measured this 2× SLOWER on the bench
+        # cycle (24.3 vs 11.6 s). Only consider when the input is
+        # persisted AND the sort dominates profile.
+        hot = F.broadcast(
+            linked.groupBy("url").agg(F.count("*").alias("_n"))
+                  .where(F.col("_n") > cap).select("url"))
+        capped = (linked.join(hot, "url")
+                  .withColumn("_rn", F.row_number().over(w))
+                  .where(F.col("_rn") <= cap)
+                  .drop("_rn"))
+        linked = linked.join(hot, "url", "left_anti") \
+            .unionByName(capped)
+    else:
+        linked = (linked.withColumn("_rn", F.row_number().over(w))
+                  .where(F.col("_rn") <= cap).drop("_rn"))
+    return others.unionByName(linked)
+
+
 def updatedb(crawldb: DataFrame | None, messages: DataFrame,
-             cfg: CrawlConfig, now_ms: int) -> DataFrame:
+             cfg: CrawlConfig, now_ms: int,
+             fresh: DataFrame | None = None) -> DataFrame:
     """Merge the existing crawldb with per-round message rows
     (fetch statuses, linked, signature, parse_meta) into the next
-    crawldb snapshot. All inputs share the CRAWLDB schema."""
+    crawldb snapshot. All inputs share the CRAWLDB schema.
+
+    ``fresh``: message rows whose urls are known to be absent from
+    ``crawldb`` (the URL-seen layer's definitely-new side). They are
+    aggregated on their own, skip the frontier join, and feed the same
+    single state-machine projection as the merged rows."""
     # join mode: when the db side is not being re-normalized/re-keyed
     # (both off by default), the crawldb has unique urls and the merge
     # is equivalently a full-outer join of (messages aggregated by url)
@@ -62,6 +117,9 @@ def updatedb(crawldb: DataFrame | None, messages: DataFrame,
     db = None
     join_mode = (crawldb is not None and not cfg.db_update_normalize
                  and not cfg.db_update_filter)
+    if fresh is not None and not join_mode:
+        messages = messages.unionByName(fresh)
+        fresh = None
     if crawldb is not None:
         db = crawldb
         # CrawlDbFilter 404-purge (CrawlDbFilter.java:87-89)
@@ -89,49 +147,7 @@ def updatedb(crawldb: DataFrame | None, messages: DataFrame,
                                       "url") \
             .where(F.col("accepted")).drop("accepted")
 
-    kind = (F.when(F.col("status").isin(*DB_STATUSES), "db")
-             .when(F.col("status").isin(*FETCH_STATUSES), "fetch")
-             .otherwise(F.col("status")))
-    df = messages.withColumn("_kind", kind)
-
-    # inlink cap: keep top-N linked rows per url by score
-    # (InlinkPriorityQueue, CrawlDbReducer.java:57-58,326-339).
-    # Only the linked subset pays the window sort — db/fetch/marker
-    # rows bypass it entirely (they'd otherwise drag the full message
-    # stream through an extra shuffle+sort before the groupBy).
-    if cfg.db_update_max_inlinks is not None:
-        cap = cfg.db_update_max_inlinks
-        linked = df.where(F.col("_kind") == STATUS_LINKED)
-        others = df.where(F.col("_kind") != STATUS_LINKED)
-        # deterministic tie-break: score desc, then newest fetch_time,
-        # then signature/modified_time — the partition key itself is
-        # constant within the window and cannot break ties
-        w = Window.partitionBy("url").orderBy(
-            F.desc("score"), F.desc("fetch_time"),
-            F.asc("modified_time"), F.asc_nulls_last("signature"))
-        if cfg.inlink_cap_hot_split:
-            # NON-default (measured slower, see config.py): a
-            # partial-agg count finds the over-cap urls (at most
-            # total/cap — broadcastable), the window sorts only their
-            # rows. Saves the full-width sort but references the
-            # linked stream 3× — when the stream is not materialized,
-            # each reference re-executes the parse/fetch subtree, and
-            # the interleaved A/B measured this 2× SLOWER on the bench
-            # cycle (24.3 vs 11.6 s). Only consider when the input is
-            # persisted AND the sort dominates profile.
-            hot = F.broadcast(
-                linked.groupBy("url").agg(F.count("*").alias("_n"))
-                      .where(F.col("_n") > cap).select("url"))
-            capped = (linked.join(hot, "url")
-                      .withColumn("_rn", F.row_number().over(w))
-                      .where(F.col("_rn") <= cap)
-                      .drop("_rn"))
-            linked = linked.join(hot, "url", "left_anti") \
-                .unionByName(capped)
-        else:
-            linked = (linked.withColumn("_rn", F.row_number().over(w))
-                      .where(F.col("_rn") <= cap).drop("_rn"))
-        df = others.unionByName(linked)
+    df = _kind_capped(messages, cfg)
 
     is_db = F.col("_kind") == "db"
     is_fetch = F.col("_kind") == "fetch"
@@ -145,6 +161,7 @@ def updatedb(crawldb: DataFrame | None, messages: DataFrame,
                         "modified_time")
     score_key = F.struct("score", "fetch_time", "retries",
                          "fetch_interval", "modified_time")
+    old_agg = F.max_by(F.when(is_db, _struct()), F.when(is_db, time_key))
     msg_aggs = [
         F.max_by(F.when(is_fetch, _struct()),
                  F.when(is_fetch, time_key)).alias("fetch0"),
@@ -165,20 +182,18 @@ def updatedb(crawldb: DataFrame | None, messages: DataFrame,
         # messages may still carry db-status rows (callers that merge
         # snapshots through the message stream); honor them, preferring
         # the authoritative db-side row when both exist
-        magg = df.groupBy("url").agg(
-            F.max_by(F.when(is_db, _struct()),
-                     F.when(is_db, time_key)).alias("_old_msg"),
-            *msg_aggs)
+        magg = df.groupBy("url").agg(old_agg.alias("_old_msg"), *msg_aggs)
         agg = (magg.join(db.select("url", _struct().alias("_old_db")),
                          "url", "full_outer")
                .withColumn("old", F.coalesce(F.col("_old_db"),
                                              F.col("_old_msg")))
                .drop("_old_db", "_old_msg"))
+        if fresh is not None:
+            agg = agg.unionByName(
+                _kind_capped(fresh, cfg).groupBy("url")
+                .agg(old_agg.alias("old"), *msg_aggs))
     else:
-        agg = df.groupBy("url").agg(
-            F.max_by(F.when(is_db, _struct()),
-                     F.when(is_db, time_key)).alias("old"),
-            *msg_aggs)
+        agg = df.groupBy("url").agg(old_agg.alias("old"), *msg_aggs)
 
     old = F.col("old")
     has_old = old.isNotNull()

@@ -27,11 +27,24 @@ def _default_heap() -> str:
     return "8g"
 
 
+def default_cores() -> int:
+    """Task threads for ``local[N]`` when the caller names none:
+    ``SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run on
+    (its affinity mask — a container's share, not the host's count)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # platforms without affinity masks
+        return os.cpu_count() or 1
+
+
 def get_spark(app_name: str = "nutch-spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 32)
     b = (SparkSession.builder

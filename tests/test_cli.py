@@ -176,3 +176,12 @@ def test_dump_and_commoncrawldump(monkeypatch, capsys, spark,
     _main(monkeypatch, spark, ["commoncrawldump", crawl_dir, cc])
     assert json.loads(_out(capsys)[-1])["dest"] == cc
     assert os.path.isdir(cc)
+
+
+def test_rounds_of_skips_leftover_old_dir(tmp_path):
+    """A ``round=N.old`` dir, left by a crash mid-install or seen by a
+    reader during one, is not a round: readers skip it the way
+    ``CrawlRun.resume_round`` does instead of failing on its name."""
+    for d in ("round=1", "round=2.old", "round=3.tmp"):
+        (tmp_path / "linkdb" / d).mkdir(parents=True)
+    assert cli._rounds_of(str(tmp_path), "linkdb") == [1]

@@ -112,6 +112,19 @@ def test_build_sizing_scales_bucket_count(spark):
         assert len(r.table) <= ck._TARGET_BUCKET_BYTES
 
 
+def test_sized_build_tables_near_byte_target(spark, monkeypatch):
+    """n_buckets=None sizing puts every table within 2x of the byte
+    target. A 4 KB target lets 100k urls size past the 64-bucket
+    floor; tables hold ~n/load 2-byte fingerprints whatever SLOTS is,
+    so a SLOTS factor in the sizing would leave them ~4x too small."""
+    target = 4096
+    monkeypatch.setattr(ck, "_TARGET_BUCKET_BYTES", target)
+    rows = ck.build_cuckoo(_urls(spark, 100_000), n_buckets=None).collect()
+    assert len(rows) > 64
+    for r in rows:
+        assert target / 2 <= len(r.table) <= target * 2
+
+
 def test_parity_with_bloom_layer(spark):
     """Bloom and cuckoo layers agree end-to-end through the exact
     join (drop-in interchangeability for CrawlRun)."""

@@ -1,0 +1,17 @@
+"""Session factory defaults are sized to the machine they run on."""
+
+from nutch_spark import session
+
+
+def test_default_cores_from_env(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session.default_cores() == 3
+
+
+def test_default_cores_from_affinity_mask(monkeypatch):
+    """No env override: the process's CPU affinity mask sizes
+    ``local[N]``, never a fixed 32."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(session.os, "sched_getaffinity",
+                        lambda pid: {0, 2, 5}, raising=False)
+    assert session.default_cores() == 3
