@@ -100,8 +100,7 @@ def _run_for(spark, args, out_dir=None):
     t = _tables(spark, args)
     cfg = CrawlConfig(num_fetch_partitions=args.cores * 2)
     return CrawlRun(spark, out_dir or args.out_dir, cfg, t["pages"],
-                    t["robots"], t["http_status"],
-                    seen_filter=getattr(args, "seen_filter", None))
+                    t["robots"], t["http_status"])
 
 
 def _rounds_of(out_dir: str, name: str) -> list[int]:
@@ -115,25 +114,21 @@ def _rounds_of(out_dir: str, name: str) -> list[int]:
                   and not d.endswith((".tmp", ".old")))
 
 
-def _load_crawldb(spark, out_dir: str, rnd: int | None = None):
-    """Latest (or given) committed crawldb snapshot, for either
-    storage layout: bucketed SnapshotTable (_table.json present) or
-    plain parquet round dirs."""
-    meta = os.path.join(out_dir, "crawldb", "_table.json")
-    if os.path.exists(meta):
-        from .storage import SnapshotTable
-        return SnapshotTable(spark, out_dir, "crawldb",
-                             sort=False).read(rnd)
-    rounds = _rounds_of(out_dir, "crawldb")
-    if not rounds:
+def _crawldb_table(spark, out_dir: str):
+    from .storage import SnapshotTable
+    return SnapshotTable(spark, out_dir, "crawldb", sort=False)
+
+
+def _load_crawldb(spark, out_dir: str):
+    """Latest committed crawldb snapshot."""
+    table = _crawldb_table(spark, out_dir)
+    if table.current_id() is None:
         raise SystemExit(f"no committed crawldb under {out_dir}")
-    use = max(rounds) if rnd is None else rnd
-    return spark.read.parquet(
-        os.path.join(out_dir, "crawldb", f"round={use}"))
+    return table.read()
 
 
 def _load_seg(spark, out_dir: str, name: str, rnd: int | None = None):
-    """One per-round segment/linkdb table (parquet layout), or None."""
+    """One per-round segment/linkdb table, or None."""
     rounds = _rounds_of(out_dir, name)
     if not rounds:
         return None
@@ -230,15 +225,25 @@ def cmd_readdb(args):
 
 def cmd_mergedb(args):
     """CrawlDbMerger (crawl/CrawlDbMerger.java): newest datum per url
-    across dbs, metadata merged."""
+    across dbs, metadata merged, committed as round 0 of ``dest``'s
+    crawldb — a crawl can resume from it."""
     from .operators import merge as merge_op
     spark = _spark(args)
     dbs = [_load_crawldb(spark, d) for d in args.dbs]
-    out = merge_op.merge_crawldbs(dbs)
-    out.write.mode("overwrite").parquet(
-        os.path.join(args.dest, "crawldb", "round=0"))
-    _emit({"urls": spark.read.parquet(
-        os.path.join(args.dest, "crawldb", "round=0")).count()})
+    out = _crawldb_table(spark, args.dest).commit(
+        merge_op.merge_crawldbs(dbs), 0)
+    _emit({"urls": out.count()})
+
+
+def _commit_next_round(run, db, rnd: int) -> int:
+    """Commit ``db`` as crawldb round ``rnd + 1``, with a seen layer of
+    the crawl's own kind; returns its row count."""
+    staged = run._stage_crawldb(db, rnd + 1)
+    n = run._rows_or_count(staged)
+    if run.seen_filter != "none":
+        run._write_bloom(staged, rnd + 1)
+    run._commit_crawldb(rnd + 1)
+    return n
 
 
 def cmd_dedup(args):
@@ -249,12 +254,7 @@ def cmd_dedup(args):
     run = _run_for(spark, args)
     rnd = run.resume_round()
     db = run.load_crawldb(rnd)
-    marked = dedup_op.dedup(db)
-    staged = run._stage_crawldb(marked, rnd + 1)
-    n = run._rows_or_count(staged)
-    if run.use_bloom:
-        run._write_bloom(staged, rnd + 1)
-    run._commit_crawldb(rnd + 1)
+    n = _commit_next_round(run, dedup_op.dedup(db), rnd)
     dupes = run.load_crawldb(rnd + 1) \
         .where("status = 'db_duplicate'").count()
     _emit({"round": rnd + 1, "crawldb_rows": n, "duplicates": dupes})
@@ -504,11 +504,7 @@ def cmd_scoreupdater(args):
     ranks = spark.read.parquet(
         os.path.join(args.out_dir, "webgraph", "linkrank"))
     db = linkdb_op.score_updater(run.load_crawldb(rnd), ranks)
-    staged = run._stage_crawldb(db, rnd + 1)
-    n = run._rows_or_count(staged)
-    if run.use_bloom:
-        run._write_bloom(staged, rnd + 1)
-    run._commit_crawldb(rnd + 1)
+    n = _commit_next_round(run, db, rnd)
     _emit({"round": rnd + 1, "crawldb_rows": n})
 
 
@@ -588,9 +584,7 @@ def main(argv=None):
     m.set_defaults(fn=cmd_mergedb)
 
     add("dedup", cmd_dedup, tables=True)
-    pg = add("purge", cmd_purge, tables=True)
-    pg.add_argument("--seen-filter",
-                    choices=["bloom", "cuckoo", "none"], default=None)
+    add("purge", cmd_purge, tables=True)
 
     rl = add("readlinkdb", cmd_readlinkdb)
     rl.add_argument("--url")

@@ -6,15 +6,16 @@ Reference: src/bin/crawl:18-279 — inject once, then loop generate
 dedup; the loop exits when generate yields an empty fetchlist.
 
 Spark shape: each stage is a DataFrame program; round boundaries are
-snapshot commits (``crawldb`` as a url-bucketed
-:class:`~nutch_spark.storage.SnapshotTable`, the segment, linkdb and
-URL-seen tables as ``<name>/round=N`` parquet dirs with a
-``_snapshot.json`` commit record) standing in for Iceberg snapshot
-commits (atomic install, CrawlDb.java:155-173). Committed tables are
-read back with the schema their writer had, so no read runs a
-schema-inference job. A ``_metrics`` table accumulates per-round,
-per-stage row counts; ``resume_round`` restarts from the latest
-committed crawldb snapshot.
+snapshot commits standing in for Iceberg snapshot commits (atomic
+install, CrawlDb.java:155-173). The crawldb has one layout, a
+url-bucketed :class:`~nutch_spark.storage.SnapshotTable` (Iceberg
+``bucket(url, N)``): the frontier side of the updatedb merge reads in
+place, with no Exchange. The segment, linkdb and URL-seen tables are
+``<name>/round=N`` parquet dirs with a ``_snapshot.json`` commit
+record. Committed tables are read back with the schema their writer
+had, so no read runs a schema-inference job. A ``_metrics`` table
+accumulates per-round, per-stage row counts; ``resume_round``
+restarts from the latest committed crawldb snapshot.
 
 Lineage boundary. The reference's updatedb reads only the segment's
 committed ``crawl_fetch`` and ``crawl_parse`` outputs. Here the round's
@@ -66,59 +67,50 @@ def _lineage_rows(lineage: list[dict]) -> int | None:
 
 
 class CrawlRun:
-    """One crawl over a pages table, checkpointed under ``out_dir``."""
+    """One crawl over a pages table, checkpointed under ``out_dir``.
+
+    Crawldb snapshots are commits of one url-bucketed
+    :class:`~nutch_spark.storage.SnapshotTable` with ``db_buckets``
+    buckets. The frontier side of the updatedb merge and (when
+    ``pages`` is itself a bucketed table) the two pages-side fetch
+    joins run with NO Exchange on the big side.
+
+    ``seen_filter`` picks the URL-seen layer: ``"bloom"``, ``"cuckoo"``
+    (the same contract plus deletion; the north rule names both) or
+    ``"none"``. ``None`` reads the kind from ``out_dir``: ``"cuckoo"``
+    when the latest committed round has a cuckoo layer, else
+    ``"bloom"`` — so maintenance jobs that commit a round (dedup,
+    scoreupdater, purge) keep a cuckoo crawl's layer."""
 
     def __init__(self, spark: SparkSession, out_dir: str,
                  cfg: CrawlConfig, pages: DataFrame,
                  robots: DataFrame, http_status: DataFrame | None = None,
-                 use_bloom: bool = True, bloom_buckets: int = 64,
-                 seen_filter: str | None = None,
-                 storage: str = "bucketed", db_buckets: int = 32,
+                 bloom_buckets: int = 64, seen_filter: str | None = None,
+                 db_buckets: int = 32,
                  linkrank_every: int = 1, linkrank_iterations: int = 10):
-        """``storage``:
-
-        - ``"bucketed"`` (default, the production layout): crawldb
-          snapshots are url-bucketed :class:`~nutch_spark.storage.
-          SnapshotTable` commits — Iceberg ``bucket(url, N)`` semantics.
-          The frontier side of the updatedb merge and (when ``pages``
-          is itself a bucketed table) the two pages-side fetch joins
-          run with NO Exchange on the big side.
-        - ``"parquet"``: plain per-round parquet snapshot dirs with the
-          reference's current/old install dance — simpler, but the
-          frontier re-shuffles every round.
-        """
         self.spark = spark
         self.out = out_dir
         self.cfg = cfg
         self.pages = pages
         self.robots = robots
         self.http_status = http_status
-        # URL-seen layer kind: "bloom" (default), "cuckoo" (same
-        # contract + deletion — north rule names both), or "none".
-        # `use_bloom` kept as the legacy on/off switch.
+        # sort=False: the crawldb is rewritten every round and its
+        # consumers hash-aggregate/filter — per-bucket url order
+        # would be pure write-side sort cost at 10^10 rows
+        self.db_table = SnapshotTable(spark, out_dir, "crawldb",
+                                      bucket_col="url",
+                                      n_buckets=db_buckets, sort=False)
         if seen_filter is None:
-            seen_filter = "bloom" if use_bloom else "none"
+            seen_filter = "cuckoo" if self._committed(self._path(
+                "urlseen_cuckoo", self.resume_round())) else "bloom"
         if seen_filter not in ("bloom", "cuckoo", "none"):
             raise ValueError(f"seen_filter: {seen_filter!r}")
         self.seen_filter = seen_filter
-        self.use_bloom = seen_filter != "none"
         self.bloom_buckets = bloom_buckets
         # scoring_filter="link" only: run webgraph→linkrank→
         # scoreupdater every N rounds (0 disables)
         self.linkrank_every = linkrank_every
         self.linkrank_iterations = linkrank_iterations
-        if storage not in ("bucketed", "parquet"):
-            raise ValueError(f"storage must be bucketed|parquet: {storage}")
-        self.storage = storage
-        self.db_table = None
-        if storage == "bucketed":
-            # sort=False: the crawldb is rewritten every round and its
-            # consumers hash-aggregate/filter — per-bucket url order
-            # would be pure write-side sort cost at 10^10 rows
-            self.db_table = SnapshotTable(spark, out_dir, "crawldb",
-                                          bucket_col="url",
-                                          n_buckets=db_buckets,
-                                          sort=False)
         self.metrics: list[dict] = []
         # writer schema of each staged ``.tmp`` dir, consumed by
         # _install so the committed table reads back without inference
@@ -148,18 +140,10 @@ class CrawlRun:
         self._staged_schema[tmp] = df.schema
         return tmp
 
-    def _write_tmp(self, df: DataFrame, name: str,
-                   rnd: int | None = None) -> DataFrame:
-        """Stage half of the atomic install: write the table to the
-        ``.tmp`` dir (durable, but NOT yet committed — resume ignores
-        it) and return a read of the staged data. :meth:`_install`
-        performs the commit; :meth:`_write` composes both."""
-        tmp = self._stage_files(df, name, rnd)
-        return self._read(tmp, df.schema, partition_lineage(tmp))
-
     def _install(self, name: str, rnd: int | None = None,
                  **record) -> DataFrame:
-        """Commit half: stamp the ``_snapshot.json`` commit record
+        """Commit half of :meth:`_write` (:meth:`_stage_files` is the
+        stage half): stamp the ``_snapshot.json`` commit record
         (with per-partition lineage and any extra ``record`` fields)
         and install with the reference's current/old rename dance
         (CrawlDb.install). A crash before this point leaves only the
@@ -214,39 +198,21 @@ class CrawlRun:
 
     def resume_round(self) -> int:
         """Latest *committed* crawldb round, or -1 if none (the
-        resumability contract: restart continues from here).
-
-        Bucketed mode: the SnapshotTable's current pointer — a staged
-        but unpublished snapshot is invisible, exactly like Iceberg's
-        metadata swap. Parquet mode: only rounds carrying a
-        ``_snapshot.json`` commit record count — ``.tmp``/``.old``
-        leftovers from a crash mid-install are ignored, mirroring the
-        reference's current/old install where an interrupted install
-        leaves ``current`` untouched."""
-        if self.db_table is not None:
-            cur = self.db_table.current_id()
-            return -1 if cur is None else cur
-        base = os.path.join(self.out, "crawldb")
-        if not os.path.isdir(base):
-            return -1
-        rounds = [int(d.split("=")[1]) for d in os.listdir(base)
-                  if d.startswith("round=") and not d.endswith(".tmp")
-                  and not d.endswith(".old")
-                  and self._committed(os.path.join(base, d))]
-        return max(rounds) if rounds else -1
+        resumability contract: restart continues from here): the
+        SnapshotTable's current pointer. A staged but unpublished
+        snapshot, or a leftover ``.tmp`` dir from a crash mid-stage,
+        is invisible, exactly like Iceberg's metadata swap."""
+        cur = self.db_table.current_id()
+        return -1 if cur is None else cur
 
     def load_crawldb(self, rnd: int) -> DataFrame:
-        if self.db_table is not None:
-            return self.db_table.read(rnd)
-        return self.spark.read.parquet(self._path("crawldb", rnd))
+        return self.db_table.read(rnd)
 
     def _stage_crawldb(self, df: DataFrame, rnd: int) -> DataFrame:
         """Durable-but-uncommitted crawldb write for round ``rnd``."""
-        if self.db_table is not None:
-            out = self.db_table.stage(df, rnd)
-            out._nutch_lineage_rows = self.db_table.staged_rows(rnd)
-            return out
-        return self._write_tmp(df, "crawldb", rnd)
+        out = self.db_table.stage(df, rnd)
+        out._nutch_lineage_rows = self.db_table.staged_rows(rnd)
+        return out
 
     @staticmethod
     def _rows_or_count(df: DataFrame) -> int:
@@ -264,23 +230,18 @@ class CrawlRun:
     def _commit_crawldb(self, rnd: int) -> DataFrame:
         """Make round ``rnd``'s staged crawldb the committed snapshot —
         the round's resume marker, always the round's LAST write."""
-        if self.db_table is not None:
-            staged = self.spark.table(self.db_table._table_name(rnd))
-            self.db_table.publish(staged, rnd)
-            return self.db_table.read(rnd)
-        return self._install("crawldb", rnd)
+        staged = self.spark.table(self.db_table._table_name(rnd))
+        self.db_table.publish(staged, rnd)
+        return self.db_table.read(rnd)
 
     @property
     def _seen_dir(self) -> str:
-        # bloom keeps its historical dir name so pre-existing
-        # checkpoints resume; cuckoo layers live beside it
-        return ("urlseen_bloom" if self.seen_filter == "bloom"
-                else f"urlseen_{self.seen_filter}")
+        return f"urlseen_{self.seen_filter}"
 
     def _seen_record(self, rnd: int) -> dict | None:
         """Commit record of round ``rnd``'s URL-seen layer, or None
         when there is no committed layer to split against."""
-        if not self.use_bloom or rnd < 0:
+        if self.seen_filter == "none" or rnd < 0:
             return None
         try:
             with open(os.path.join(self._path(self._seen_dir, rnd),
@@ -351,7 +312,7 @@ class CrawlRun:
                 self._write(layer, self._seen_dir, nxt, n_buckets=nb)
             else:
                 self._write_bloom(staged, nxt)
-        elif self.use_bloom:
+        elif self.seen_filter != "none":
             self._write_bloom(staged, nxt)
         self._commit_crawldb(nxt)
         self._metric(nxt, "purge", rows=n_db)
@@ -366,7 +327,7 @@ class CrawlRun:
         rnd = max(prev, 0)
         staged = self._stage_crawldb(new_db, rnd)
         n_db = self._rows_or_count(staged)
-        if self.use_bloom:
+        if self.seen_filter != "none":
             # round 1 pre-splits its discoveries against the seed set
             self._write_bloom(staged, rnd)
         out = self._commit_crawldb(rnd)
@@ -463,11 +424,11 @@ class CrawlRun:
             new_db = update_op.updatedb(db, messages, cfg, now_ms)
         # dedup references the merge twice (crawldb ⋈ marked losers).
         # Hash-partitioning the merge on url first gives both references
-        # one shared exchange, so the merge runs once. In bucketed
-        # storage this is the crawldb write's own exchange moved up: same
-        # key and count, so the write's repartition is then elided
-        n_out = n_part if self.db_table is None else self.db_table.n_buckets
-        new_db = dedup_op.dedup(new_db.repartition(n_out, "url"))
+        # one shared exchange, so the merge runs once. This is the
+        # bucketed crawldb write's own exchange moved up: same key and
+        # count, so the write's repartition is then elided
+        new_db = dedup_op.dedup(
+            new_db.repartition(self.db_table.n_buckets, "url"))
         # plan introspection for tests/bench: the pre-write frames whose
         # physical plans carry the round's shuffle structure
         self.debug_plans = {"updatedb": new_db, "schedule": fr["schedule"]}
@@ -527,7 +488,7 @@ class CrawlRun:
             self._metric(rnd, "index", rows=self._rows_or_count(docs),
                          sec=time.time() - t0)
 
-        if self.use_bloom:
+        if self.seen_filter != "none":
             self._write_bloom(new_db, rnd)
 
         # commit the crawldb snapshot LAST: resume_round() only counts

@@ -223,9 +223,12 @@ def _delete_from(table: np.ndarray, stash: np.ndarray, m: int,
                  h: np.ndarray
                  ) -> tuple[np.ndarray, np.ndarray, int]:
     """Delete one stored fingerprint per item of ``h`` from a single
-    table: first matching i1 slot, else i2 slot, else stash key.
-    Returns (table, stash, n_deleted); ``table`` is modified in
-    place (callers pass a copy)."""
+    table: first matching i1 slot, else i2 slot, else stash key. Twins
+    (items with the same i1 row and fingerprint) pick the same slot in
+    a pass, so only one of them lands per pass; the passes repeat for
+    the items still pending while a pass deletes something. Returns
+    (table, stash, n_deleted); ``table`` is modified in place (callers
+    pass a copy)."""
     fp, i1, i2 = _fp_i1_i2(h, m)
 
     def clear_first(rows: np.ndarray, fps: np.ndarray) -> np.ndarray:
@@ -246,21 +249,26 @@ def _delete_from(table: np.ndarray, stash: np.ndarray, m: int,
         out[np.flatnonzero(has)[landed]] = True
         return out
 
-    done = clear_first(i1, fp)
-    # i1 row had no match (or lost the duplicate-collapse): try i2
-    redo = ~done
-    if redo.any():
-        done[redo] = clear_first(i2[redo], fp[redo])
-    rest = ~done
-    if rest.any() and len(stash):
-        keys = _stash_key(i1[rest], i2[rest], fp[rest])
-        pos = np.searchsorted(stash, keys)
-        ok = (pos < len(stash)) & (stash[np.minimum(
-            pos, len(stash) - 1)] == keys)
-        # delete one stash occurrence per matched key
-        done[np.flatnonzero(rest)[ok]] = True
-        stash = np.delete(stash, np.unique(pos[ok]))
-    return table, stash, int(done.sum())
+    done = np.zeros(len(h), dtype=bool)
+    while True:
+        n_before = int(done.sum())
+        # i1 row, then (no match or lost the duplicate-collapse) i2 row
+        for rows in (i1, i2):
+            pend = ~done
+            if pend.any():
+                done[pend] = clear_first(rows[pend], fp[pend])
+        pend = np.flatnonzero(~done)
+        if len(pend) and len(stash):
+            keys = _stash_key(i1[pend], i2[pend], fp[pend])
+            pos = np.searchsorted(stash, keys)
+            ok = (pos < len(stash)) & (stash[np.minimum(
+                pos, len(stash) - 1)] == keys)
+            # one stash entry per matched key and pass, like a slot
+            hit, first = np.unique(pos[ok], return_index=True)
+            done[pend[ok][first]] = True
+            stash = np.delete(stash, hit)
+        if done.all() or done.sum() == n_before:
+            return table, stash, int(done.sum())
 
 
 def cuckoo_delete(cuckoo: DataFrame, urls: DataFrame,
@@ -274,12 +282,11 @@ def cuckoo_delete(cuckoo: DataFrame, urls: DataFrame,
 
     Vectorized: per deleted item the first matching slot in its i1
     row is chosen (argmax over the equality mask), else in its i2
-    row, else its stash key; distinct-url deletes that collide on the
-    exact same (slot-bucket, slot) necessarily carry the same
-    fingerprint, so clearing the slot once removes one occurrence for
-    one of them and the second delete falls through to i2/stash on
-    the next call — to keep one call = one pass, colliding seconds
-    within a call resolve against i2 in the same pass.
+    row, else its stash key. Distinct urls with the same i1 row and
+    fingerprint (twins) are stored once each but pick the same slot,
+    so one pass clears one copy for one of them; the passes repeat
+    for the pending twins while they make progress, and deleting
+    every twin in one call removes every copy.
 
     ``n_buckets``: the layer's coarse bucket count when the caller
     knows it (a commit record); otherwise one job reads it from the

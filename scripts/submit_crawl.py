@@ -63,10 +63,6 @@ def main(argv: list[str] | None = None) -> int:
                         "threads/task)")
     p.add_argument("--db-buckets", type=int, default=256,
                    help="crawldb bucket(url, N) count")
-    p.add_argument("--storage", choices=["bucketed", "parquet"],
-                   default="bucketed")
-    p.add_argument("--no-bloom", action="store_true",
-                   help="disable the URL-seen bloom pre-split layer")
     p.add_argument("--scoring", choices=["opic", "link"],
                    default="opic")
     args = p.parse_args(argv)
@@ -99,8 +95,7 @@ def main(argv: list[str] | None = None) -> int:
     seeds = read_seeds(spark, args.seeds)
 
     run = CrawlRun(spark, args.out, cfg, pages, robots, http_status,
-                   use_bloom=not args.no_bloom,
-                   storage=args.storage, db_buckets=args.db_buckets)
+                   db_buckets=args.db_buckets)
     final_db = run.crawl(seeds, rounds=args.rounds)
     n = final_db.count()
     print(f"crawl complete: {n} crawldb rows after "

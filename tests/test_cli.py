@@ -14,20 +14,24 @@ from nutch_spark import cli
 START_ARGS = ["--cores", "4"]
 
 
-@pytest.fixture(scope="module")
-def crawl_dir(spark, tmp_path_factory, monkeypatch_session=None):
-    """A 2-round fixture crawl the reader commands inspect."""
-    tmp = tmp_path_factory.mktemp("cli_crawl")
+def _fixture_crawl(spark, out, **kw):
+    """A 2-round fixture crawl under ``out``; ``kw`` goes to CrawlRun."""
     from nutch_spark.config import CrawlConfig
     from nutch_spark.crawl import CrawlRun
     from nutch_spark.testdata import fixture_dfs
     fx = fixture_dfs(spark, n_hosts=6, pages_per_host=4,
                      hot_host_pages=8)
     cfg = CrawlConfig(generate_top_n=60, num_fetch_partitions=4)
-    run = CrawlRun(spark, str(tmp), cfg, fx["pages"], fx["robots"],
-                   fx["http_status"], bloom_buckets=4, db_buckets=4)
+    run = CrawlRun(spark, str(out), cfg, fx["pages"], fx["robots"],
+                   fx["http_status"], bloom_buckets=4, db_buckets=4, **kw)
     run.crawl(fx["seeds"], rounds=2, start_ms=1_700_000_000_000)
-    return str(tmp)
+    return str(out)
+
+
+@pytest.fixture(scope="module")
+def crawl_dir(spark, tmp_path_factory):
+    """A 2-round fixture crawl the reader commands inspect."""
+    return _fixture_crawl(spark, tmp_path_factory.mktemp("cli_crawl"))
 
 
 def _main(monkeypatch, spark, argv):
@@ -114,6 +118,16 @@ def test_mergedb(monkeypatch, capsys, spark, crawl_dir, tmp_path):
     n = SnapshotTable(spark, crawl_dir, "crawldb", sort=False) \
         .read().count()
     assert res["urls"] == n  # self-merge keeps the url set
+    # the merged db is a committed crawldb: a crawl can resume from it
+    # and the crawldb readers open it
+    from nutch_spark.config import CrawlConfig
+    from nutch_spark.crawl import CrawlRun
+    t = cli._empty_tables(spark)
+    run = CrawlRun(spark, dest, CrawlConfig(), t["pages"], t["robots"])
+    assert run.resume_round() == 0
+    assert run.load_crawldb(0).count() == n
+    _main(monkeypatch, spark, ["readdb", dest, "--stats"])
+    assert any("db_" in ln for ln in _out(capsys))
 
 
 def test_dedup_and_purge_commit_next_round(monkeypatch, capsys, spark,
@@ -124,6 +138,23 @@ def test_dedup_and_purge_commit_next_round(monkeypatch, capsys, spark,
     _main(monkeypatch, spark, ["purge", crawl_dir, "--fixture"])
     res2 = json.loads(_out(capsys)[-1])
     assert res2["round"] == res["round"] + 1
+
+
+def test_dedup_and_purge_keep_cuckoo_layer(monkeypatch, capsys, spark,
+                                           tmp_path):
+    """Maintenance jobs keep the seen layer the crawl was run with:
+    after a cuckoo crawl, the rounds dedup and purge commit carry a
+    cuckoo layer, not a rebuilt bloom one."""
+    out = _fixture_crawl(spark, tmp_path / "ck", seen_filter="cuckoo")
+    _main(monkeypatch, spark, ["dedup", out, "--fixture"])
+    _main(monkeypatch, spark, ["purge", out, "--fixture"])
+    last = json.loads(_out(capsys)[-1])["round"]
+    assert last == 4
+    for rnd in range(last + 1):
+        layer = os.path.join(out, "urlseen_cuckoo", f"round={rnd}")
+        assert os.path.isfile(os.path.join(layer, "_snapshot.json")), rnd
+        assert not os.path.exists(
+            os.path.join(out, "urlseen_bloom", f"round={rnd}")), rnd
 
 
 def test_index_and_domainstats(monkeypatch, capsys, spark, crawl_dir):

@@ -18,12 +18,12 @@ def fixture(spark):
                        hot_host_pages=12)
 
 
-def _run(spark, tmp, fixture, rounds=2, storage="bucketed", **cfg_kw):
+def _run(spark, tmp, fixture, rounds=2, **cfg_kw):
     cfg = CrawlConfig(generate_top_n=100, num_fetch_partitions=4,
                       **cfg_kw)
     run = CrawlRun(spark, str(tmp), cfg, fixture["pages"],
                    fixture["robots"], fixture["http_status"],
-                   bloom_buckets=4, storage=storage, db_buckets=4)
+                   bloom_buckets=4, db_buckets=4)
     db = run.crawl(fixture["seeds"], rounds=rounds, start_ms=START)
     return run, db
 
@@ -68,39 +68,33 @@ def test_resume_from_checkpoint(spark, tmp_path, fixture):
 
 def test_crash_mid_write_resumes_from_last_snapshot(spark, tmp_path,
                                                     fixture):
-    """Atomic install contract (CrawlDb.java:155-173): a half-written
-    crawldb snapshot (no _snapshot.json commit record) is invisible to
-    resume; the crawl restarts its round from the last committed one
-    and converges to the same final state as an uninterrupted run."""
+    """Atomic commit contract (CrawlDb.java:155-173, Iceberg's
+    metadata swap): crawldb data written for a round that was never
+    published is invisible to resume; the crawl restarts its round
+    from the last committed one and converges to the same final state
+    as an uninterrupted run."""
     import os
     import shutil
 
-    run, db_ok = _run(spark, tmp_path / "clean", fixture, rounds=2,
-                      storage="parquet")
+    run, db_ok = _run(spark, tmp_path / "clean", fixture, rounds=2)
 
-    # crashed run: round 1 completes, then simulate dying mid-install
-    # of round 2 — a .tmp dir with data but no commit record
-    run2, _ = _run(spark, tmp_path / "crash", fixture, rounds=1,
-                   storage="parquet")
+    # crashed run: round 1 completes, then round 2 dies after staging
+    # its snapshot but before publishing it, and a re-stage of it dies
+    # mid-write — a staged s2 plus a leftover s2.tmp dir
+    run2, _ = _run(spark, tmp_path / "crash", fixture, rounds=1)
     base = str(tmp_path / "crash" / "crawldb")
-    src = os.path.join(base, "round=1")
-    tmp2 = os.path.join(base, "round=2.tmp")
-    shutil.copytree(src, tmp2)
-    os.remove(os.path.join(tmp2, "_snapshot.json"))
-    assert run2.resume_round() == 1   # the torn write is ignored
+    run2.db_table.stage(run2.load_crawldb(1), 2)
+    shutil.copytree(os.path.join(base, "s1"), os.path.join(base, "s2.tmp"))
+    assert os.path.isdir(os.path.join(base, "s2"))
+    assert run2.resume_round() == 1   # the unpublished round is ignored
 
-    # also a torn COMMITTED-looking dir without the record
-    part = os.path.join(base, "round=3")
-    os.makedirs(part)
-    assert run2.resume_round() == 1
-
-    shutil.rmtree(part)
     # resume re-runs round 2 only and matches the clean run
     cfg = CrawlConfig(generate_top_n=100, num_fetch_partitions=4)
     run3 = CrawlRun(spark, str(tmp_path / "crash"), cfg,
                     fixture["pages"], fixture["robots"],
                     fixture["http_status"], bloom_buckets=4,
-                    storage="parquet")
+                    db_buckets=4)
+    assert run3.resume_round() == 1
     db_resumed = run3.crawl(fixture["seeds"], rounds=2, start_ms=START)
     rows_ok = sorted((r.url, r.status) for r in db_ok.collect())
     rows_re = sorted((r.url, r.status) for r in db_resumed.collect())

@@ -89,6 +89,50 @@ def test_delete_missing_url_is_noop_for_strangers(spark):
     assert n >= 2000 * 0.99
 
 
+def _twin_urls(spark, m=64):
+    """Two distinct urls with the same i1 row and fingerprint at ``m``
+    slot-buckets: twins the filter stores twice and cannot tell
+    apart."""
+    rows = _urls(spark, 20000).select(
+        "url", F.xxhash64("url").alias("h")).collect()
+    fp, i1, _ = ck._fp_i1_i2(np.array([r.h for r in rows],
+                                      dtype=np.int64), m)
+    keys = i1 * 65536 + fp.astype(np.int64)
+    _, inv, counts = np.unique(keys, return_inverse=True,
+                               return_counts=True)
+    a, b = np.flatnonzero(inv == np.argmax(counts >= 2))[:2]
+    return rows[a].url, rows[b].url
+
+
+def test_delete_twins_in_one_call(spark):
+    """Deleting both twins in one call removes both stored copies:
+    neither stays maybe-seen and ``n_items`` drops by two."""
+    twins = spark.createDataFrame([(u,) for u in _twin_urls(spark)],
+                                  "url string")
+    filt = ck.build_cuckoo(twins, n_buckets=1).persist()
+    assert filt.first().m_rows == 64 and filt.first().n_items == 2
+    after = ck.cuckoo_delete(filt, twins, n_buckets=1).persist()
+    assert ck.cuckoo_maybe_seen(twins, after, n_buckets=1).count() == 0
+    assert after.first().n_items == 0
+    filt.unpersist()
+    after.unpersist()
+
+
+def test_delete_stash_twins_in_one_call():
+    """Same for two twin copies held in the stash: one stash entry is
+    removed per deleted item, not one per distinct key."""
+    m = 64
+    h = np.array([5 | (7 << 48), 5 | (7 << 48) | (1 << 20)],
+                 dtype=np.int64)
+    fp, i1, i2 = ck._fp_i1_i2(h, m)
+    assert fp[0] == fp[1] and i1[0] == i1[1]
+    table = np.zeros((m, ck.SLOTS), dtype=np.uint16)
+    stash = np.sort(ck._stash_key(i1, i2, fp))
+    t2, s2, n_del = ck._delete_from(table, stash, m, h)
+    assert n_del == 2 and len(s2) == 0
+    assert not ck._member(t2, s2, m, h).any()
+
+
 def test_stash_overflow_path(spark):
     """Force a table far above the cuckoo load limit: the build must
     still be lossless (overflow rides the stash), just bigger."""

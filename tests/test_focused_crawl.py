@@ -67,8 +67,7 @@ def _crawl(spark, tmp, site, **cfg_kw):
     cfg = CrawlConfig(generate_top_n=100, num_fetch_partitions=3,
                       **cfg_kw)
     run = CrawlRun(spark, str(tmp), cfg, site["pages"], site["robots"],
-                   site["http_status"], bloom_buckets=4,
-                   storage="parquet")
+                   site["http_status"], bloom_buckets=4, db_buckets=4)
     db = run.crawl(site["seeds"], rounds=2, start_ms=START)
     return cfg, db
 

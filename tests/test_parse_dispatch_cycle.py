@@ -99,7 +99,7 @@ def run_db(spark, tmp_path_factory, mixed):
                       signature_kind="text_md5")
     run = CrawlRun(spark, str(tmp), cfg, mixed["pages"],
                    mixed["robots"], mixed["http_status"],
-                   bloom_buckets=4, storage="parquet")
+                   bloom_buckets=4, db_buckets=4)
     db = run.crawl(mixed["seeds"], rounds=2, start_ms=START)
     return tmp, run, db
 

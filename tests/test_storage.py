@@ -108,12 +108,13 @@ def fixture(spark):
                        hot_host_pages=12)
 
 
-def _cycle_run(spark, tmp, fixture, storage):
+def _cycle_run(spark, tmp, fixture, rounds=2):
     cfg = CrawlConfig(generate_top_n=100, num_fetch_partitions=4)
     run = CrawlRun(spark, str(tmp), cfg, fixture["pages"],
                    fixture["robots"], fixture["http_status"],
-                   use_bloom=False, storage=storage, db_buckets=4)
-    run.crawl(fixture["seeds"], rounds=2, start_ms=START)
+                   seen_filter="none", db_buckets=4)
+    if rounds:
+        run.crawl(fixture["seeds"], rounds=rounds, start_ms=START)
     return run
 
 
@@ -122,11 +123,16 @@ def test_crawlrun_bucketed_updatedb_no_db_exchange(spark, tmp_path,
     """The round-2 VERDICT's top item: the SHIPPED cycle driver (not
     just the bench scripts) must persist the crawldb bucketed so the
     updatedb merge joins the frontier exchange-free. Compare the actual
-    round-2 updatedb plan under bucketed vs parquet storage: bucketed
-    reads the db side in place (Bucketed: true, one fewer Exchange) and
+    round-2 updatedb plan against the same round planned over a plain
+    parquet read of the same round-1 snapshot files: the bucketed read
+    takes the db side in place (Bucketed: true, fewer Exchanges) and
     both converge to the same crawldb."""
-    b = _cycle_run(spark, tmp_path / "b", fixture, "bucketed")
-    p = _cycle_run(spark, tmp_path / "p", fixture, "parquet")
+    b = _cycle_run(spark, tmp_path / "b", fixture)
+    p = _cycle_run(spark, tmp_path / "p", fixture, rounds=0)
+    schema = b.load_crawldb(1).schema
+    p.load_crawldb = lambda rnd: spark.read.schema(schema).parquet(
+        os.path.join(b.db_table.dir, f"s{rnd}"))
+    p.run_round(2, START + 2 * 86_400_000)
 
     plan_b = b.debug_plans["updatedb"]._jdf.queryExecution() \
         .executedPlan().toString()
@@ -141,7 +147,7 @@ def test_crawlrun_bucketed_updatedb_no_db_exchange(spark, tmp_path,
     rows_b = sorted((r.url, r.status, r.fetch_time, r.score)
                     for r in b.load_crawldb(2).collect())
     rows_p = sorted((r.url, r.status, r.fetch_time, r.score)
-                    for r in p.load_crawldb(2).collect())
+                    for r in p.db_table.read(2).collect())
     assert rows_b == rows_p
 
 
@@ -150,7 +156,7 @@ def test_crawlrun_bucketed_resume_and_time_travel(spark, tmp_path,
     """Snapshot semantics through the table API: resume counts only
     published snapshots; a prior round reads back via time-travel (the
     judge's 'resume test reading round N−1 through the table API')."""
-    run = _cycle_run(spark, tmp_path, fixture, "bucketed")
+    run = _cycle_run(spark, tmp_path, fixture)
     assert run.resume_round() == 2
     db1 = run.db_table.read(1)     # time-travel to round 1
     db2 = run.db_table.read(2)

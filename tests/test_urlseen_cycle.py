@@ -16,11 +16,11 @@ from nutch_spark.testdata import fixture_dfs
 START = 1_700_000_000_000
 
 
-def _run(spark, tmp, fixture, use_bloom, rounds=2):
+def _run(spark, tmp, fixture, seen_filter, rounds=2):
     cfg = CrawlConfig(generate_top_n=100, num_fetch_partitions=4)
     run = CrawlRun(spark, str(tmp), cfg, fixture["pages"],
                    fixture["robots"], fixture["http_status"],
-                   use_bloom=use_bloom, bloom_buckets=4, db_buckets=4)
+                   seen_filter=seen_filter, bloom_buckets=4, db_buckets=4)
     db = run.crawl(fixture["seeds"], rounds=rounds, start_ms=START)
     return run, db
 
@@ -28,8 +28,8 @@ def _run(spark, tmp, fixture, use_bloom, rounds=2):
 def test_bloom_split_preserves_crawldb(spark, tmp_path):
     fx = fixture_dfs(spark, n_hosts=8, pages_per_host=5,
                      hot_host_pages=12)
-    run_b, db_b = _run(spark, tmp_path / "bloom", fx, use_bloom=True)
-    run_n, db_n = _run(spark, tmp_path / "nobloom", fx, use_bloom=False)
+    run_b, db_b = _run(spark, tmp_path / "bloom", fx, seen_filter="bloom")
+    run_n, db_n = _run(spark, tmp_path / "nobloom", fx, seen_filter="none")
     rows_b = sorted((r.url, r.status, r.fetch_time, r.score, r.signature)
                     for r in db_b.collect())
     rows_n = sorted((r.url, r.status, r.fetch_time, r.score, r.signature)
@@ -46,7 +46,7 @@ def test_frontier_merge_sees_only_bloom_hits(spark, tmp_path):
     (bloom no-false-negative contract applied to real cycle data)."""
     fx = fixture_dfs(spark, n_hosts=8, pages_per_host=5,
                      hot_host_pages=12)
-    run, _ = _run(spark, tmp_path, fx, use_bloom=True)
+    run, _ = _run(spark, tmp_path, fx, seen_filter="bloom")
     new = run.debug_split["new"]
     maybe = run.debug_split["maybe"]
     prev_db = run.load_crawldb(run.resume_round() - 1)
@@ -75,6 +75,6 @@ def test_bloom_split_skipped_in_normalize_mode(spark, tmp_path):
                       db_update_normalize=True)
     run = CrawlRun(spark, str(tmp_path), cfg, fx["pages"],
                    fx["robots"], fx["http_status"],
-                   use_bloom=True, bloom_buckets=4, db_buckets=4)
+                   seen_filter="bloom", bloom_buckets=4, db_buckets=4)
     run.crawl(fx["seeds"], rounds=2, start_ms=START)
     assert not hasattr(run, "debug_split")
