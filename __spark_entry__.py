@@ -1420,14 +1420,15 @@ def q_cuckoo_seen(spark, sf):
     filters keyed by canonicalized-URL hash"; deletion sibling of the
     bloom layer, Fan et al. CoNEXT'14): discovered outlink targets
     not yet in the frontier, via cuckoo pre-prune + exact anti-join
-    (operators/cuckoo.py). The layer only prunes — the oracle's plain
-    anti-join is the exact same set."""
-    from nutch_spark.operators import cuckoo as ck
+    (operators/cuckoo.py kernels in the shared operators/urlseen.py
+    pipeline). The layer only prunes — the oracle's plain anti-join is
+    the exact same set."""
+    from nutch_spark.operators import cuckoo as ck, urlseen
     db = _crawldb(spark, sf)
     discovered = _edges(spark, sf, dedup=False).select(
         F.col("to_url").alias("url")).distinct()
     layer = ck.build_cuckoo(db.select("url"), n_buckets=16)
-    return ck.filter_unseen(discovered, db.select("url"), layer) \
+    return urlseen.filter_unseen(discovered, db.select("url"), layer) \
         .select("url")
 
 

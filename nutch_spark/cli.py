@@ -535,9 +535,9 @@ def cmd_startserver(args):
 
 
 def main(argv=None):
+    from .session import default_cores
     p = argparse.ArgumentParser(prog="nutch_spark")
-    p.add_argument("--cores", type=int,
-                   default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    p.add_argument("--cores", type=int, default=default_cores())
     sub = p.add_subparsers(dest="cmd", required=True)
 
     def add(name, fn, *, out_dir=True, tables=False):

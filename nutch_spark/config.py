@@ -33,7 +33,6 @@ class CrawlConfig:
     generate_normalise: bool = True
     crawl_gen_delay_ms: int = 7 * SECONDS_PER_DAY * 1000  # crawl.gen.delay
     generate_max_num_segments: int = 1
-    generate_update_crawldb: bool = False     # stamp _ngt_ back into crawldb
     # topN above this switches from TakeOrderedAndProject (one merge
     # task holds N rows) to distributed threshold selection (ours)
     generate_topn_distributed_min: int = 100_000
@@ -63,19 +62,6 @@ class CrawlConfig:
     # --- updatedb (CrawlDbReducer.java:51-58) ---
     db_fetch_retry_max: int = 3               # db.fetch.retry.max
     db_update_max_inlinks: int = 10000        # db.update.max.inlinks
-    # inlink-cap plan shape (ours, measured — BENCH.md r05 A/B):
-    # False (default) = window-sort the whole linked stream — ONE
-    # exchange+sort of a frame that is about to shuffle anyway.
-    # True = partial-agg count finds over-cap urls, window sorts only
-    # those. The hot-split looked right on paper (the 10k cap almost
-    # never binds) but references the linked stream THREE times
-    # (count + join + anti-join); when that stream is not materialized
-    # — the hand-wired cycle, any caller composing updatedb directly —
-    # each reference re-executes the parse/fetch subtree, and the
-    # interleaved A/B measured 24.3 s vs 11.6 s min-of-3 on the bench
-    # cycle (this was r04's "unexplained" crawl_cycle regression;
-    # crawlrun_cycle, which persists messages, stayed flat).
-    inlink_cap_hot_split: bool = False
     db_update_additions_allowed: bool = True  # db.update.additions.allowed
     db_update_purge_404: bool = False         # db.update.purge.404
     db_update_normalize: bool = False         # crawldb.url.normalizers
@@ -176,7 +162,6 @@ class CrawlConfig:
 
     # --- partitioning / scale knobs (ours) ---
     num_fetch_partitions: int = 32            # politeness units per round
-    shuffle_partitions: int = 32
     partition_seed: int = 0                   # salt for host partitioning
     # storage level for the within-round fetch/parse intermediates:
     # MEMORY_AND_DISK for small rounds, DISK_ONLY to keep html off the

@@ -57,6 +57,9 @@ from .operators import urlseen
 from . import schema as S
 from .storage import SnapshotTable, partition_lineage
 
+# the virtual clock's advance per round, from the pinned epoch
+ROUND_MS = 24 * 3600 * 1000
+
 
 def _lineage_rows(lineage: list[dict]) -> int | None:
     """Total rows from footer lineage, or None when any footer was
@@ -274,14 +277,6 @@ class CrawlRun:
         self._write(layer, self._seen_dir, rnd,
                     n_buckets=self.bloom_buckets)
 
-    def _split_seen(self, linked: DataFrame, layer: DataFrame,
-                    n_buckets: int | None
-                    ) -> tuple[DataFrame, DataFrame]:
-        """(definitely_new, maybe_seen) via the active seen layer."""
-        if self.seen_filter == "cuckoo":
-            return cuckoo_op.split_seen(linked, layer, n_buckets=n_buckets)
-        return urlseen.split_seen(linked, layer, n_buckets=n_buckets)
-
     def _release_messages(self) -> None:
         """Drop the blocks of the last round's message checkpoint."""
         if self._messages_rdd is not None:
@@ -415,8 +410,9 @@ class CrawlRun:
         if can_split:
             linked = messages.where(F.col("status") == S.STATUS_LINKED)
             others = messages.where(F.col("status") != S.STATUS_LINKED)
-            new_rows, maybe = self._split_seen(
-                linked, self._load_bloom(rnd - 1), seen.get("n_buckets"))
+            new_rows, maybe = urlseen.split_seen(
+                linked, self._load_bloom(rnd - 1),
+                n_buckets=seen.get("n_buckets"))
             self.debug_split = {"new": new_rows, "maybe": maybe}
             new_db = update_op.updatedb(db, others.unionByName(maybe),
                                         cfg, now_ms, fresh=new_rows)
@@ -565,7 +561,7 @@ class CrawlRun:
 
     def crawl(self, seeds: DataFrame, rounds: int,
               start_ms: int | None = None,
-              round_ms: int = 24 * 3600 * 1000) -> DataFrame:
+              round_ms: int = ROUND_MS) -> DataFrame:
         """Full crawl; virtual clock advances one ``round_ms`` per
         round so re-fetch scheduling behaves deterministically (the
         epoch persists in ``_crawl.json`` and survives resume)."""

@@ -1,9 +1,12 @@
-"""Distributed URL-seen set, cuckoo-filter variant: partitioned
-cuckoo tables + exact anti-join.
+"""Cuckoo-filter format of the URL-seen layer: the per-bucket table
+kernels and fingerprint deletion.
 
-Sibling of :mod:`nutch_spark.operators.urlseen` (the bloom layer) —
-the north rule names "partitioned bloom/cuckoo filters keyed by
-canonicalized-URL hash", and the cuckoo shape earns its place where
+The URL-seen pipeline — url hashing, bucket sizing, the cogrouped
+membership probe, ``split_seen`` and ``filter_unseen`` — is
+:mod:`nutch_spark.operators.urlseen`; it probes a cuckoo layer with
+:func:`row_member` whenever the layer rows carry a ``table`` column.
+The north rule names "partitioned bloom/cuckoo filters keyed by
+canonicalized-URL hash", and the cuckoo format earns its place where
 the bloom cannot follow: **deletion**. The reference's CleaningJob
 (``CleaningJob.java:39-199``) removes 404/gone documents from the
 index, and a frontier that purges ``db_gone`` urls (readdb -dump
@@ -12,11 +15,10 @@ layer; a bloom cannot unset bits, a cuckoo filter removes one stored
 fingerprint (Fan et al., "Cuckoo Filter: Practically Better Than
 Bloom", CoNEXT 2014 — public paper).
 
-Layout mirrors the bloom layer so callers swap freely:
-
-- urls → ``xxhash64(url)`` → coarse bucket = ``pmod(hash,
-  n_buckets)``; per coarse bucket ONE cuckoo table is built in one
-  Arrow batch (``applyInPandas``), one output row per bucket.
+- ``build_cuckoo``: urls → ``xxhash64(url)`` → coarse bucket =
+  ``pmod(hash, n_buckets)`` (the bloom layer's hashing); per coarse
+  bucket ONE cuckoo table is built in one Arrow batch
+  (``applyInPandas``), one output row per bucket.
 - Inside a table: ``m`` slot-buckets of ``SLOTS=4`` fingerprint
   slots (uint16 fp, 0 = empty). Candidate slot-buckets for an item
   are ``i1 = h mod m`` and ``i2 = (i1 XOR murmur(fp)) mod m`` — the
@@ -33,10 +35,8 @@ Layout mirrors the bloom layer so callers swap freely:
   (membership/delete consult it too). At the default 0.84 load the
   stash is a 1e-3-scale tail; semantics are identical to a kicked
   build (same membership superset, no false negatives).
-- Membership (``cuckoo_maybe_seen``) cogroups discovered urls with
-  the table on the coarse bucket — the table bytes ship to each task
-  exactly once, never replicated per row — and checks i1/i2 rows +
-  stash fully vectorized.
+- Membership (``row_member``) checks i1/i2 rows + stash fully
+  vectorized.
 - ``cuckoo_delete`` removes ONE stored fingerprint per distinct url
   (i1 row, else i2 row, else stash) and returns the updated table
   DataFrame. As in the paper, deleting a url that was never inserted
@@ -46,7 +46,7 @@ Layout mirrors the bloom layer so callers swap freely:
 
 Sizing: uint16 fingerprints at load 0.84 cost ~19 bits/url — ~24 GB
 for a 10^10-url frontier, split over ``n_buckets`` ~4 MB tables with
-constant per-task memory, the same scaling story as the bloom layer
+constant per-task memory under the bloom layer's sizing rule
 (100× the frontier = 100× the buckets). fpp ≈ 2·SLOTS/2^16 ≈ 0.012%,
 ~8× below the 10-bit bloom's ~1% at ~2× the bits.
 """
@@ -59,9 +59,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    BinaryType, IntegerType, LongType, StringType, StructField,
-    StructType,
+    BinaryType, IntegerType, LongType, StructField, StructType,
 )
+
+from .urlseen import _hash_cols, _layer_buckets, _sized_buckets
 
 CUCKOO_SCHEMA = StructType([
     StructField("bucket", IntegerType(), False),
@@ -74,17 +75,8 @@ CUCKOO_SCHEMA = StructType([
 
 SLOTS = 4
 _FP_MASK = np.uint64(0xFFFF)
-# one table's bytes stay under this by default (same target as bloom)
-_TARGET_BUCKET_BYTES = 4 << 20
 _LOAD = 0.84
 _ROUNDS = 24
-
-
-def _hash_cols(df: DataFrame, url_col: str, n_buckets: int) -> DataFrame:
-    h = F.xxhash64(F.col(url_col))
-    return (df.withColumn("_h64", h)
-              .withColumn("_bucket",
-                          F.pmod(h, F.lit(n_buckets)).cast("int")))
 
 
 def _fp_i1_i2(h64: np.ndarray, m: int):
@@ -149,14 +141,13 @@ def build_cuckoo(urls: DataFrame, url_col: str = "url",
                  load: float = _LOAD) -> DataFrame:
     """Per-coarse-bucket cuckoo filters over the url set; returns
     CUCKOO_SCHEMA rows (one per non-empty bucket). ``n_buckets=None``
-    sizes the bucket count from the url count so each table stays
-    ≤ ~4 MB: a table holds ~n/load uint16 fingerprints (2 bytes each,
-    whatever ``SLOTS`` is), and one more factor 2 leaves room for the
-    power-of-two rounding of its slot-bucket count."""
+    sizes the bucket count from the url count (the bloom layer's
+    rule, ``urlseen._sized_buckets``): a table holds ~n/load uint16
+    fingerprints (2 bytes each, whatever ``SLOTS`` is), and one more
+    factor 2 leaves room for the power-of-two rounding of its
+    slot-bucket count, so a url costs 2·2/load bytes."""
     if n_buckets is None:
-        n = urls.count()
-        n_buckets = max(64, math.ceil(
-            n / load * 2 * 2 / _TARGET_BUCKET_BYTES))
+        n_buckets = _sized_buckets(urls, 2 * 2 / load)
     nb = int(n_buckets)
     hashed = _hash_cols(urls.select(url_col), url_col, nb) \
         .select("_bucket", "_h64")
@@ -192,31 +183,10 @@ def _member(table, stash, m, h: np.ndarray) -> np.ndarray:
     return hit
 
 
-def cuckoo_maybe_seen(discovered: DataFrame, cuckoo: DataFrame,
-                      url_col: str = "url",
-                      n_buckets: int | None = None) -> DataFrame:
-    """Urls of ``discovered`` the cuckoo layer cannot rule out (true
-    seen + ~fpp false positives), one column ``url_col``. Cogrouped on
-    the coarse bucket — table bytes reach each task once, never per
-    row (same shape as the bloom layer's ``maybe_seen_urls``)."""
-    if n_buckets is None:
-        n_buckets = int(cuckoo.select(F.max("n_buckets")).first()[0])
-    hashed = _hash_cols(discovered.select(F.col(url_col).alias("_u")),
-                        "_u", n_buckets).select("_u", "_h64", "_bucket")
-    out_schema = StructType([StructField(url_col, StringType(), True)])
-    empty = pd.DataFrame({url_col: pd.Series([], dtype=object)})
-
-    def test(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return empty
-        table, stash, m = _load_np(right)
-        h = left["_h64"].to_numpy(dtype=np.int64)
-        hit = _member(table, stash, m, h)
-        return pd.DataFrame({url_col: left.loc[hit, "_u"].to_numpy()})
-
-    return (hashed.groupBy("_bucket")
-            .cogroup(cuckoo.groupBy("bucket"))
-            .applyInPandas(test, out_schema))
+def row_member(row: pd.DataFrame, h: np.ndarray) -> np.ndarray:
+    """Cuckoo kernel of ``urlseen.maybe_seen_urls``: which hashes ``h``
+    one bucket's table row may hold."""
+    return _member(*_load_np(row), h)
 
 
 def _delete_from(table: np.ndarray, stash: np.ndarray, m: int,
@@ -291,10 +261,9 @@ def cuckoo_delete(cuckoo: DataFrame, urls: DataFrame,
     ``n_buckets``: the layer's coarse bucket count when the caller
     knows it (a commit record); otherwise one job reads it from the
     layer."""
-    nb = n_buckets if n_buckets is not None else \
-        int(cuckoo.select(F.max("n_buckets")).first()[0])
     hashed = _hash_cols(urls.select(F.col(url_col).alias("_u"))
-                        .distinct(), "_u", nb) \
+                        .distinct(), "_u",
+                        _layer_buckets(cuckoo, n_buckets)) \
         .select("_h64", "_bucket")
 
     def drop(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
@@ -314,36 +283,3 @@ def cuckoo_delete(cuckoo: DataFrame, urls: DataFrame,
     return (hashed.groupBy("_bucket")
             .cogroup(cuckoo.groupBy("bucket"))
             .applyInPandas(drop, CUCKOO_SCHEMA))
-
-
-def split_seen(discovered: DataFrame, cuckoo: DataFrame,
-               url_col: str = "url",
-               n_buckets: int | None = None
-               ) -> tuple[DataFrame, DataFrame]:
-    """Partition discovered urls into (definitely_new, maybe_seen) —
-    the bloom layer's ``split_seen`` contract, cuckoo-backed, so
-    :class:`~nutch_spark.crawl.CrawlRun` swaps layers freely."""
-    maybe_urls = cuckoo_maybe_seen(discovered, cuckoo, url_col,
-                                   n_buckets)
-    new = discovered.join(maybe_urls, url_col, "left_anti")
-    maybe = discovered.join(maybe_urls, url_col, "left_semi")
-    return new, maybe
-
-
-def filter_unseen(discovered: DataFrame, frontier_urls: DataFrame,
-                  cuckoo: DataFrame | None, url_col: str = "url",
-                  n_buckets: int | None = None) -> DataFrame:
-    """Exact unseen-filter with cuckoo pre-pruning — drop-in for
-    :func:`nutch_spark.operators.urlseen.filter_unseen`: rows of
-    ``discovered`` whose url is NOT in the frontier. Only cuckoo hits
-    (true seen + ~0.012% fp) reach the exact semi-join against the
-    10^10-row frontier; correctness stays exact, the filter only
-    prunes."""
-    if cuckoo is None:
-        return discovered.join(frontier_urls.select(url_col), url_col,
-                               "left_anti")
-    maybe_urls = cuckoo_maybe_seen(discovered, cuckoo, url_col,
-                                   n_buckets)
-    actually_seen = maybe_urls.join(frontier_urls.select(url_col),
-                                    url_col, "left_semi")
-    return discovered.join(actually_seen, url_col, "left_anti")

@@ -69,28 +69,8 @@ def _kind_capped(messages: DataFrame, cfg: CrawlConfig) -> DataFrame:
     w = Window.partitionBy("url").orderBy(
         F.desc("score"), F.desc("fetch_time"),
         F.asc("modified_time"), F.asc_nulls_last("signature"))
-    if cfg.inlink_cap_hot_split:
-        # NON-default (measured slower, see config.py): a
-        # partial-agg count finds the over-cap urls (at most
-        # total/cap — broadcastable), the window sorts only their
-        # rows. Saves the full-width sort but references the
-        # linked stream 3× — when the stream is not materialized,
-        # each reference re-executes the parse/fetch subtree, and
-        # the interleaved A/B measured this 2× SLOWER on the bench
-        # cycle (24.3 vs 11.6 s). Only consider when the input is
-        # persisted AND the sort dominates profile.
-        hot = F.broadcast(
-            linked.groupBy("url").agg(F.count("*").alias("_n"))
-                  .where(F.col("_n") > cap).select("url"))
-        capped = (linked.join(hot, "url")
-                  .withColumn("_rn", F.row_number().over(w))
-                  .where(F.col("_rn") <= cap)
-                  .drop("_rn"))
-        linked = linked.join(hot, "url", "left_anti") \
-            .unionByName(capped)
-    else:
-        linked = (linked.withColumn("_rn", F.row_number().over(w))
-                  .where(F.col("_rn") <= cap).drop("_rn"))
+    linked = (linked.withColumn("_rn", F.row_number().over(w))
+              .where(F.col("_rn") <= cap).drop("_rn"))
     return others.unionByName(linked)
 
 

@@ -1,34 +1,42 @@
-"""Distributed URL-seen set: partitioned bloom filters + exact anti-join.
+"""Distributed URL-seen set: partitioned bloom or cuckoo filters +
+exact anti-join.
 
 The reference's URL-seen set is the CrawlDb itself — every updatedb
 round reduces discovered outlinks against the full db by url key
 (CrawlDbReducer co-group). At 10^10 frontier URLs, shuffling every
 discovered outlink against the whole frontier is the dominant cost, so
-the north rule adds a **partitioned bloom layer keyed by
-canonicalized-URL hash**:
+the north rule adds a **partitioned filter layer keyed by
+canonicalized-URL hash**. This module is that layer's one pipeline;
+the two filter formats differ only in their per-bucket numpy kernel:
 
 - ``build_bloom``: frontier urls → ``xxhash64(url)`` → bucket =
   ``pmod(hash, n_buckets)``; per bucket a bloom bitset is built in one
   Arrow batch (``applyInPandas``, vectorized numpy double-hashing:
   index_i = (h1 + i·h2) mod m). One row per bucket:
   ``(bucket, bits binary, n_items, n_hashes, m_bits)``.
-- ``split_seen``: discovered urls are bucketed the same way and
-  **cogrouped** with the bloom table on bucket
+  :func:`nutch_spark.operators.cuckoo.build_cuckoo` builds the
+  deletable format over the same hashing and buckets, one
+  ``(bucket, table, stash, …)`` row per bucket.
+- ``split_seen`` / ``filter_unseen``: discovered urls are bucketed the
+  same way and **cogrouped** with the layer on bucket
   (``groupBy(bucket).cogroup(...).applyInPandas``): each task sees a
-  bucket's bitset exactly ONCE next to all of that bucket's discovered
+  bucket's filter exactly ONCE next to all of that bucket's discovered
   urls — never replicated per row (a plain join would copy the
-  ~MB bitset into every joined row before the UDF). Bloom misses are
-  *definitely new* and skip the exact join entirely; bloom hits (incl.
-  false positives at ~fpp) go through the exact ``left_anti`` join
-  against the frontier. Correctness stays exact — the bloom only
-  prunes.
+  ~MB filter into every joined row before the UDF). The membership
+  kernel follows the layer frame's columns (``bits`` → bloom,
+  ``table`` → cuckoo), known from its schema without a job. Filter
+  misses are *definitely new* and skip the exact join entirely; hits
+  (incl. false positives at ~fpp) go through the exact ``left_anti``
+  join against the frontier. Correctness stays exact — the filter
+  only prunes.
 
-Blooms are rebuilt (or incrementally OR-ed) per round and persisted
-alongside the crawldb snapshot; at 10^10 urls with 10 bits/url the
-layer is ~12 GB total. ``n_buckets`` defaults to scaling with the url
-count so one bucket's bitset stays ≤ ~4 MB (12 GB total → ~3000
-buckets), and the chosen value is carried in the bloom table itself so
-readers always bucket consistently.
+Layers are rebuilt per round (or, for cuckoo, edited by deletion) and
+persisted alongside the crawldb snapshot; at 10^10 urls with 10
+bits/url the bloom layer is ~12 GB total. ``n_buckets=None`` sizes
+the bucket count from the url count and the kernel's per-url bytes so
+one bucket's filter stays ≤ ~4 MB (12 GB total → ~3000 buckets), and
+the chosen value is carried in the layer rows themselves so readers
+always bucket consistently.
 """
 
 from __future__ import annotations
@@ -52,10 +60,9 @@ BLOOM_SCHEMA = StructType([
     StructField("n_buckets", IntegerType(), False),
 ])
 
-# one bucket's bitset stays under this many bytes by default
+# one bucket's filter (bloom bitset or cuckoo table) stays under this
+# many bytes when the bucket count is sized from the url count
 _TARGET_BUCKET_BYTES = 4 << 20
-
-_MASK = (1 << 64) - 1
 
 
 def _hash_cols(df: DataFrame, url_col: str, n_buckets: int) -> DataFrame:
@@ -63,6 +70,24 @@ def _hash_cols(df: DataFrame, url_col: str, n_buckets: int) -> DataFrame:
     return (df.withColumn("_h64", h)
               .withColumn("_bucket",
                           F.pmod(h, F.lit(n_buckets)).cast("int")))
+
+
+def _sized_buckets(urls: DataFrame, bytes_per_url: float) -> int:
+    """Bucket count for ``n_buckets=None``: one job counts the urls,
+    and each bucket's filter gets about ``_TARGET_BUCKET_BYTES`` at the
+    kernel's per-url byte cost (never fewer than 64 buckets), so a
+    frontier 100× larger gets 100× more buckets and per-task memory
+    stays constant."""
+    n = urls.count()
+    return max(64, math.ceil(n * bytes_per_url / _TARGET_BUCKET_BYTES))
+
+
+def _layer_buckets(layer: DataFrame, n_buckets: int | None) -> int:
+    """The layer's bucket count: ``n_buckets`` when the caller knows it
+    (a commit record), else one job reads it from the layer rows."""
+    if n_buckets is None:
+        n_buckets = layer.select(F.max("n_buckets")).first()[0]
+    return int(n_buckets)
 
 
 def _indices(h64: np.ndarray, k: int, m: int) -> np.ndarray:
@@ -79,13 +104,10 @@ def build_bloom(urls: DataFrame, url_col: str = "url",
                 min_bits: int = 1 << 12) -> DataFrame:
     """Per-bucket bloom filters over the url set. Returns BLOOM_SCHEMA
     rows (one per non-empty bucket). ``n_buckets=None`` sizes the
-    bucket count from the url count so each bucket's bitset stays
-    ≤ ~4 MB (a frontier 100× larger simply gets 100× more buckets —
-    per-task memory is constant)."""
+    bucket count from the url count at ``bits_per_item / 8`` bytes per
+    url (:func:`_sized_buckets`)."""
     if n_buckets is None:
-        n = urls.count()
-        n_buckets = max(64, math.ceil(
-            n * bits_per_item / 8 / _TARGET_BUCKET_BYTES))
+        n_buckets = _sized_buckets(urls, bits_per_item / 8)
     k = max(1, int(round(bits_per_item * math.log(2))))  # optimal k
     hashed = _hash_cols(urls.select(url_col), url_col, n_buckets) \
         .select("_bucket", "_h64")
@@ -108,18 +130,35 @@ def build_bloom(urls: DataFrame, url_col: str = "url",
     return hashed.groupBy("_bucket").applyInPandas(make, BLOOM_SCHEMA)
 
 
-def maybe_seen_urls(discovered: DataFrame, bloom: DataFrame,
+def _bloom_member(row: pd.DataFrame, h: np.ndarray) -> np.ndarray:
+    """Bloom kernel: which hashes ``h`` one bucket's bitset row may
+    hold."""
+    arr = np.frombuffer(row["bits"].iloc[0], dtype=np.uint8)
+    k = int(row["n_hashes"].iloc[0])
+    idx = _indices(h, k, int(row["m_bits"].iloc[0]))
+    hit = np.ones(len(h), dtype=bool)
+    for j in range(k):
+        hit &= (arr[idx[j] >> 3] >> (idx[j] & 7) & 1).astype(bool)
+    return hit
+
+
+def maybe_seen_urls(discovered: DataFrame, layer: DataFrame,
                     url_col: str = "url",
                     n_buckets: int | None = None) -> DataFrame:
-    """Urls of ``discovered`` the bloom layer cannot rule out
-    (true seen + ~fpp false positives), one column ``url_col``.
+    """Urls of ``discovered`` the layer (bloom or cuckoo rows) cannot
+    rule out (true seen + ~fpp false positives), one column
+    ``url_col``.
 
     Cogrouped on bucket: the task for a bucket receives that bucket's
-    bitset exactly once beside its urls — bitsets are never replicated
+    filter exactly once beside its urls — filters are never replicated
     per discovered row (the round-1 join shape copied each ~MB bitset
     into every joined row before the membership UDF)."""
-    if n_buckets is None:
-        n_buckets = int(bloom.select(F.max("n_buckets")).first()[0])
+    if "table" in layer.columns:
+        # imported here: cuckoo.py imports this module at load
+        from .cuckoo import row_member as member
+    else:
+        member = _bloom_member
+    n_buckets = _layer_buckets(layer, n_buckets)
 
     hashed = _hash_cols(discovered.select(F.col(url_col).alias("_u")),
                         "_u", n_buckets).select("_u", "_h64", "_bucket")
@@ -129,48 +168,41 @@ def maybe_seen_urls(discovered: DataFrame, bloom: DataFrame,
     def test(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if left.empty or right.empty:
             return empty
-        arr = np.frombuffer(right["bits"].iloc[0], dtype=np.uint8)
-        k = int(right["n_hashes"].iloc[0])
-        m = int(right["m_bits"].iloc[0])
-        h = left["_h64"].to_numpy(dtype=np.int64)
-        idx = _indices(h, k, m)
-        hit = np.ones(len(h), dtype=bool)
-        for j in range(k):
-            hit &= (arr[idx[j] >> 3] >> (idx[j] & 7) & 1).astype(bool)
+        hit = member(right, left["_h64"].to_numpy(dtype=np.int64))
         return pd.DataFrame({url_col: left.loc[hit, "_u"].to_numpy()})
 
     return (hashed.groupBy("_bucket")
-            .cogroup(bloom.groupBy("bucket"))
+            .cogroup(layer.groupBy("bucket"))
             .applyInPandas(test, out_schema))
 
 
-def split_seen(discovered: DataFrame, bloom: DataFrame,
+def split_seen(discovered: DataFrame, layer: DataFrame,
                url_col: str = "url",
                n_buckets: int | None = None
                ) -> tuple[DataFrame, DataFrame]:
     """Partition discovered urls into (definitely_new, maybe_seen) via
-    the bloom layer. ``maybe_seen`` still needs the exact anti-join;
+    the layer. ``maybe_seen`` still needs the exact anti-join;
     ``definitely_new`` does not."""
-    maybe_urls = maybe_seen_urls(discovered, bloom, url_col, n_buckets)
+    maybe_urls = maybe_seen_urls(discovered, layer, url_col, n_buckets)
     new = discovered.join(maybe_urls, url_col, "left_anti")
     maybe = discovered.join(maybe_urls, url_col, "left_semi")
     return new, maybe
 
 
 def filter_unseen(discovered: DataFrame, frontier_urls: DataFrame,
-                  bloom: DataFrame | None, url_col: str = "url",
+                  layer: DataFrame | None, url_col: str = "url",
                   n_buckets: int | None = None) -> DataFrame:
-    """Exact unseen-filter with bloom pre-pruning: rows of
+    """Exact unseen-filter with filter pre-pruning: rows of
     ``discovered`` whose url is NOT in the frontier. The exact check
-    against the frontier runs only over bloom hits: the maybe-seen url
+    against the frontier runs only over layer hits: the maybe-seen url
     set (tiny — true dups + ~fpp of new) is first confirmed against
     the frontier, then anti-joined back; the 10¹⁰-row frontier is
     touched only by the slim semi-join side, which Iceberg url-hash
     bucketing turns into a storage-partitioned join."""
-    if bloom is None:
+    if layer is None:
         return discovered.join(frontier_urls.select(url_col), url_col,
                                "left_anti")
-    maybe_urls = maybe_seen_urls(discovered, bloom, url_col, n_buckets)
+    maybe_urls = maybe_seen_urls(discovered, layer, url_col, n_buckets)
     actually_seen = maybe_urls.join(frontier_urls.select(url_col),
                                     url_col, "left_semi")
     return discovered.join(actually_seen, url_col, "left_anti")

@@ -184,20 +184,25 @@ class NutchService:
         return job.info()
 
     def _execute(self, job: _Job, cid: str, args: dict):
+        from .crawl import ROUND_MS
         run = self._run_for(job.crawl_id, cid)
-        now = self.start_ms if self.start_ms is not None \
-            else int(time.time() * 1000)
+        # INJECT and ROUND run on the crawl's pinned epoch
+        # (_crawl.json), as CrawlRun.crawl does: a crawl continued here,
+        # by the CLI or after a server restart stays on one clock, and
+        # ``start_ms`` only pins the epoch of a new crawl
         if job.type == "INJECT":
             seed_path = args["url_dir"]    # JobConfig args, as reference
             seeds = self.spark.read.text(seed_path) \
                 .withColumnRenamed("value", "line")
             with self._crawl_lock(job.crawl_id):
-                db = run.inject(seeds, now)
+                db = run.inject(seeds,
+                                run._load_or_pin_start(self.start_ms))
                 return {"crawldb_rows": db.count()}
         if job.type == "ROUND":
             with self._crawl_lock(job.crawl_id):
                 rnd = run.resume_round() + 1
-                stats = run.run_round(rnd, now + rnd * 24 * 3600 * 1000)
+                now = run._load_or_pin_start(self.start_ms)
+                stats = run.run_round(rnd, now + rnd * ROUND_MS)
             return {"round": rnd, **{k: v for k, v in stats.items()
                                      if isinstance(v, (int, float))}}
         if job.type == "INDEX":

@@ -8,8 +8,9 @@ continuous discovery instead of round boundaries:
 - ``stream_discovered``: ``readStream`` over a segments directory
   (each fetch round drops crawl_parse parquet there), watermarked
   dedup of discovered URLs, then ``foreachBatch`` merges each
-  micro-batch into the crawldb with the SAME batch updatedb operator —
-  one code path for both execution modes.
+  micro-batch into the crawldb with the SAME batch updatedb operator and
+  commits it as a crawldb snapshot — one code path and one crawldb
+  layout for both execution modes.
 - ``stream_fetch_metrics``: windowed per-status counts with a
   watermark for late fetch records (the streaming analog of
   ``fetch_metrics``).
@@ -18,8 +19,8 @@ Micro-batch + foreachBatch is the right shape here because the
 updatedb merge is a full-outer co-group keyed by url — exactly what
 Spark's streaming joins can't express incrementally without keeping
 the whole frontier in state; delegating to the batch operator per
-micro-batch keeps the state in the table (Iceberg snapshot / parquet
-round dir), not the stream.
+micro-batch keeps the state in the table (a crawldb snapshot), not the
+stream.
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import CrawlConfig
 from ..operators import updatedb as update_op
+from ..storage import SnapshotTable
 from .. import schema as S
 
 
@@ -54,26 +56,25 @@ def run_frontier_stream(spark: SparkSession, segments_dir: str,
 
     Each micro-batch applies the batch updatedb (state machine +
     OPIC accumulation) against the current crawldb snapshot and
-    atomically replaces it — same semantics as a batch round, driven
-    by file arrival instead of the cycle driver."""
+    commits the result as the next snapshot of the crawldb's
+    :class:`~nutch_spark.storage.SnapshotTable` (the layout
+    ``CrawlRun`` writes): a crash mid-batch leaves the previous
+    snapshot current. Snapshots older than the last two expire."""
     import os
+    import time
 
     discovered = stream_discovered(spark, segments_dir)
 
     def merge(batch: DataFrame, batch_id: int) -> None:
-        sp = batch.sparkSession
-        db = None
-        if os.path.isdir(crawldb_path) and any(
-                f.endswith(".parquet")
-                for _, _, fs in os.walk(crawldb_path) for f in fs):
-            db = sp.read.parquet(crawldb_path)
-        import time as _t
+        table = SnapshotTable(batch.sparkSession,
+                              os.path.dirname(crawldb_path),
+                              os.path.basename(crawldb_path), sort=False)
+        cur = table.current_id()
+        db = None if cur is None else table.read(cur)
         new_db = update_op.updatedb(db, batch, cfg,
-                                    int(_t.time() * 1000))
-        tmp = crawldb_path + f".batch{batch_id}"
-        new_db.write.mode("overwrite").parquet(tmp)
-        final = sp.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(crawldb_path)
+                                    int(time.time() * 1000))
+        table.commit(new_db, 0 if cur is None else cur + 1)
+        table.expire_snapshots(keep_last=2)
 
     writer = (discovered.writeStream
               .outputMode("append")

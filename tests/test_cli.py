@@ -40,6 +40,26 @@ def _main(monkeypatch, spark, argv):
     cli.main(START_ARGS + argv)
 
 
+def test_cores_default_follows_affinity_mask(monkeypatch, tmp_path):
+    """Without --cores or SPARK_GRAFT_CPUS, the session is sized from
+    the CPUs this process may run on (session.default_cores), not a
+    fixed 8."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1, 2},
+                        raising=False)
+
+    class Sized(Exception):
+        pass
+
+    def spark_for(args):
+        raise Sized(args.cores)
+
+    monkeypatch.setattr(cli, "_spark", spark_for)
+    with pytest.raises(Sized) as e:
+        cli.main(["readdb", str(tmp_path), "--stats"])
+    assert e.value.args == (3,)
+
+
 def _out(capsys):
     lines = [ln for ln in capsys.readouterr().out.splitlines()
              if ln.strip()]

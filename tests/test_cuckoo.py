@@ -29,7 +29,7 @@ def test_no_false_negatives(spark):
     half of the contract)."""
     urls = _urls(spark, 5000)
     filt = ck.build_cuckoo(urls, n_buckets=8)
-    hits = ck.cuckoo_maybe_seen(urls, filt)
+    hits = urlseen.maybe_seen_urls(urls, filt)
     assert hits.distinct().count() == 5000
 
 
@@ -40,7 +40,7 @@ def test_false_positive_rate_bounded(spark):
     members = _urls(spark, 20000)
     others = _urls(spark, 20000, prefix="http://other%d.test/q%d")
     filt = ck.build_cuckoo(members, n_buckets=8)
-    fp = ck.cuckoo_maybe_seen(others, filt).count()
+    fp = urlseen.maybe_seen_urls(others, filt).count()
     assert fp / 20000 < 0.01
 
 
@@ -52,7 +52,7 @@ def test_filter_unseen_exact_vs_plain_antijoin(spark):
         _urls(spark, 700, prefix="http://new%d.test/n%d"))
     filt = ck.build_cuckoo(frontier, n_buckets=8)
     got = sorted(r.url for r in
-                 ck.filter_unseen(discovered, frontier, filt).collect())
+                 urlseen.filter_unseen(discovered, frontier, filt).collect())
     want = sorted(r.url for r in discovered.join(
         frontier, "url", "left_anti").collect())
     assert got == want
@@ -69,10 +69,10 @@ def test_delete_then_unseen(spark):
     after = ck.cuckoo_delete(filt, gone)
     # survivors all still present (deletion touched only its targets)
     keep = urls.join(gone, "url", "left_anti")
-    assert ck.cuckoo_maybe_seen(keep, after).distinct().count() \
+    assert urlseen.maybe_seen_urls(keep, after).distinct().count() \
         == 4000 - n_gone
     # the deleted set now mostly misses (residual hits = fp rate only)
-    still = ck.cuckoo_maybe_seen(gone, after).count()
+    still = urlseen.maybe_seen_urls(gone, after).count()
     assert still / n_gone < 0.01
 
 
@@ -84,7 +84,7 @@ def test_delete_missing_url_is_noop_for_strangers(spark):
     strangers = _urls(spark, 2000, prefix="http://sx%d.test/z%d")
     filt = ck.build_cuckoo(urls, n_buckets=4)
     after = ck.cuckoo_delete(filt, strangers)
-    n = ck.cuckoo_maybe_seen(urls, after).distinct().count()
+    n = urlseen.maybe_seen_urls(urls, after).distinct().count()
     # collisions can evict a tiny number of residents; bound it
     assert n >= 2000 * 0.99
 
@@ -112,7 +112,7 @@ def test_delete_twins_in_one_call(spark):
     filt = ck.build_cuckoo(twins, n_buckets=1).persist()
     assert filt.first().m_rows == 64 and filt.first().n_items == 2
     after = ck.cuckoo_delete(filt, twins, n_buckets=1).persist()
-    assert ck.cuckoo_maybe_seen(twins, after, n_buckets=1).count() == 0
+    assert urlseen.maybe_seen_urls(twins, after, n_buckets=1).count() == 0
     assert after.first().n_items == 0
     filt.unpersist()
     after.unpersist()
@@ -153,7 +153,7 @@ def test_build_sizing_scales_bucket_count(spark):
     rows = filt.collect()
     assert {r.n_buckets for r in rows} == {64}
     for r in rows:
-        assert len(r.table) <= ck._TARGET_BUCKET_BYTES
+        assert len(r.table) <= urlseen._TARGET_BUCKET_BYTES
 
 
 def test_sized_build_tables_near_byte_target(spark, monkeypatch):
@@ -162,7 +162,7 @@ def test_sized_build_tables_near_byte_target(spark, monkeypatch):
     floor; tables hold ~n/load 2-byte fingerprints whatever SLOTS is,
     so a SLOTS factor in the sizing would leave them ~4x too small."""
     target = 4096
-    monkeypatch.setattr(ck, "_TARGET_BUCKET_BYTES", target)
+    monkeypatch.setattr(urlseen, "_TARGET_BUCKET_BYTES", target)
     rows = ck.build_cuckoo(_urls(spark, 100_000), n_buckets=None).collect()
     assert len(rows) > 64
     for r in rows:
@@ -179,7 +179,7 @@ def test_parity_with_bloom_layer(spark):
     c = ck.build_cuckoo(frontier, n_buckets=8)
     via_bloom = sorted(r.url for r in urlseen.filter_unseen(
         disc, frontier, b).collect())
-    via_cuckoo = sorted(r.url for r in ck.filter_unseen(
+    via_cuckoo = sorted(r.url for r in urlseen.filter_unseen(
         disc, frontier, c).collect())
     assert via_bloom == via_cuckoo
 

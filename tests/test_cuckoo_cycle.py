@@ -12,7 +12,7 @@ import pyspark.sql.functions as F
 from nutch_spark import schema as S
 from nutch_spark.config import CrawlConfig
 from nutch_spark.crawl import CrawlRun
-from nutch_spark.operators import cuckoo as ck
+from nutch_spark.operators.urlseen import maybe_seen_urls
 from nutch_spark.testdata import fixture_dfs
 
 START = 1_700_000_000_000
@@ -70,11 +70,11 @@ def test_purge_gone_deletes_from_cuckoo_layer(spark, tmp_path):
     # the layer for the purged round no longer claims the gone urls
     layer = run._load_bloom(rnd + 1)
     assert layer is not None
-    still = ck.cuckoo_maybe_seen(gone, layer).count()
+    still = maybe_seen_urls(gone, layer).count()
     assert still <= max(1, int(0.01 * n_gone))
     # survivors remain present (no collateral deletion)
     keep = new_db.select("url")
-    seen = ck.cuckoo_maybe_seen(keep, layer).distinct().count()
+    seen = maybe_seen_urls(keep, layer).distinct().count()
     assert seen == new_db.count()
 
 

@@ -2,7 +2,7 @@
 
 Each test pins a behavior whose round-1 shape broke at 100×: LinkDb
 capping after collect, driver-side generate topN, SimHash blocking
-recall, bloom bitset row-replication, vectorized url-hash parity.
+recall, seen-filter row-replication, vectorized url-hash parity.
 """
 
 import random
@@ -15,6 +15,7 @@ import pytest
 from nutch_spark.config import CrawlConfig
 from nutch_spark.functions.urls import _url_hash31_series, url_hash31
 from nutch_spark.operators import dedup_text, generate as gen_op, linkdb
+from nutch_spark.operators.cuckoo import build_cuckoo
 from nutch_spark.operators.urlseen import build_bloom, maybe_seen_urls
 
 
@@ -174,14 +175,17 @@ def test_hot_bucket_cap_noop_when_large(spark):
 
 # --- URL-seen: cogroup shape, no per-row bitset replication -------------
 
-def test_bloom_membership_is_cogrouped(spark):
+@pytest.mark.parametrize("build", [build_bloom, build_cuckoo],
+                         ids=["bloom", "cuckoo"])
+def test_seen_membership_is_cogrouped(spark, build):
+    """One probe plan for both layer kinds; only the kernel differs."""
     urls = spark.createDataFrame(
         [(f"http://h.test/p{i}",) for i in range(100)], "url string")
-    bloom = build_bloom(urls, n_buckets=4)
-    maybe = maybe_seen_urls(urls, bloom, n_buckets=4)
+    layer = build(urls, n_buckets=4)
+    maybe = maybe_seen_urls(urls, layer, n_buckets=4)
     plan = maybe._jdf.queryExecution().executedPlan().toString()
-    # the membership test must be a cogroup (bitset once per group),
-    # not a join that replicates the bitset into every row
+    # the membership test must be a cogroup (filter once per group),
+    # not a join that replicates the filter into every row
     assert "FlatMapCoGroupsInPandas" in plan
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
     assert maybe.count() == 100

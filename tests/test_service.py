@@ -194,3 +194,32 @@ def test_purge_job(server):
     assert res["purged_rows"] == n_gone
     after = run.load_crawldb(res["round"])
     assert after.where("status = 'db_gone'").count() == 0
+
+
+def test_round_job_runs_on_the_crawls_pinned_clock(spark, tmp_path):
+    """A ROUND job continues a crawl on its pinned epoch (_crawl.json),
+    whoever started it: here a CLI-style ``CrawlRun.crawl`` pins
+    START, and a server without its own ``start_ms`` runs round 2 at
+    START + 2 days, exactly as ``crawl(rounds=2)`` would."""
+    from nutch_spark.config import CrawlConfig
+    from nutch_spark.crawl import CrawlRun
+    fx = fixture_dfs(spark, n_hosts=6, pages_per_host=4,
+                     hot_host_pages=8)
+    CrawlRun(spark, str(tmp_path / "crawls" / "pinned"), CrawlConfig(),
+             fx["pages"], fx["robots"], fx["http_status"]
+             ).crawl(fx["seeds"], rounds=1, start_ms=START)
+    svc = NutchService(spark, str(tmp_path), fx["pages"], fx["robots"],
+                       fx["http_status"], start_ms=None)
+    job_id = svc.job_create("pinned", "ROUND", "default", {})["id"]
+    t0 = time.time()
+    while svc.jobs[job_id].state in ("IDLE", "RUNNING"):
+        assert time.time() - t0 < 300, "ROUND job timed out"
+        time.sleep(0.5)
+    info = svc.jobs[job_id].info()
+    assert info["state"] == "FINISHED", info["msg"]
+    assert info["result"]["round"] == 2
+    gen = spark.read.parquet(str(tmp_path / "crawls" / "pinned" / "segments"
+                                 / "crawl_generate" / "round=2"))
+    stamps = {int(r.t) for r in gen.select(
+        gen.metadata["_ngt_"].alias("t")).collect()}
+    assert stamps == {START + 2 * 24 * 3600 * 1000}

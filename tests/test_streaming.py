@@ -9,9 +9,14 @@ import pyspark.sql.functions as F
 import pytest
 
 from nutch_spark.config import CrawlConfig
+from nutch_spark.storage import SnapshotTable
 from nutch_spark.streaming.frontier import (run_frontier_stream,
                                             stream_fetch_metrics,
                                             stream_first_seen)
+
+_SEG_SCHEMA = ("url string, status string, fetch_time long, retries int, "
+               "fetch_interval int, score double, signature string, "
+               "modified_time long, metadata map<string,string>")
 
 
 @pytest.fixture()
@@ -26,26 +31,44 @@ def segment_rows(spark, tmp_path):
         ("http://s.test/p0", "fetch_success", 2_000_000, 0, 3600,
          1.0, "aa" * 16, 0, None),
     ]
-    df = spark.createDataFrame(
-        rows,
-        "url string, status string, fetch_time long, retries int, "
-        "fetch_interval int, score double, signature string, "
-        "modified_time long, metadata map<string,string>")
+    df = spark.createDataFrame(rows, _SEG_SCHEMA)
     df.coalesce(1).write.parquet(str(seg_dir / "batch0"))
     return str(seg_dir / "batch0")
 
 
 def test_frontier_stream_matches_batch(spark, tmp_path, segment_rows):
+    """Each micro-batch commits one crawldb snapshot (the SnapshotTable
+    layout CrawlRun writes): no per-batch scratch dirs are left behind,
+    and snapshots beyond the last two expire."""
     cfg = CrawlConfig()
     db_path = str(tmp_path / "crawldb")
-    q = run_frontier_stream(spark, segment_rows, db_path, cfg,
-                            str(tmp_path / "ckpt"), trigger_once=True)
-    q.awaitTermination(120)
-    out = spark.read.parquet(db_path)
+
+    def run_once():
+        q = run_frontier_stream(spark, segment_rows, db_path, cfg,
+                                str(tmp_path / "ckpt"), trigger_once=True)
+        q.awaitTermination(120)
+        return SnapshotTable(spark, str(tmp_path), "crawldb").read()
+
+    out = run_once()
     statuses = {r.url: r.status for r in out.collect()}
     assert statuses["http://s.test/p0"] == "db_fetched"
     assert statuses["http://s.test/p5"] == "db_unfetched"
     assert out.count() == 20
+
+    # two more availableNow runs over newly arrived segment files
+    for i, url in ((1, "http://s.test/p1"), (2, "http://s.test/new")):
+        spark.createDataFrame(
+            [(url, "fetch_success", 3_000_000 + i, 0, 3600, 1.0,
+              "bb" * 16, 0, None)], _SEG_SCHEMA
+        ).coalesce(1).write.mode("append").parquet(segment_rows)
+        out = run_once()
+    statuses = {r.url: r.status for r in out.collect()}
+    assert statuses["http://s.test/p1"] == "db_fetched"
+    assert statuses["http://s.test/new"] == "db_fetched"
+    assert statuses["http://s.test/p5"] == "db_unfetched"
+    assert out.count() == 21
+    assert not glob.glob(str(tmp_path / "*.batch*"))
+    assert len(glob.glob(os.path.join(db_path, "s[0-9]*"))) <= 2
 
 
 def test_stream_first_seen_dedups_across_batches(spark, tmp_path):

@@ -302,20 +302,3 @@ def test_inlink_cap_binds_per_url(spark):
     assert out["http://hot.ex/"]["score"] == pytest.approx(0.9)
     assert out["http://cold.ex/"]["score"] == pytest.approx(0.25)
     assert out["http://hot.ex/"]["status"] == "db_unfetched"
-
-
-def test_inlink_cap_plan_shapes_agree(spark):
-    """Both cap plan shapes — the default whole-stream window and the
-    opt-in hot-split (cfg.inlink_cap_hot_split, measured slower on the
-    bench cycle, see config.py) — produce identical crawldbs."""
-    links_hot = [datum("http://hot.ex/", "linked", fetch_time=NOW,
-                       score=s) for s in (0.5, 0.4, 0.3, 0.2, 0.1)]
-    links_cold = [datum("http://cold.ex/", "linked", fetch_time=NOW,
-                        score=0.25)]
-    msgs = crawldb_df(spark, links_hot + links_cold)
-    base = DEFAULT.with_(db_update_max_inlinks=2)
-    a = by_url(updatedb(None, msgs,
-                        base.with_(inlink_cap_hot_split=False), NOW))
-    b = by_url(updatedb(None, msgs,
-                        base.with_(inlink_cap_hot_split=True), NOW))
-    assert a == b
