@@ -171,9 +171,7 @@ def crawlrun_cycle(spark, sf: str, repl: int = 40) -> tuple[float, int]:
         # install the frontier as the round-0 snapshot + bloom, then
         # time exactly one shipped round (generate→fetch→parse→
         # updatedb→invertlinks→dedup, all snapshot installs included)
-        run._stage_crawldb(db, 0)
-        committed = run._commit_crawldb(0)
-        run._write_bloom(committed, 0)
+        run.commit_round(db, 0)
         t0 = time.time()
         stats = run.run_round(1, e.CUR_TIME_MS)
         dt = time.time() - t0

@@ -29,7 +29,6 @@ Commands mirror the reference CLI dispatch (src/bin/nutch:211-282):
   scoreupdater  out_dir                         (ScoreUpdater)
   nodedumper    out_dir [--by score|inlinks|outlinks] [--topn N]
   startserver   out_dir --port P                (NutchServer analog)
-  bench         (delegates to bench.py)
 
 ``generate``/``fetch``/``parse``/``updatedb`` are NOT separately
 submittable, matching the service layer (service.py ROUND_STAGES):
@@ -39,6 +38,9 @@ splitting them back into four jobs would only materialize segment
 state between stages the optimizer otherwise fuses. ``invertlinks``
 IS standalone (the reference job re-inverts arbitrary committed
 segments), as are all the reader/merger/indexer jobs.
+
+Per-round tables are read through the crawl's
+:class:`~nutch_spark.storage.RoundStore`, which lists committed rounds.
 
 The pages/robots/http_status tables come from ``--pages-dir`` (parquet
 dirs named pages/, robots/, http_status/) or, with ``--fixture``, from
@@ -103,20 +105,17 @@ def _run_for(spark, args, out_dir=None):
                     t["robots"], t["http_status"])
 
 
-def _rounds_of(out_dir: str, name: str) -> list[int]:
-    base = os.path.join(out_dir, name)
-    if not os.path.isdir(base):
-        return []
-    # .tmp (staged) and .old (mid-install) dirs are not rounds; skip
-    # them as CrawlRun.resume_round does
-    return sorted(int(d.split("=")[1]) for d in os.listdir(base)
-                  if d.startswith("round=")
-                  and not d.endswith((".tmp", ".old")))
-
-
 def _crawldb_table(spark, out_dir: str):
+    from .session import default_cores
     from .storage import SnapshotTable
-    return SnapshotTable(spark, out_dir, "crawldb", sort=False)
+    return SnapshotTable(spark, out_dir, "crawldb",
+                         n_buckets=default_cores(), sort=False)
+
+
+def _store(spark, out_dir: str):
+    """The crawl's committed per-round tables."""
+    from .storage import RoundStore
+    return RoundStore(spark, out_dir, _crawldb_table(spark, out_dir))
 
 
 def _load_crawldb(spark, out_dir: str):
@@ -125,18 +124,6 @@ def _load_crawldb(spark, out_dir: str):
     if table.current_id() is None:
         raise SystemExit(f"no committed crawldb under {out_dir}")
     return table.read()
-
-
-def _load_seg(spark, out_dir: str, name: str, rnd: int | None = None):
-    """One per-round segment/linkdb table, or None."""
-    rounds = _rounds_of(out_dir, name)
-    if not rounds:
-        return None
-    use = max(rounds) if rnd is None else rnd
-    if use not in rounds:
-        return None
-    return spark.read.parquet(
-        os.path.join(out_dir, name, f"round={use}"))
 
 
 def _emit(obj) -> None:
@@ -235,17 +222,6 @@ def cmd_mergedb(args):
     _emit({"urls": out.count()})
 
 
-def _commit_next_round(run, db, rnd: int) -> int:
-    """Commit ``db`` as crawldb round ``rnd + 1``, with a seen layer of
-    the crawl's own kind; returns its row count."""
-    staged = run._stage_crawldb(db, rnd + 1)
-    n = run._rows_or_count(staged)
-    if run.seen_filter != "none":
-        run._write_bloom(staged, rnd + 1)
-    run._commit_crawldb(rnd + 1)
-    return n
-
-
 def cmd_dedup(args):
     """DeduplicationJob: mark signature-duplicates db_duplicate in the
     latest snapshot and commit it as the next round."""
@@ -254,7 +230,7 @@ def cmd_dedup(args):
     run = _run_for(spark, args)
     rnd = run.resume_round()
     db = run.load_crawldb(rnd)
-    n = _commit_next_round(run, dedup_op.dedup(db), rnd)
+    n = run.commit_round(dedup_op.dedup(db), rnd + 1)
     dupes = run.load_crawldb(rnd + 1) \
         .where("status = 'db_duplicate'").count()
     _emit({"round": rnd + 1, "crawldb_rows": n, "duplicates": dupes})
@@ -268,10 +244,10 @@ def cmd_readlinkdb(args):
     spark = _spark(args)
     # the reference LinkDb is cumulative; per-round inversions are
     # merged on read (LinkDbMerger semantics)
-    rounds = _rounds_of(args.out_dir, "linkdb")
-    if not rounds:
+    store = _store(spark, args.out_dir)
+    dbs = [store.read("linkdb", r) for r in store.rounds("linkdb")]
+    if not dbs:
         raise SystemExit(f"no linkdb under {args.out_dir}")
-    dbs = [_load_seg(spark, args.out_dir, "linkdb", r) for r in rounds]
     ldb = dbs[0] if len(dbs) == 1 else \
         linkdb_op.merge_linkdbs(dbs, CrawlConfig())
     if args.url:
@@ -285,9 +261,8 @@ def cmd_readlinkdb(args):
 def cmd_readseg(args):
     from .operators import readers
     spark = _spark(args)
-    rnd = args.round
-    tables = {n.split("/")[-1]: _load_seg(spark, args.out_dir,
-                                          f"segments/{n}", rnd)
+    store = _store(spark, args.out_dir)
+    tables = {n: store.read(f"segments/{n}", args.round)
               for n in ("crawl_generate", "crawl_fetch", "parse_text",
                         "parse_data")}
     out = readers.segment_reader(args.get, **tables)
@@ -299,10 +274,10 @@ def cmd_readseg(args):
 def cmd_mergesegs(args):
     from .operators import merge as merge_op
     spark = _spark(args)
+    store = _store(spark, args.out_dir)
     rounds = [int(r) for r in args.rounds.split(",")] if args.rounds \
-        else _rounds_of(args.out_dir, "segments/crawl_fetch")
-    segs = [s for s in (_load_seg(spark, args.out_dir,
-                                  "segments/crawl_fetch", r)
+        else store.rounds("segments/crawl_fetch")
+    segs = [s for s in (store.read("segments/crawl_fetch", r)
                         for r in rounds) if s is not None]
     if not segs:
         raise SystemExit("no crawl_fetch segments to merge")
@@ -320,11 +295,12 @@ def cmd_invertlinks(args):
     from .config import CrawlConfig
     from .operators import linkdb as linkdb_op, parse as parse_op
     spark = _spark(args)
+    store = _store(spark, args.out_dir)
     rounds = [args.round] if args.round is not None else \
-        _rounds_of(args.out_dir, "segments/parse_data")
+        store.rounds("segments/parse_data")
     edges = None
     for r in rounds:
-        pd_ = _load_seg(spark, args.out_dir, "segments/parse_data", r)
+        pd_ = store.read("segments/parse_data", r)
         if pd_ is None:
             continue
         e = parse_op.outlink_edges(pd_)
@@ -370,7 +346,7 @@ def cmd_dump(args):
     from pyspark.sql import functions as F
     spark = _spark(args)
     t = _tables(spark, args)
-    cf = _load_seg(spark, args.out_dir, "segments/crawl_fetch")
+    cf = _store(spark, args.out_dir).read("segments/crawl_fetch")
     if cf is None:
         raise SystemExit(f"no crawl_fetch under {args.out_dir}")
     content = (cf.where(F.col("status") == "fetch_success")
@@ -389,9 +365,9 @@ def cmd_dump(args):
 def cmd_commoncrawldump(args):
     from .operators.sources import dump_commoncrawl
     spark = _spark(args)
-    pt = _load_seg(spark, args.out_dir, "segments/parse_text")
-    pd_ = _load_seg(spark, args.out_dir, "segments/parse_data")
-    cf = _load_seg(spark, args.out_dir, "segments/crawl_fetch")
+    store = _store(spark, args.out_dir)
+    pt, pd_, cf = (store.read(f"segments/{n}")
+                   for n in ("parse_text", "parse_data", "crawl_fetch"))
     if None in (pt, pd_, cf):
         raise SystemExit(f"missing segment tables under {args.out_dir}")
     dump_commoncrawl(pt, pd_, cf, args.dest)
@@ -462,7 +438,7 @@ def cmd_domainstats(args):
 
 def _graph_edges(spark, args):
     from .operators import parse as parse_op
-    pd_ = _load_seg(spark, args.out_dir, "segments/parse_data")
+    pd_ = _store(spark, args.out_dir).read("segments/parse_data")
     if pd_ is None:
         raise SystemExit(f"no parse_data under {args.out_dir}")
     return parse_op.outlink_edges(pd_)
@@ -504,7 +480,7 @@ def cmd_scoreupdater(args):
     ranks = spark.read.parquet(
         os.path.join(args.out_dir, "webgraph", "linkrank"))
     db = linkdb_op.score_updater(run.load_crawldb(rnd), ranks)
-    n = _commit_next_round(run, db, rnd)
+    n = run.commit_round(db, rnd + 1)
     _emit({"round": rnd + 1, "crawldb_rows": n})
 
 

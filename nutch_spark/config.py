@@ -54,7 +54,6 @@ class CrawlConfig:
     # many protocol exceptions in one queue, the queue's remaining
     # items are purged for the round (FetchItemQueues.java:181-201)
     fetcher_max_exceptions_per_queue: int = -1
-    http_redirect_max: int = 0                # http.redirect.max
     http_robots_403_allow: bool = True        # http.robots.403.allow
     http_agent_name: str = "nutch-spark"      # http.agent.name
     ignore_external_links: bool = False       # db.ignore.external.links

@@ -7,15 +7,15 @@ dedup; the loop exits when generate yields an empty fetchlist.
 
 Spark shape: each stage is a DataFrame program; round boundaries are
 snapshot commits standing in for Iceberg snapshot commits (atomic
-install, CrawlDb.java:155-173). The crawldb has one layout, a
-url-bucketed :class:`~nutch_spark.storage.SnapshotTable` (Iceberg
-``bucket(url, N)``): the frontier side of the updatedb merge reads in
-place, with no Exchange. The segment, linkdb and URL-seen tables are
-``<name>/round=N`` parquet dirs with a ``_snapshot.json`` commit
-record. Committed tables are read back with the schema their writer
-had, so no read runs a schema-inference job. A ``_metrics`` table
-accumulates per-round, per-stage row counts; ``resume_round``
-restarts from the latest committed crawldb snapshot.
+install, CrawlDb.java:155-173). This module sequences the round and
+knows no on-disk format: the crawldb is a url-bucketed
+:class:`~nutch_spark.storage.SnapshotTable` (Iceberg
+``bucket(url, N)``), so the updatedb merge reads its frontier side in
+place with no Exchange, and every other per-round table goes through
+the one round-table store, :class:`~nutch_spark.storage.RoundStore`.
+:meth:`CrawlRun.commit_round` is the one way a crawldb round commits.
+A ``_metrics`` table accumulates per-round, per-stage row counts;
+``resume_round`` restarts from the latest committed crawldb snapshot.
 
 Lineage boundary. The reference's updatedb reads only the segment's
 committed ``crawl_fetch`` and ``crawl_parse`` outputs. Here the round's
@@ -38,7 +38,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 
 from pyspark import StorageLevel
@@ -52,21 +51,13 @@ from .operators import inject as inject_op
 from .operators import linkdb as linkdb_op
 from .operators import parse as parse_op
 from .operators import updatedb as update_op
-from .operators import cuckoo as cuckoo_op
 from .operators import urlseen
 from . import schema as S
-from .storage import SnapshotTable, partition_lineage
+from .session import default_cores
+from .storage import RoundStore, SnapshotTable
 
 # the virtual clock's advance per round, from the pinned epoch
 ROUND_MS = 24 * 3600 * 1000
-
-
-def _lineage_rows(lineage: list[dict]) -> int | None:
-    """Total rows from footer lineage, or None when any footer was
-    unreadable (callers fall back to a Spark count)."""
-    if not lineage or any(p["rows"] is None for p in lineage):
-        return None
-    return sum(p["rows"] for p in lineage)
 
 
 class CrawlRun:
@@ -76,7 +67,9 @@ class CrawlRun:
     :class:`~nutch_spark.storage.SnapshotTable` with ``db_buckets``
     buckets. The frontier side of the updatedb merge and (when
     ``pages`` is itself a bucketed table) the two pages-side fetch
-    joins run with NO Exchange on the big side.
+    joins run with NO Exchange on the big side. ``db_buckets`` and the
+    URL-seen layer's ``bloom_buckets`` default to the session's task
+    threads (:func:`~nutch_spark.session.default_cores`).
 
     ``seen_filter`` picks the URL-seen layer: ``"bloom"``, ``"cuckoo"``
     (the same contract plus deletion; the north rule names both) or
@@ -88,8 +81,9 @@ class CrawlRun:
     def __init__(self, spark: SparkSession, out_dir: str,
                  cfg: CrawlConfig, pages: DataFrame,
                  robots: DataFrame, http_status: DataFrame | None = None,
-                 bloom_buckets: int = 64, seen_filter: str | None = None,
-                 db_buckets: int = 32,
+                 bloom_buckets: int | None = None,
+                 seen_filter: str | None = None,
+                 db_buckets: int | None = None,
                  linkrank_every: int = 1, linkrank_iterations: int = 10):
         self.spark = spark
         self.out = out_dir
@@ -97,98 +91,34 @@ class CrawlRun:
         self.pages = pages
         self.robots = robots
         self.http_status = http_status
+        cores = default_cores()
         # sort=False: the crawldb is rewritten every round and its
         # consumers hash-aggregate/filter — per-bucket url order
         # would be pure write-side sort cost at 10^10 rows
-        self.db_table = SnapshotTable(spark, out_dir, "crawldb",
-                                      bucket_col="url",
-                                      n_buckets=db_buckets, sort=False)
+        self.db_table = SnapshotTable(
+            spark, out_dir, "crawldb", bucket_col="url",
+            n_buckets=cores if db_buckets is None else db_buckets,
+            sort=False)
+        self.store = RoundStore(spark, out_dir, self.db_table)
         if seen_filter is None:
-            seen_filter = "cuckoo" if self._committed(self._path(
-                "urlseen_cuckoo", self.resume_round())) else "bloom"
+            seen_filter = "cuckoo" if self.store.record(
+                "urlseen_cuckoo", self.resume_round()) else "bloom"
         if seen_filter not in ("bloom", "cuckoo", "none"):
             raise ValueError(f"seen_filter: {seen_filter!r}")
         self.seen_filter = seen_filter
-        self.bloom_buckets = bloom_buckets
+        # "none" writes no layer, so no urlseen_none table ever exists
+        self._seen_dir = f"urlseen_{seen_filter}"
+        self.bloom_buckets = cores if bloom_buckets is None \
+            else bloom_buckets
         # scoring_filter="link" only: run webgraph→linkrank→
         # scoreupdater every N rounds (0 disables)
         self.linkrank_every = linkrank_every
         self.linkrank_iterations = linkrank_iterations
         self.metrics: list[dict] = []
-        # writer schema of each staged ``.tmp`` dir, consumed by
-        # _install so the committed table reads back without inference
-        self._staged_schema: dict = {}
         # JVM RDD behind the latest round's message checkpoint
         self._messages_rdd = None
 
     # --- checkpoint helpers --------------------------------------------
-    def _path(self, name: str, rnd: int | None = None) -> str:
-        p = os.path.join(self.out, name)
-        return p if rnd is None else os.path.join(p, f"round={rnd}")
-
-    def _read(self, path: str, schema, lineage: list[dict]) -> DataFrame:
-        """Read a table this run wrote, with its writer's schema (no
-        schema-inference job) and its footer row count attached."""
-        out = self.spark.read.schema(schema).parquet(path)
-        out._nutch_lineage_rows = _lineage_rows(lineage)
-        return out
-
-    def _stage_files(self, df: DataFrame, name: str,
-                     rnd: int | None) -> str:
-        """Write ``df`` to the table's ``.tmp`` dir; returns that dir."""
-        tmp = self._path(name, rnd) + ".tmp"
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-        df.write.mode("overwrite").parquet(tmp)
-        self._staged_schema[tmp] = df.schema
-        return tmp
-
-    def _install(self, name: str, rnd: int | None = None,
-                 **record) -> DataFrame:
-        """Commit half of :meth:`_write` (:meth:`_stage_files` is the
-        stage half): stamp the ``_snapshot.json`` commit record
-        (with per-partition lineage and any extra ``record`` fields)
-        and install with the reference's current/old rename dance
-        (CrawlDb.install). A crash before this point leaves only the
-        ``.tmp`` dir, which resume ignores."""
-        path = self._path(name, rnd)
-        tmp = path + ".tmp"
-        old = path + ".old"
-        schema = self._staged_schema.pop(tmp)
-        lineage = partition_lineage(tmp)
-        with open(os.path.join(tmp, "_snapshot.json"), "w") as f:
-            json.dump({"name": name, "round": rnd, "ts": time.time(),
-                       "rows": sum(p["rows"] or 0 for p in lineage),
-                       "partitions": lineage, **record}, f)
-        # install: current -> old, tmp -> current, drop old
-        # (CrawlDb.install; dir renames are atomic on POSIX)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        if os.path.isdir(path):
-            os.rename(path, old)
-        os.rename(tmp, path)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        return self._read(path, schema, lineage)
-
-    def _write(self, df: DataFrame, name: str, rnd: int | None = None,
-               **record) -> DataFrame:
-        """Atomic snapshot install (CrawlDb.java:155-173 / Iceberg
-        ``overwritePartitions`` semantics on a cluster): the table is
-        written to a temp dir, a ``_snapshot.json`` commit record is
-        added only after the write fully succeeds, and the directory
-        is then installed with the reference's current/old rename
-        dance. A crash at ANY point leaves either the previous
-        committed snapshot in place or a temp dir that resume ignores —
-        never a half-written table that :meth:`resume_round` would
-        treat as committed."""
-        self._stage_files(df, name, rnd)
-        return self._install(name, rnd, **record)
-
-    @staticmethod
-    def _committed(path: str) -> bool:
-        return os.path.isfile(os.path.join(path, "_snapshot.json"))
-
     def _metric(self, rnd: int, stage: str, **kv) -> None:
         self.metrics.append({"round": rnd, "stage": stage,
                              "ts": time.time(), **kv})
@@ -211,12 +141,6 @@ class CrawlRun:
     def load_crawldb(self, rnd: int) -> DataFrame:
         return self.db_table.read(rnd)
 
-    def _stage_crawldb(self, df: DataFrame, rnd: int) -> DataFrame:
-        """Durable-but-uncommitted crawldb write for round ``rnd``."""
-        out = self.db_table.stage(df, rnd)
-        out._nutch_lineage_rows = self.db_table.staged_rows(rnd)
-        return out
-
     @staticmethod
     def _rows_or_count(df: DataFrame) -> int:
         """Row count of the frame just written: read from the write's
@@ -230,52 +154,48 @@ class CrawlRun:
         n = getattr(df, "_nutch_lineage_rows", None)
         return n if n is not None else df.count()
 
-    def _commit_crawldb(self, rnd: int) -> DataFrame:
-        """Make round ``rnd``'s staged crawldb the committed snapshot —
-        the round's resume marker, always the round's LAST write."""
-        staged = self.spark.table(self.db_table._table_name(rnd))
+    def commit_round(self, db: DataFrame, rnd: int,
+                     gone: DataFrame | None = None,
+                     products=None) -> int:
+        """Commit ``db`` as crawldb round ``rnd`` — every crawldb round
+        commits here. Stages it (durable, not yet current), calls
+        ``products(staged)`` for the round's tables that read it,
+        writes its URL-seen layer (``gone``: see :meth:`_write_bloom`)
+        and publishes the crawldb snapshot LAST: it is the resume
+        marker, so resume_round() counts a round done only once every
+        per-round product exists. Returns the crawldb's row count."""
+        staged = self.db_table.stage(db, rnd)
+        n = self._rows_or_count(staged)
+        if products is not None:
+            products(staged)
+        self._write_bloom(staged, rnd, gone)
         self.db_table.publish(staged, rnd)
-        return self.db_table.read(rnd)
-
-    @property
-    def _seen_dir(self) -> str:
-        return f"urlseen_{self.seen_filter}"
-
-    def _seen_record(self, rnd: int) -> dict | None:
-        """Commit record of round ``rnd``'s URL-seen layer, or None
-        when there is no committed layer to split against."""
-        if self.seen_filter == "none" or rnd < 0:
-            return None
-        try:
-            with open(os.path.join(self._path(self._seen_dir, rnd),
-                                   "_snapshot.json")) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
+        return n
 
     def _load_bloom(self, rnd: int) -> DataFrame | None:
         """Committed URL-seen layer (bloom or cuckoo table rows) for
         round ``rnd`` (covers that round's crawldb snapshot), or
         None."""
-        rec = self._seen_record(rnd)
-        if rec is None:
-            return None
-        schema = (cuckoo_op.CUCKOO_SCHEMA if self.seen_filter == "cuckoo"
-                  else urlseen.BLOOM_SCHEMA)
-        return self._read(self._path(self._seen_dir, rnd), schema,
-                          rec["partitions"])
+        return self.store.read(self._seen_dir, rnd,
+                               urlseen.layer_schema(self.seen_filter))
 
-    def _write_bloom(self, db: DataFrame, rnd: int) -> None:
-        if self.seen_filter == "cuckoo":
-            layer = cuckoo_op.build_cuckoo(db.select("url"),
-                                           n_buckets=self.bloom_buckets)
-        else:
-            layer = urlseen.build_bloom(db.select("url"),
-                                        n_buckets=self.bloom_buckets)
+    def _write_bloom(self, db: DataFrame, rnd: int,
+                     gone: DataFrame | None = None) -> None:
+        """Round ``rnd``'s URL-seen layer over crawldb ``db``. A purge
+        passes ``gone``, the urls dropped since round ``rnd - 1``; the
+        layer then keeps that round's bucket count, and a cuckoo layer
+        is edited, not rebuilt (:func:`urlseen.build_layer`)."""
+        if self.seen_filter == "none":
+            return
+        prev = self.store.record(self._seen_dir, rnd - 1) \
+            if gone is not None else None
+        nb = prev["n_buckets"] if prev else self.bloom_buckets
+        layer = urlseen.build_layer(
+            self.seen_filter, db, nb,
+            prev=self._load_bloom(rnd - 1) if prev else None, gone=gone)
         # the bucket count goes in the commit record, so readers of the
         # layer never run a job to learn it
-        self._write(layer, self._seen_dir, rnd,
-                    n_buckets=self.bloom_buckets)
+        self.store.write(layer, self._seen_dir, rnd, n_buckets=nb)
 
     def _release_messages(self) -> None:
         """Drop the blocks of the last round's message checkpoint."""
@@ -294,22 +214,10 @@ class CrawlRun:
         the bloom path rebuilds."""
         db = self.load_crawldb(rnd)
         gone = db.where(F.col("status") == S.DB_GONE).select("url")
-        kept = db.where(F.col("status") != S.DB_GONE)
         nxt = rnd + 1
         n_gone = gone.count()
-        staged = self._stage_crawldb(kept, nxt)
-        n_db = self._rows_or_count(staged)
-        if self.seen_filter == "cuckoo":
-            layer = self._load_bloom(rnd)
-            if layer is not None:
-                nb = self._seen_record(rnd).get("n_buckets")
-                layer = cuckoo_op.cuckoo_delete(layer, gone, n_buckets=nb)
-                self._write(layer, self._seen_dir, nxt, n_buckets=nb)
-            else:
-                self._write_bloom(staged, nxt)
-        elif self.seen_filter != "none":
-            self._write_bloom(staged, nxt)
-        self._commit_crawldb(nxt)
+        n_db = self.commit_round(db.where(F.col("status") != S.DB_GONE),
+                                 nxt, gone=gone)
         self._metric(nxt, "purge", rows=n_db)
         return {"round": nxt, "crawldb_rows": n_db,
                 "purged_rows": n_gone}
@@ -318,16 +226,12 @@ class CrawlRun:
     def inject(self, seeds: DataFrame, now_ms: int) -> DataFrame:
         prev = self.resume_round()
         db = self.load_crawldb(prev) if prev >= 0 else None
-        new_db = inject_op.inject(db, seeds, self.cfg, now_ms)
         rnd = max(prev, 0)
-        staged = self._stage_crawldb(new_db, rnd)
-        n_db = self._rows_or_count(staged)
-        if self.seen_filter != "none":
-            # round 1 pre-splits its discoveries against the seed set
-            self._write_bloom(staged, rnd)
-        out = self._commit_crawldb(rnd)
+        # the seed set's URL-seen layer: round 1 pre-splits against it
+        n_db = self.commit_round(
+            inject_op.inject(db, seeds, self.cfg, now_ms), rnd)
         self._metric(rnd, "inject", rows=n_db)
-        return out
+        return self.load_crawldb(rnd)
 
     def run_round(self, rnd: int, now_ms: int) -> dict:
         """One generate→fetch→parse→updatedb→invertlinks→dedup round.
@@ -341,7 +245,8 @@ class CrawlRun:
         fetchlist = gen_op.generate(
             db, cfg.with_(partition_seed=cfg.partition_seed ^ rnd),
             cur_time_ms=now_ms, gen_time_ms=now_ms)
-        fetchlist = self._write(fetchlist, "segments/crawl_generate", rnd)
+        fetchlist = self.store.write(fetchlist, "segments/crawl_generate",
+                                     rnd)
         n_fl = self._rows_or_count(fetchlist)
         self._metric(rnd, "generate", rows=n_fl, sec=time.time() - t0)
         if n_fl == 0:
@@ -350,8 +255,8 @@ class CrawlRun:
         t0 = time.time()
         fr = fetch_op.fetch(fetchlist, self.pages, self.robots,
                             self.http_status, cfg, now_ms)
-        crawl_fetch = self._write(fr["crawl_fetch"],
-                                  "segments/crawl_fetch", rnd)
+        crawl_fetch = self.store.write(fr["crawl_fetch"],
+                                       "segments/crawl_fetch", rnd)
         n_fetched = self._rows_or_count(crawl_fetch)
         content = fr["content"]
         self._metric(rnd, "fetch", rows=n_fetched, sec=time.time() - t0,
@@ -365,11 +270,11 @@ class CrawlRun:
             pr = parse_op.parse_segment_dispatch(content, cfg, now_ms)
         else:
             pr = parse_op.parse_segment(content, cfg, now_ms)
-        parse_text = self._write(pr["parse_text"], "segments/parse_text",
-                                 rnd)
+        parse_text = self.store.write(pr["parse_text"],
+                                      "segments/parse_text", rnd)
         n_parsed = self._rows_or_count(parse_text)
-        parse_data = self._write(pr["parse_data"], "segments/parse_data",
-                                 rnd)
+        parse_data = self.store.write(pr["parse_data"],
+                                      "segments/parse_data", rnd)
         self._metric(rnd, "parse", rows=n_parsed,
                      sec=time.time() - t0)
 
@@ -404,7 +309,7 @@ class CrawlRun:
         # Correctness is exact: the layers have no false negatives, and
         # the split is skipped in normalize/filter mode where message
         # urls may re-key into frontier urls after the split decision.
-        seen = self._seen_record(rnd - 1)
+        seen = self.store.record(self._seen_dir, rnd - 1)
         can_split = (seen is not None and not cfg.db_update_normalize
                      and not cfg.db_update_filter)
         if can_split:
@@ -433,7 +338,7 @@ class CrawlRun:
         t0 = time.time()
         edges = parse_op.outlink_edges(parse_data)
         ldb = linkdb_op.invert_links(edges, cfg)
-        ldb = self._write(ldb, "linkdb", rnd)
+        ldb = self.store.write(ldb, "linkdb", rnd)
         self._metric(rnd, "invertlinks", rows=self._rows_or_count(ldb),
                      sec=time.time() - t0)
 
@@ -455,42 +360,28 @@ class CrawlRun:
             self._metric(rnd, "linkrank", rows=ranks.count(),
                          sec=time.time() - t0)
 
-        # stage (durable, uncommitted) — the crawldb snapshot is the
-        # resume marker, so its COMMIT must be the round's last write:
-        # a crash after the commit but before linkdb/bloom would
-        # otherwise mark the round done with those products missing.
-        # Staging happens AFTER the linkrank branch so link-scoring
-        # mode pays exactly ONE bucketed write of the 10^10-row table
-        # per round (it used to stage pre- and post-score-update), and
-        # BEFORE the index branch so docs/deletes scan the staged table
-        # instead of re-executing the updatedb+dedup subtree per write.
+        # the crawldb is staged AFTER the linkrank branch, so
+        # link-scoring mode pays exactly ONE bucketed write of the
+        # 10^10-row table per round, and BEFORE the index branch, so
+        # docs/deletes scan the staged table instead of re-executing
+        # the updatedb+dedup subtree per write
         t0 = time.time()
-        new_db = self._stage_crawldb(new_db, rnd)
-        n_db = self._rows_or_count(new_db)
-        self._metric(rnd, "updatedb", rows=n_db,
-                     sec=t_updatedb + time.time() - t0)
 
-        # per-round index + clean (bin/crawl:249-256, INDEXFLAG): the
-        # IndexingJob's doc emission over this round's crawldb ∪ linkdb
-        # ∪ segment, plus the delete stream (IndexerMapReduce delete
-        # rules ∪ CleaningJob's gone/duplicate scan) — materialized as
-        # the docs/deletes tables, the engine's analog of the Solr/ES
-        # sink (SURVEY §2.7 IndexerMapReduce row)
-        if cfg.index_enabled:
-            t0 = time.time()
-            docs, _ = self._index_products(
-                rnd, new_db, ldb, parse_text, parse_data,
-                crawl_fetch.drop("queue_id", "virtual_time"), cfg)
-            self._metric(rnd, "index", rows=self._rows_or_count(docs),
-                         sec=time.time() - t0)
+        def products(staged: DataFrame) -> None:
+            self._metric(rnd, "updatedb", rows=self._rows_or_count(staged),
+                         sec=t_updatedb + time.time() - t0)
+            # per-round index + clean (bin/crawl:249-256, INDEXFLAG):
+            # the docs/deletes tables are the engine's analog of the
+            # Solr/ES sink (SURVEY §2.7 IndexerMapReduce row)
+            if cfg.index_enabled:
+                t1 = time.time()
+                docs, _ = self._index_products(
+                    rnd, staged, ldb, parse_text, parse_data,
+                    crawl_fetch.drop("queue_id", "virtual_time"), cfg)
+                self._metric(rnd, "index", rows=self._rows_or_count(docs),
+                             sec=time.time() - t1)
 
-        if self.seen_filter != "none":
-            self._write_bloom(new_db, rnd)
-
-        # commit the crawldb snapshot LAST: resume_round() only counts
-        # a round done once every per-round product exists
-        new_db = self._commit_crawldb(rnd)
-
+        n_db = self.commit_round(new_db, rnd, products=products)
         return {"fetchlist_rows": n_fl, "fetched_rows": n_fetched,
                 "crawldb_rows": n_db}
 
@@ -506,10 +397,10 @@ class CrawlRun:
         from .operators import readers
         docs = readers.indexer_docs(db, ldb, parse_text, parse_data,
                                     crawl_fetch, cfg)
-        docs = self._write(docs, "indexes/docs", rnd)
+        docs = self.store.write(docs, "indexes/docs", rnd)
         dels = readers.indexer_deletes(db, parse_data, crawl_fetch, cfg)
         deletes = dels.unionByName(readers.cleaning_job(db)).distinct()
-        deletes = self._write(deletes, "indexes/deletes", rnd)
+        deletes = self.store.write(deletes, "indexes/deletes", rnd)
         return docs, deletes
 
     def index_round(self, rnd: int | None = None) -> dict:
@@ -526,11 +417,11 @@ class CrawlRun:
             raise ValueError("no committed round to index")
 
         def _seg(name: str) -> DataFrame:
-            path = self._path(name, rnd)
-            if not self._committed(path):
+            table = self.store.read(name, rnd)
+            if table is None:
                 raise FileNotFoundError(
                     f"round {rnd} has no committed {name}")
-            return self.spark.read.parquet(path)
+            return table
 
         docs, deletes = self._index_products(
             rnd, self.load_crawldb(rnd), _seg("linkdb"),

@@ -28,6 +28,8 @@ per BASELINE.json input_hint — no live network):
 4. one ``when``-chain maps protocol outcome → fetch status;
 5. redirect targets are canonicalized, filtered, and emitted as
    ``linked`` rows with ``_repr_`` via chooseRepr (URLUtil.java:325-425).
+   A redirect is never followed within the round; its target waits for
+   a later round, which is the reference's ``http.redirect.max=0``.
 
 Scale notes: the politeness unit is the fetch partition (salted host
 partitioning from generate); the virtual-time window shuffles on

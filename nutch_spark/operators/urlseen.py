@@ -17,6 +17,8 @@ the two filter formats differ only in their per-bucket numpy kernel:
   :func:`nutch_spark.operators.cuckoo.build_cuckoo` builds the
   deletable format over the same hashing and buckets, one
   ``(bucket, table, stash, …)`` row per bucket.
+- ``layer_schema`` / ``build_layer``: the one place a layer format
+  is chosen — its builder (or cuckoo deletion) and its read schema.
 - ``split_seen`` / ``filter_unseen``: discovered urls are bucketed the
   same way and **cogrouped** with the layer on bucket
   (``groupBy(bucket).cogroup(...).applyInPandas``): each task sees a
@@ -128,6 +130,28 @@ def build_bloom(urls: DataFrame, url_col: str = "url",
             "n_buckets": [nb]})
 
     return hashed.groupBy("_bucket").applyInPandas(make, BLOOM_SCHEMA)
+
+
+def layer_schema(kind: str) -> StructType:
+    """Row schema of a ``kind`` ("bloom" or "cuckoo") layer."""
+    # imported here: cuckoo.py imports this module at load
+    from .cuckoo import CUCKOO_SCHEMA
+    return CUCKOO_SCHEMA if kind == "cuckoo" else BLOOM_SCHEMA
+
+
+def build_layer(kind: str, db: DataFrame, n_buckets: int,
+                prev: DataFrame | None = None,
+                gone: DataFrame | None = None) -> DataFrame:
+    """A ``kind`` layer over crawldb ``db``'s urls. Given the previous
+    layer ``prev`` (``n_buckets`` buckets) and the ``gone`` urls since
+    dropped from the crawldb, a cuckoo layer deletes their fingerprints
+    from ``prev`` instead of rebuilding; a bloom cannot unset bits."""
+    from . import cuckoo
+    if kind != "cuckoo":
+        return build_bloom(db.select("url"), n_buckets=n_buckets)
+    if prev is not None and gone is not None:
+        return cuckoo.cuckoo_delete(prev, gone, n_buckets=n_buckets)
+    return cuckoo.build_cuckoo(db.select("url"), n_buckets=n_buckets)
 
 
 def _bloom_member(row: pd.DataFrame, h: np.ndarray) -> np.ndarray:

@@ -29,6 +29,11 @@ persisted metadata — schema, bucket spec and location all come from
 Reference analog: the crawldb ``current/old`` MapFile install
 (CrawlDb.java:155-173) gives atomic replace but neither history nor
 bucketed join locality; this layer supplies both.
+
+The crawl's other per-round tables (segments, linkdb, URL-seen layer,
+index products) have one store, :class:`RoundStore`: the reference's
+temp-dir-plus-rename install with a ``_snapshot.json`` commit record,
+listed and read only once the round's crawldb snapshot is committed.
 """
 
 from __future__ import annotations
@@ -36,7 +41,9 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import shutil
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -70,6 +77,14 @@ def partition_lineage(path: str) -> list[dict]:
     return out
 
 
+def lineage_rows(lineage: list[dict] | None) -> int | None:
+    """Total rows from footer lineage, or None when it is missing or
+    any footer was unreadable (callers fall back to a Spark count)."""
+    if not lineage or any(p["rows"] is None for p in lineage):
+        return None
+    return sum(p["rows"] for p in lineage)
+
+
 def _quote(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
@@ -98,9 +113,7 @@ class SnapshotTable:
         digest = hashlib.md5(os.path.abspath(self.dir).encode()) \
             .hexdigest()[:10]
         self._prefix = f"snap_{name}_{digest}"
-        # footer lineage captured at stage() time, consumed by
-        # publish() (and by callers that want the staged row count
-        # without a Spark count job over the just-written files)
+        # footer lineage captured at stage() time, consumed by publish()
         self._staged_lineage: dict[int, list[dict]] = {}
 
     # --- metadata ------------------------------------------------------
@@ -140,7 +153,8 @@ class SnapshotTable:
         table for ``snapshot_id`` is materialized but the metadata
         pointer still names the previous snapshot. :meth:`publish`
         makes it current; ``stage``+``publish`` = Iceberg's
-        write-then-swap commit. Returns a read of the staged table.
+        write-then-swap commit. Returns a read of the staged table,
+        its footer row count attached as ``_nutch_lineage_rows``.
 
         The write lands in a ``.tmp`` dir first and swaps in only after
         the job completes, so re-staging a snapshot id whose previous
@@ -174,32 +188,29 @@ class SnapshotTable:
         if os.path.isdir(path):
             shutil.rmtree(path)
         os.rename(tmp, path)
-        self._create_external(tbl, schema, path)
-        self._staged_lineage[snapshot_id] = partition_lineage(path)
-        return self.spark.table(tbl)
-
-    def staged_rows(self, snapshot_id: int) -> int | None:
-        """Row count of a snapshot staged THIS session, from the
-        parquet footers captured at stage() time — no Spark job. None
-        when unknown (not staged here, or a footer was unreadable)."""
-        lineage = self._staged_lineage.get(snapshot_id)
-        if not lineage or any(p["rows"] is None for p in lineage):
-            return None
-        return sum(p["rows"] for p in lineage)
+        self._create_external(tbl, schema, path, self.bucket_col,
+                              self.n_buckets, self.sort)
+        lineage = self._staged_lineage[snapshot_id] = \
+            partition_lineage(path)
+        out = self.spark.table(tbl)
+        out._nutch_lineage_rows = lineage_rows(lineage)
+        return out
 
     def _create_external(self, tbl: str, schema: dict, path: str,
-                         sort: bool | None = None) -> None:
+                         bucket_col: str, n_buckets: int,
+                         sort: bool) -> None:
+        """Catalog entry over the bucketed files at ``path``. The CREATE
+        carries the bucket spec, so the table scans with the writing
+        session's storage partitioning."""
         st = StructType.fromJson(schema)
         cols = ", ".join(f"{_quote(f.name)} {f.dataType.simpleString()}"
                          for f in st.fields)
-        bc = _quote(self.bucket_col)
-        sorted_by = f"SORTED BY ({bc}) " \
-            if (self.sort if sort is None else sort) else ""
+        bc = _quote(bucket_col)
+        sorted_by = f"SORTED BY ({bc}) " if sort else ""
         self.spark.sql(
             f"CREATE TABLE {tbl} ({cols}) USING PARQUET "
             f"CLUSTERED BY ({bc}) {sorted_by}"
-            f"INTO {self.n_buckets} BUCKETS "
-            f"LOCATION '{path}'")
+            f"INTO {n_buckets} BUCKETS LOCATION '{path}'")
 
     def publish(self, df_schema_src: DataFrame, snapshot_id: int) -> None:
         """Commit: record the staged snapshot in the metadata (with
@@ -232,23 +243,11 @@ class SnapshotTable:
     # --- read path -----------------------------------------------------
     def _ensure_registered(self, snap: dict) -> None:
         """Re-create the catalog entry from persisted metadata when a
-        fresh session resumes over existing snapshot data. The CREATE
-        carries the bucket spec, so the re-registered table scans with
-        the same storage partitioning as the writing session's."""
-        tbl = snap["table"]
-        if self.spark.catalog.tableExists(tbl):
-            return
-        schema = StructType.fromJson(snap["schema"])
-        cols = ", ".join(
-            f"{_quote(f.name)} {f.dataType.simpleString()}"
-            for f in schema.fields)
-        bc = _quote(snap["bucket_col"])
-        sorted_by = f"SORTED BY ({bc}) " if snap.get("sort", True) else ""
-        self.spark.sql(
-            f"CREATE TABLE {tbl} ({cols}) USING PARQUET "
-            f"CLUSTERED BY ({bc}) {sorted_by}"
-            f"INTO {snap['n_buckets']} BUCKETS "
-            f"LOCATION '{snap['path']}'")
+        fresh session resumes over existing snapshot data."""
+        if not self.spark.catalog.tableExists(snap["table"]):
+            self._create_external(snap["table"], snap["schema"],
+                                  snap["path"], snap["bucket_col"],
+                                  snap["n_buckets"], snap.get("sort", True))
 
     def read(self, snapshot_id: int | None = None) -> DataFrame:
         """Current snapshot, or time-travel to ``snapshot_id``
@@ -281,3 +280,101 @@ class SnapshotTable:
             shutil.rmtree(snap["path"], ignore_errors=True)
         self._save_meta(meta)
         return expired
+
+
+class RoundStore:
+    """The crawl's per-round tables: ``<name>/round=N`` parquet dirs
+    under ``base_dir``, each committed by a ``_snapshot.json`` record
+    (footer lineage plus the writer's extra fields). ``marker`` is the
+    crawldb, whose current snapshot is the latest done round: a later
+    round's tables, installed before a crash cut that round's crawldb
+    commit, are not committed, and a resume overwrites them."""
+
+    def __init__(self, spark: SparkSession, base_dir: str,
+                 marker: SnapshotTable):
+        self.spark = spark
+        self.dir = base_dir
+        self.marker = marker
+        # writer schema per staged ``.tmp`` dir, consumed by install()
+        self._staged_schema: dict[str, StructType] = {}
+
+    def path(self, name: str, rnd: int) -> str:
+        return os.path.join(self.dir, name, f"round={rnd}")
+
+    def _read(self, path: str, schema: StructType | None,
+              lineage: list[dict]) -> DataFrame:
+        """``path`` with ``schema`` (or inferred) and its footer rows."""
+        reader = self.spark.read
+        out = (reader if schema is None else reader.schema(schema)) \
+            .parquet(path)
+        out._nutch_lineage_rows = lineage_rows(lineage)
+        return out
+
+    def stage(self, df: DataFrame, name: str, rnd: int) -> str:
+        """Write ``df`` to the table's ``.tmp`` dir; returns that dir."""
+        tmp = self.path(name, rnd) + ".tmp"
+        if os.path.isdir(tmp):
+            shutil.rmtree(tmp)
+        df.write.mode("overwrite").parquet(tmp)
+        self._staged_schema[tmp] = df.schema
+        return tmp
+
+    def install(self, name: str, rnd: int, **record) -> DataFrame:
+        """Commit what :meth:`stage` wrote, with no Spark job: stamp the
+        record, then swap current -> ``.old``, ``.tmp`` -> current and
+        drop ``.old`` (CrawlDb.install; dir renames are atomic on
+        POSIX). Returns the table read with its writer's schema."""
+        path = self.path(name, rnd)
+        tmp, old = path + ".tmp", path + ".old"
+        schema = self._staged_schema.pop(tmp)
+        lineage = partition_lineage(tmp)
+        with open(os.path.join(tmp, "_snapshot.json"), "w") as f:
+            json.dump({"name": name, "round": rnd, "ts": time.time(),
+                       "rows": sum(p["rows"] or 0 for p in lineage),
+                       "partitions": lineage, **record}, f)
+        shutil.rmtree(old, ignore_errors=True)
+        if os.path.isdir(path):
+            os.rename(path, old)
+        os.rename(tmp, path)
+        shutil.rmtree(old, ignore_errors=True)
+        return self._read(path, schema, lineage)
+
+    def write(self, df: DataFrame, name: str, rnd: int,
+              **record) -> DataFrame:
+        """:meth:`stage` + :meth:`install`. A crash at any point leaves
+        the previous install or a ``.tmp`` dir, never a half-written
+        table with a record."""
+        self.stage(df, name, rnd)
+        return self.install(name, rnd, **record)
+
+    def record(self, name: str, rnd: int) -> dict | None:
+        """Commit record of round ``rnd``'s ``name`` table, or None
+        when that table is not committed."""
+        cur = self.marker.current_id()
+        if cur is None or rnd > cur:
+            return None
+        try:
+            with open(os.path.join(self.path(name, rnd),
+                                   "_snapshot.json")) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
+
+    def rounds(self, name: str) -> list[int]:
+        """Rounds with a committed ``name`` table, ascending; ``.tmp``
+        (staged) and ``.old`` (mid-install) dirs are not rounds."""
+        base = os.path.join(self.dir, name)
+        found = (re.fullmatch(r"round=(\d+)", d)
+                 for d in (os.listdir(base) if os.path.isdir(base) else ()))
+        return sorted(r for r in (int(m[1]) for m in found if m)
+                      if self.record(name, r) is not None)
+
+    def read(self, name: str, rnd: int | None = None,
+             schema: StructType | None = None) -> DataFrame | None:
+        """Committed round ``rnd`` (default: the latest) of ``name``,
+        or None. Without ``schema`` the parquet reader infers it."""
+        if rnd is None:
+            rnd = max(self.rounds(name), default=-1)
+        rec = self.record(name, rnd)
+        return None if rec is None else \
+            self._read(self.path(name, rnd), schema, rec["partitions"])

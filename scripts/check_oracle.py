@@ -8,12 +8,14 @@ Usage: python scripts/check_oracle.py [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 from collections import Counter
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.01"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -36,10 +38,11 @@ def rows_to_multiset(cols, rows):
 
 
 def main():
-    from nutch_spark.session import get_spark
+    from nutch_spark.session import default_cores, get_spark
     import __spark_entry__ as e
 
-    spark = get_spark(cores=8, shuffle_partitions=8)
+    cores = default_cores()
+    spark = get_spark(cores=cores, shuffle_partitions=cores)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

@@ -229,10 +229,47 @@ def test_dump_and_commoncrawldump(monkeypatch, capsys, spark,
     assert os.path.isdir(cc)
 
 
-def test_rounds_of_skips_leftover_old_dir(tmp_path):
-    """A ``round=N.old`` dir, left by a crash mid-install or seen by a
-    reader during one, is not a round: readers skip it the way
-    ``CrawlRun.resume_round`` does instead of failing on its name."""
-    for d in ("round=1", "round=2.old", "round=3.tmp"):
+def test_rounds_of_skips_leftover_old_dir(spark, tmp_path):
+    """A ``round=N.old`` or ``round=N.tmp`` dir, left by a crash
+    mid-install or seen by a reader during one, is not a round: the
+    store's listing skips it instead of failing on its name. It lists
+    only rounds with a commit record, up to the crawldb's current
+    snapshot."""
+    for d in ("round=1", "round=2.old", "round=2.tmp", "round=3"):
         (tmp_path / "linkdb" / d).mkdir(parents=True)
-    assert cli._rounds_of(str(tmp_path), "linkdb") == [1]
+        (tmp_path / "linkdb" / d / "_snapshot.json").write_text(
+            json.dumps({"partitions": []}))
+    (tmp_path / "linkdb" / "round=0").mkdir()        # no commit record
+    (tmp_path / "crawldb").mkdir()
+    (tmp_path / "crawldb" / "_table.json").write_text(
+        json.dumps({"snapshots": {}, "current": 2}))
+    assert cli._store(spark, str(tmp_path)).rounds("linkdb") == [1]
+
+
+def test_readers_skip_round_cut_before_crawldb_commit(
+        monkeypatch, capsys, spark, tmp_path):
+    """A crash between round 2's table installs and its crawldb commit
+    leaves round=2 segment and linkdb dirs with commit records. Round
+    2 is not done (a resume overwrites them), so the latest round the
+    CLI readers see is round 1."""
+    from nutch_spark.storage import SnapshotTable
+    orig = SnapshotTable.publish
+
+    def crashing_commit(self, staged, rnd):
+        if self.name == "crawldb" and rnd == 2:
+            raise RuntimeError("simulated crash at commit")
+        return orig(self, staged, rnd)
+
+    monkeypatch.setattr(SnapshotTable, "publish", crashing_commit)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        _fixture_crawl(spark, tmp_path / "c")
+    out = str(tmp_path / "c")
+    assert os.path.isfile(os.path.join(
+        out, "linkdb", "round=2", "_snapshot.json"))
+    _main(monkeypatch, spark, ["mergesegs", out, str(tmp_path / "m")])
+    assert json.loads(_out(capsys)[-1])["rounds"] == [1]
+    _main(monkeypatch, spark, ["invertlinks", out, str(tmp_path / "l")])
+    assert json.loads(_out(capsys)[-1])["rounds"] == [1]
+    with pytest.raises(SystemExit, match="no segments"):
+        _main(monkeypatch, spark, ["readseg", out, "--get", "x",
+                                   "--round", "2"])

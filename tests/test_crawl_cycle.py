@@ -149,17 +149,17 @@ def test_crawldb_commit_is_last_per_round(spark, tmp_path, fixture):
                    bloom_buckets=4, db_buckets=4)
 
     # crash exactly at the round-2 crawldb commit point
-    orig_commit = run._commit_crawldb
+    orig_commit = run.db_table.publish
 
-    def crashing_commit(rnd):
+    def crashing_commit(staged, rnd):
         if rnd == 2:
             raise RuntimeError("simulated crash at commit")
-        return orig_commit(rnd)
+        return orig_commit(staged, rnd)
 
-    run._commit_crawldb = crashing_commit
+    run.db_table.publish = crashing_commit
     with pytest.raises(RuntimeError, match="simulated crash"):
         run.crawl(fixture["seeds"], rounds=2, start_ms=START)
-    run._commit_crawldb = orig_commit
+    run.db_table.publish = orig_commit
 
     # round 2 is NOT done — even though linkdb/bloom round=2 exist
     assert run.resume_round() == 1
@@ -175,6 +175,25 @@ def test_crawldb_commit_is_last_per_round(spark, tmp_path, fixture):
     for product in ("linkdb", "urlseen_bloom"):
         p = tmp_path / product / "round=2"
         assert (p / "_snapshot.json").exists(), product
+
+
+def test_bucket_defaults_follow_session_cores(spark, tmp_path, fixture,
+                                             monkeypatch):
+    """Without bucket arguments the crawldb and its URL-seen layer get
+    one bucket per task thread (session.default_cores), and so does
+    the CLI's mergedb writer."""
+    import json
+    from nutch_spark import cli
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    run = CrawlRun(spark, str(tmp_path), CrawlConfig(), fixture["pages"],
+                   fixture["robots"], fixture["http_status"])
+    run.inject(fixture["seeds"], START)
+    meta = json.loads((tmp_path / "crawldb" / "_table.json").read_text())
+    assert meta["snapshots"]["0"]["n_buckets"] == 3
+    assert len({f for f in (tmp_path / "crawldb" / "s0").iterdir()
+                if f.suffix == ".parquet"}) <= 3
+    assert run.store.record("urlseen_bloom", 0)["n_buckets"] == 3
+    assert cli._crawldb_table(spark, str(tmp_path)).n_buckets == 3
 
 
 def test_resume_reuses_pinned_virtual_clock(spark, tmp_path, fixture):
@@ -218,14 +237,16 @@ def test_link_scoring_stages_crawldb_once_per_round(
     """Link-scoring mode must pay exactly ONE durable crawldb stage
     per round: staging used to happen before AND after the linkrank
     score update — two full bucketed writes of the 10^10-row table."""
+    from nutch_spark.storage import SnapshotTable
     calls = []
-    orig = CrawlRun._stage_crawldb
+    orig = SnapshotTable.stage
 
     def counting(self, df, rnd):
-        calls.append(rnd)
+        if self.name == "crawldb":
+            calls.append(rnd)
         return orig(self, df, rnd)
 
-    monkeypatch.setattr(CrawlRun, "_stage_crawldb", counting)
+    monkeypatch.setattr(SnapshotTable, "stage", counting)
     _run(spark, tmp_path / "once", fixture, rounds=2,
          scoring_filter="link")
     # inject stages round 0 once; each crawl round stages once

@@ -63,10 +63,10 @@ def test_crawldb_stage_plans_over_message_checkpoint(spark, tmp_path, fx):
 
 def test_install_and_seen_layer_load_run_no_jobs(spark, tmp_path, fx):
     run = _injected(spark, tmp_path, fx)
-    staged = spark.read.parquet(run._stage_files(fx["robots"], "probe", 1))
+    staged = spark.read.parquet(run.store.stage(fx["robots"], "probe", 1))
     out = []
     assert _jobs_of(spark, lambda: out.append(
-        run._install("probe", 1))) == []
+        run.store.install("probe", 1))) == []
     assert out[0].schema == staged.schema
     assert out[0].count() == fx["robots"].count()
     assert _jobs_of(spark, lambda: out.append(run._load_bloom(0))) == []

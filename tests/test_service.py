@@ -169,7 +169,7 @@ def test_standalone_index_job(server):
     # the docs table landed under the crawl dir, committed
     import os
     run = svc.runs["c1"]
-    docs_path = run._path("indexes/docs", res["round"])
+    docs_path = run.store.path("indexes/docs", res["round"])
     assert os.path.isfile(os.path.join(docs_path, "_snapshot.json"))
     docs = run.spark.read.parquet(docs_path)
     assert docs.count() == res["docs_rows"]
