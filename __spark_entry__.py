@@ -1003,11 +1003,7 @@ def q_parse_dispatch_segment(spark, sf):
         F.lit(1.0).alias("score"),
         F.lit(3600).cast("int").alias("fetch_interval"),
         F.lit(None).cast("map<string,string>").alias("metadata"))
-    # outputs are consumed exactly once here, so the within-round reuse
-    # caches would only pin block-manager memory across driver queries
-    pr = parse_op.parse_segment_dispatch(
-        content, CFG.with_(parse_cache_storage="NONE",
-                           page_cache_storage="NONE"), CUR_TIME_MS)
+    pr = parse_op.parse_segment_dispatch(content, CFG, CUR_TIME_MS)
     out = pr["parse_text"].join(
         pr["parse_data"].select("url", "signature"), "url")
     return out.select("url", "text", "signature")

@@ -56,6 +56,7 @@ def crawl_cycle(spark, sf: str, repl: int = 40) -> tuple[float, int]:
     frontier + pages, replicated ×repl (~200k URLs at sf0.1) so the
     throughput number reflects per-URL work rather than fixed stage
     overheads; returns (seconds, fetched urls)."""
+    from pyspark import StorageLevel
     from pyspark.sql import functions as F
     import __spark_entry__ as e
     from nutch_spark.operators import (fetch as fetch_op,
@@ -102,12 +103,20 @@ def crawl_cycle(spark, sf: str, repl: int = 40) -> tuple[float, int]:
         [], "authority string, robots_txt string, fetch_code int")
     fr = fetch_op.fetch(fl, pages, robots, None, cfg, e.CUR_TIME_MS)
     pr = parse_op.parse_segment(fr["content"], cfg, e.CUR_TIME_MS)
-    msgs = (fr["crawl_fetch"].drop("queue_id", "virtual_time")
-            .unionByName(pr["crawl_parse"])
-            .unionByName(fr["linked"]))
-    out = update_op.updatedb(db, msgs, cfg, e.CUR_TIME_MS)
-    n_urls = fr["crawl_fetch"].count()
-    out.count()
+    # the frames more than one output reads compute once, as in a
+    # CrawlRun round
+    cached = [fr["schedule"].persist(StorageLevel.MEMORY_AND_DISK),
+              pr["parsed"].persist(StorageLevel.MEMORY_AND_DISK)]
+    try:
+        msgs = (fr["crawl_fetch"].drop("queue_id", "virtual_time")
+                .unionByName(pr["crawl_parse"])
+                .unionByName(fr["linked"]))
+        out = update_op.updatedb(db, msgs, cfg, e.CUR_TIME_MS)
+        n_urls = fr["crawl_fetch"].count()
+        out.count()
+    finally:
+        for df in cached:
+            df.unpersist()
     return time.time() - t0, n_urls
 
 

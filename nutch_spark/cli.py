@@ -106,10 +106,8 @@ def _run_for(spark, args, out_dir=None):
 
 
 def _crawldb_table(spark, out_dir: str):
-    from .session import default_cores
     from .storage import SnapshotTable
-    return SnapshotTable(spark, out_dir, "crawldb",
-                         n_buckets=default_cores(), sort=False)
+    return SnapshotTable(spark, out_dir, "crawldb", sort=False)
 
 
 def _store(spark, out_dir: str):

@@ -33,9 +33,6 @@ class CrawlConfig:
     generate_normalise: bool = True
     crawl_gen_delay_ms: int = 7 * SECONDS_PER_DAY * 1000  # crawl.gen.delay
     generate_max_num_segments: int = 1
-    # topN above this switches from TakeOrderedAndProject (one merge
-    # task holds N rows) to distributed threshold selection (ours)
-    generate_topn_distributed_min: int = 100_000
 
     # --- fetcher (Fetcher.java / FetchItemQueue.java / nutch-default.xml) ---
     fetcher_server_delay_ms: int = 5000       # fetcher.server.delay (5.0 s)
@@ -162,18 +159,6 @@ class CrawlConfig:
     # --- partitioning / scale knobs (ours) ---
     num_fetch_partitions: int = 32            # politeness units per round
     partition_seed: int = 0                   # salt for host partitioning
-    # storage level for the within-round fetch/parse intermediates:
-    # MEMORY_AND_DISK for small rounds, DISK_ONLY to keep html off the
-    # executor heap, or NONE to skip the reuse cache entirely — each
-    # output then recomputes its (column-pruned) plan, which trades a
-    # little CPU for much less memory traffic and scales better on
-    # bandwidth-bound hosts (see BENCH.md hardware canaries)
-    page_cache_storage: str = "MEMORY_AND_DISK"
-    # storage level for the parse-output reuse cache (slim: no page
-    # bytes — url + parsed struct + signature). Unlike the fetch-side
-    # cache this one guards the expensive Arrow parse UDF from being
-    # re-run per output, so keep it on unless outputs are consumed once
-    parse_cache_storage: str = "MEMORY_AND_DISK"
     # mime-dispatched parse (ParseUtil.java:74-110 via
     # parse-plugins.xml; bin/crawl:232-236): route each fetched page
     # to its mimetype's parser (html/feed/zip/text) instead of the

@@ -23,15 +23,17 @@ message stream (``crawl_fetch`` ∪ ``crawl_parse`` ∪ fetch redirects) is
 materialized once with an eager ``localCheckpoint`` right after parse,
 so the URL-seen split, updatedb, dedup and the bucketed crawldb write
 plan over one ``LogicalRDD`` plus committed tables — never over the
-fetch and parse lineage. Cache lifetimes within a round:
+fetch and parse lineage. The operators only build plans; ``run_round``
+alone decides what a round caches and for how long:
 
 - fetch schedule, parse output and (mime dispatch) page content:
-  persisted by their operators so fetch and parse compute once; they
-  are unpersisted right after the message checkpoint, their last
-  reader;
-- message checkpoint: its blocks live until the NEXT ``run_round``
-  starts, so ``debug_split``/``debug_plans`` stay readable after a
-  round returns — one round's checkpoint at most per ``CrawlRun``.
+  persisted before the first write that reads each, so fetch and
+  parse compute once; unpersisted right after the message
+  checkpoint, their last reader;
+- message checkpoint: released when the round returns.
+
+Whether the round returns, stops at an empty fetchlist or raises, the
+session holds no more cached blocks after ``run_round`` than before.
 """
 
 from __future__ import annotations
@@ -39,6 +41,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from contextlib import ExitStack
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -67,9 +70,10 @@ class CrawlRun:
     :class:`~nutch_spark.storage.SnapshotTable` with ``db_buckets``
     buckets. The frontier side of the updatedb merge and (when
     ``pages`` is itself a bucketed table) the two pages-side fetch
-    joins run with NO Exchange on the big side. ``db_buckets`` and the
-    URL-seen layer's ``bloom_buckets`` default to the session's task
-    threads (:func:`~nutch_spark.session.default_cores`).
+    joins run with NO Exchange on the big side. ``db_buckets`` defaults
+    to the crawldb's own bucket count, and for a new crawldb, like the
+    URL-seen layer's ``bloom_buckets``, to the session's task threads
+    (:func:`~nutch_spark.session.default_cores`).
 
     ``seen_filter`` picks the URL-seen layer: ``"bloom"``, ``"cuckoo"``
     (the same contract plus deletion; the north rule names both) or
@@ -83,22 +87,19 @@ class CrawlRun:
                  robots: DataFrame, http_status: DataFrame | None = None,
                  bloom_buckets: int | None = None,
                  seen_filter: str | None = None,
-                 db_buckets: int | None = None,
-                 linkrank_every: int = 1, linkrank_iterations: int = 10):
+                 db_buckets: int | None = None):
         self.spark = spark
         self.out = out_dir
         self.cfg = cfg
         self.pages = pages
         self.robots = robots
         self.http_status = http_status
-        cores = default_cores()
         # sort=False: the crawldb is rewritten every round and its
         # consumers hash-aggregate/filter — per-bucket url order
         # would be pure write-side sort cost at 10^10 rows
         self.db_table = SnapshotTable(
             spark, out_dir, "crawldb", bucket_col="url",
-            n_buckets=cores if db_buckets is None else db_buckets,
-            sort=False)
+            n_buckets=db_buckets, sort=False)
         self.store = RoundStore(spark, out_dir, self.db_table)
         if seen_filter is None:
             seen_filter = "cuckoo" if self.store.record(
@@ -108,15 +109,9 @@ class CrawlRun:
         self.seen_filter = seen_filter
         # "none" writes no layer, so no urlseen_none table ever exists
         self._seen_dir = f"urlseen_{seen_filter}"
-        self.bloom_buckets = cores if bloom_buckets is None \
+        self.bloom_buckets = default_cores() if bloom_buckets is None \
             else bloom_buckets
-        # scoring_filter="link" only: run webgraph→linkrank→
-        # scoreupdater every N rounds (0 disables)
-        self.linkrank_every = linkrank_every
-        self.linkrank_iterations = linkrank_iterations
         self.metrics: list[dict] = []
-        # JVM RDD behind the latest round's message checkpoint
-        self._messages_rdd = None
 
     # --- checkpoint helpers --------------------------------------------
     def _metric(self, rnd: int, stage: str, **kv) -> None:
@@ -197,12 +192,6 @@ class CrawlRun:
         # layer never run a job to learn it
         self.store.write(layer, self._seen_dir, rnd, n_buckets=nb)
 
-    def _release_messages(self) -> None:
-        """Drop the blocks of the last round's message checkpoint."""
-        if self._messages_rdd is not None:
-            self._messages_rdd.unpersist(True)
-            self._messages_rdd = None
-
     def purge_gone(self, rnd: int) -> dict:
         """Frontier purge (the CleaningJob deletion semantic,
         ``CleaningJob.java:97-117``, applied to the crawldb itself):
@@ -236,9 +225,21 @@ class CrawlRun:
     def run_round(self, rnd: int, now_ms: int) -> dict:
         """One generate→fetch→parse→updatedb→invertlinks→dedup round.
         Returns the per-stage row counts; ``fetchlist_rows == 0``
-        signals the caller to stop (bin/crawl:195-207)."""
+        signals the caller to stop (bin/crawl:195-207). Whatever the
+        round caches is released before it returns or raises."""
+        with ExitStack() as held:
+            return self._round(rnd, now_ms, held)
+
+    def _round(self, rnd: int, now_ms: int, held: ExitStack) -> dict:
         cfg = self.cfg
-        self._release_messages()
+        # fetch and parse frames that more than one write reads: cached
+        # until the message checkpoint, their last reader, is taken
+        caches = held.enter_context(ExitStack())
+
+        def cache(df: DataFrame) -> DataFrame:
+            caches.callback(df.unpersist)
+            return df.persist(StorageLevel.MEMORY_AND_DISK)
+
         db = self.load_crawldb(rnd - 1 if rnd > 0 else 0)
         t0 = time.time()
 
@@ -255,6 +256,7 @@ class CrawlRun:
         t0 = time.time()
         fr = fetch_op.fetch(fetchlist, self.pages, self.robots,
                             self.http_status, cfg, now_ms)
+        cache(fr["schedule"])
         crawl_fetch = self.store.write(fr["crawl_fetch"],
                                        "segments/crawl_fetch", rnd)
         n_fetched = self._rows_or_count(crawl_fetch)
@@ -267,9 +269,12 @@ class CrawlRun:
         # via parse-plugins.xml — html/feed/zip/text families) when
         # configured, for CC-style mixed-mime corpora (bin/crawl:232)
         if cfg.parse_mime_dispatch:
-            pr = parse_op.parse_segment_dispatch(content, cfg, now_ms)
+            # one traversal of page bytes for all parser families
+            pr = parse_op.parse_segment_dispatch(cache(content), cfg,
+                                                 now_ms)
         else:
             pr = parse_op.parse_segment(content, cfg, now_ms)
+        cache(pr["parsed"])
         parse_text = self.store.write(pr["parse_text"],
                                       "segments/parse_text", rnd)
         n_parsed = self._rows_or_count(parse_text)
@@ -283,10 +288,10 @@ class CrawlRun:
         # seen split, the merge, dedup and the bucketed write below
         # plan over one LogicalRDD plus committed tables. The caches'
         # last reader is this checkpoint; the checkpoint itself is
-        # released when the next round starts (_release_messages). It
-        # holds round-sized data, so it keeps at most the session's
-        # shuffle partition count: every stage that scans it runs that
-        # many tasks, not one per fetch/parse input partition
+        # released when the round returns. It holds round-sized data,
+        # so it keeps at most the session's shuffle partition count:
+        # every stage that scans it runs that many tasks, not one per
+        # fetch/parse input partition
         t0 = time.time()
         n_part = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         messages = crawl_fetch.drop("queue_id", "virtual_time") \
@@ -294,11 +299,9 @@ class CrawlRun:
             .coalesce(n_part) \
             .localCheckpoint(eager=True,
                              storageLevel=StorageLevel.MEMORY_AND_DISK)
-        self._messages_rdd = messages._jdf.queryExecution().logical().rdd()
-        for cached in (fr.get("schedule"), pr.get("parsed"),
-                       pr.get("content_cache")):
-            if cached is not None:
-                cached.unpersist()
+        held.callback(messages._jdf.queryExecution().logical().rdd()
+                      .unpersist, True)
+        caches.close()
 
         # URL-seen pre-split (north rule's partitioned bloom/cuckoo
         # URL-seen layer): discovered linked rows that the previous
@@ -318,7 +321,6 @@ class CrawlRun:
             new_rows, maybe = urlseen.split_seen(
                 linked, self._load_bloom(rnd - 1),
                 n_buckets=seen.get("n_buckets"))
-            self.debug_split = {"new": new_rows, "maybe": maybe}
             new_db = update_op.updatedb(db, others.unionByName(maybe),
                                         cfg, now_ms, fresh=new_rows)
         else:
@@ -330,9 +332,6 @@ class CrawlRun:
         # count, so the write's repartition is then elided
         new_db = dedup_op.dedup(
             new_db.repartition(self.db_table.n_buckets, "url"))
-        # plan introspection for tests/bench: the pre-write frames whose
-        # physical plans carry the round's shuffle structure
-        self.debug_plans = {"updatedb": new_db, "schedule": fr["schedule"]}
         t_updatedb = time.time() - t0
 
         t0 = time.time()
@@ -347,14 +346,11 @@ class CrawlRun:
         # out; enabled here by scoring_filter="link"): ranks computed
         # on this round's link graph replace the crawldb scores before
         # the snapshot commits, so the NEXT generate orders by LinkRank
-        if cfg.scoring_filter == "link" and self.linkrank_every > 0 \
-                and rnd % self.linkrank_every == 0:
+        if cfg.scoring_filter == "link":
             t0 = time.time()
             raw_edges = edges.select("from_url", "to_url")
             loops = linkdb_op.find_loops(raw_edges, depth=2)
-            ranks = linkdb_op.linkrank(
-                raw_edges, iterations=self.linkrank_iterations,
-                loops=loops)
+            ranks = linkdb_op.linkrank(raw_edges, loops=loops)
             nodedb = ranks  # (url, score) is all score_updater needs
             new_db = linkdb_op.score_updater(new_db, nodedb)
             self._metric(rnd, "linkrank", rows=ranks.count(),

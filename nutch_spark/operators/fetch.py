@@ -93,10 +93,10 @@ def schedule_fetchlist(fetchlist: DataFrame, pages: DataFrame,
     content_length, _page_ms``.
 
     Materialize this frame once per round (persist/localCheckpoint —
-    :func:`fetch` persists it per ``cfg.page_cache_storage``) and derive
-    the three round outputs with :func:`outputs_from_schedule`; the
-    politeness windows and the frontier-side joins then execute exactly
-    once per cycle instead of once per consumer. At 100 TB the window
+    ``CrawlRun.run_round`` persists :func:`fetch`'s ``schedule``) and
+    derive the three round outputs with :func:`outputs_from_schedule`;
+    the politeness windows and the frontier-side joins then execute
+    exactly once per cycle instead of once per consumer. At 100 TB the window
     sorts over the full fetchlist are the second-largest shuffle of the
     cycle — running them once matters as much as keeping page bytes out
     of them.
@@ -347,24 +347,17 @@ def fetch(fetchlist: DataFrame, pages: DataFrame, robots: DataFrame,
     - ``content``: fetched page bytes+text for parse (fetch_success);
     - ``linked``: redirect-discovered CRAWLDB rows (status=linked,
       ``_repr_`` metadata) — feed into updatedb;
-    - ``schedule``: the shared phase-1 frame (slim; persisted at
-      ``cfg.page_cache_storage`` unless "NONE").
+    - ``schedule``: the shared phase-1 frame that the other three read
+      (slim: ~14 small columns per fetchlist row, no page bytes).
 
     Composition of :func:`schedule_fetchlist` (politeness windows +
-    status resolution, slim columns, persisted so it computes once per
-    round) and :func:`outputs_from_schedule` (projections + the single
-    page-bytes join). Callers that commit stages to tables can instead
-    localCheckpoint the schedule between the phases.
+    status resolution) and :func:`outputs_from_schedule` (projections +
+    the single page-bytes join). Only plans are built: a caller that
+    writes more than one output persists ``schedule`` first, so it
+    computes once per round.
     """
     scheduled = schedule_fetchlist(fetchlist, pages, robots, http_status,
                                    cfg, round_start_ms)
-    # slim reuse cache: ~14 small columns per fetchlist row, no page
-    # bytes — safe to persist even at production round sizes (the old
-    # design cached the html-joined frame and had to default to NONE
-    # on memory-bandwidth-bound hosts)
-    if cfg.page_cache_storage != "NONE":
-        from pyspark import StorageLevel
-        scheduled.persist(getattr(StorageLevel, cfg.page_cache_storage))
     return outputs_from_schedule(scheduled, pages, cfg)
 
 

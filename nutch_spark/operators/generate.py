@@ -31,6 +31,10 @@ from ..functions.urls import host_col, spark_udfs
 from ..schema import META_GENERATE_TIME
 from . import schedules
 
+# topN above this switches from TakeOrderedAndProject (one merge task
+# holds N rows) to distributed threshold selection (ours)
+TOPN_DISTRIBUTED_MIN = 100_000
+
 
 def generate(crawldb: DataFrame, cfg: CrawlConfig,
              cur_time_ms: int | None = None,
@@ -164,12 +168,12 @@ def generate(crawldb: DataFrame, cfg: CrawlConfig,
     # per-segment selection loop stays a handful of jobs.
     if cfg.generate_top_n and cfg.generate_top_n > 0:
         def _topn(sub: DataFrame) -> DataFrame:
-            if cfg.generate_top_n <= cfg.generate_topn_distributed_min:
+            if cfg.generate_top_n <= TOPN_DISTRIBUTED_MIN:
                 return sub.orderBy(F.desc("_sort"), F.asc("url")) \
                     .limit(cfg.generate_top_n)
             return _top_n_by_threshold(
                 sub, cfg.generate_top_n, "_sort", "url",
-                small_limit=cfg.generate_topn_distributed_min)
+                small_limit=TOPN_DISTRIBUTED_MIN)
         if max_seg > 1 and cfg.generate_max_count > 0:
             parts = [_topn(df.where(F.col("_segnum") == s))
                      for s in range(1, max_seg + 1)]

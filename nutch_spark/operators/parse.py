@@ -86,13 +86,14 @@ def parse_segment(content: DataFrame, cfg: CrawlConfig,
                                 F.col("url"),
                                 min_token_len=cfg.text_profile_min_token_len,
                                 quant_rate=cfg.text_profile_quant_rate))
-              # slim projection BEFORE the persist: html/text/lang are
-              # consumed entirely by the UDF + signature above, so the
-              # round cache holds only parse output — page bytes never
-              # sit in executor memory past this point. On a
-              # memory-bandwidth-bound host this is the difference
-              # between the parse stage scaling with cores and hitting
-              # the bus ceiling (BENCH.md hardware canaries).
+              # slim projection BEFORE the caller's persist of
+              # ``parsed``: html/text/lang are consumed entirely by the
+              # UDF + signature above, so the round cache holds only
+              # parse output — page bytes never sit in executor memory
+              # past this point. On a memory-bandwidth-bound host this
+              # is the difference between the parse stage scaling with
+              # cores and hitting the bus ceiling (BENCH.md hardware
+              # canaries).
               .select("url", "fetch_time", "score", "fetch_interval",
                       "metadata", "_p", "signature"))
     return _parse_outputs(parsed, cfg, now_ms)
@@ -104,12 +105,6 @@ def _parse_outputs(parsed: DataFrame, cfg: CrawlConfig,
     only) and :func:`parse_segment_dispatch` (mime-routed). Input is
     the slim parsed frame ``(url, fetch_time, score, fetch_interval,
     metadata, _p, signature)`` — page bytes already dropped."""
-    # the multi-output reuse cache — level configurable ("NONE" skips
-    # caching entirely; each output then recomputes the parse UDF)
-    if cfg.parse_cache_storage != "NONE":
-        from pyspark import StorageLevel
-        parsed.persist(getattr(StorageLevel, cfg.parse_cache_storage))
-
     parse_text = parsed.select("url", F.col("_p.text").alias("text"))
     parse_data = parsed.select(
         "url", F.col("_p.title").alias("title"),
@@ -258,8 +253,9 @@ def _parse_outputs(parsed: DataFrame, cfg: CrawlConfig,
 
     return {"parse_text": parse_text, "parse_data": parse_data,
             "crawl_parse": crawl_parse,
-            # the persisted reuse frame — callers running multi-round
-            # sessions unpersist it once every output is materialized
+            # the frame every output reads: a caller that writes more
+            # than one output persists it first, or each output re-runs
+            # the parse UDF
             "parsed": parsed}
 
 
@@ -479,23 +475,17 @@ def parse_segment_dispatch(content: DataFrame, cfg: CrawlConfig,
     different kernel — html pandas UDF, feed/zip mapInPandas — so a
     single-pass dispatch would force all parsing into one Python
     kernel and off the vectorized html path). To keep the round at ONE
-    traversal of page bytes, ``content`` is persisted at
-    ``cfg.page_cache_storage`` before the family scans branch — the
-    fetch join runs once and each family reads the cached bytes; with
-    level NONE each family branch recomputes its (mime-pruned) scan,
-    which is the right trade only when the pages table is clustered by
-    mime so row-group pruning is real. All families then union into
-    ONE slim parsed frame (no page bytes) so the downstream
-    ParseOutputFormat program — signature / parse_meta / linked /
-    meta-refresh emissions — exists once in the plan, exactly as in
-    parse_segment."""
+    traversal of page bytes, the caller persists ``content`` before
+    this call (``CrawlRun.run_round`` does) — the fetch join runs once
+    and each family reads the cached bytes; uncached, each family
+    branch recomputes its (mime-pruned) scan, which is the right trade
+    only when the pages table is clustered by mime so row-group
+    pruning is real. All families then union into ONE slim parsed
+    frame (no page bytes) so the downstream ParseOutputFormat program
+    — signature / parse_meta / linked / meta-refresh emissions —
+    exists once in the plan, exactly as in parse_segment."""
     from . import archive as archive_op
     from . import feed as feed_op
-
-    if cfg.page_cache_storage != "NONE":
-        from pyspark import StorageLevel
-        content = content.persist(
-            getattr(StorageLevel, cfg.page_cache_storage))
 
     mime = F.lower(F.coalesce(F.col(mime_col), F.lit("")))
     attrs = ["fetch_time", "score", "fetch_interval", "metadata"]
@@ -634,7 +624,8 @@ def parse_segment_dispatch(content: DataFrame, cfg: CrawlConfig,
     # non-canonical sub-parses: the fetch_success datum
     # (ParseOutputFormat.java:285-297 — ``new CrawlDatum()`` defaults:
     # score 0.0, interval 0; fetch time = parent's). Derived from the
-    # PERSISTED parsed frame so the feed kernel runs once.
+    # shared parsed frame, so with it persisted the feed kernel runs
+    # once.
     sub = out["parsed"].where(F.col("_kind") == "entry").select(
         "url", F.lit(FETCH_SUCCESS).alias("status"),
         F.col("fetch_time").cast("long").alias("fetch_time"),
@@ -645,10 +636,6 @@ def parse_segment_dispatch(content: DataFrame, cfg: CrawlConfig,
         F.lit(0).cast("long").alias("modified_time"),
         F.create_map().cast("map<string,string>").alias("metadata"))
     out["crawl_parse"] = out["crawl_parse"].unionByName(sub)
-    # the family branches are done with the page bytes once every
-    # output is materialized; callers unpersist out["content_cache"]
-    # alongside out["parsed"]
-    out["content_cache"] = content
     return out
 
 

@@ -48,6 +48,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from .session import default_cores
+
 
 def partition_lineage(path: str) -> list[dict]:
     """Per-partition lineage for commit records (north rule:
@@ -94,9 +96,13 @@ class SnapshotTable:
     url-bucketed Spark tables under ``base_dir/name/``."""
 
     def __init__(self, spark: SparkSession, base_dir: str, name: str,
-                 bucket_col: str = "url", n_buckets: int = 32,
+                 bucket_col: str = "url", n_buckets: int | None = None,
                  sort: bool = True):
-        """``sort``: keep each bucket file sorted by the bucket column
+        """``n_buckets=None`` keeps the table's bucket count: the current
+        snapshot's when the table exists, else the session's task
+        threads (:func:`~nutch_spark.session.default_cores`).
+
+        ``sort``: keep each bucket file sorted by the bucket column
         (Iceberg write-order). Worth it for write-once/join-many
         tables (pages: the SMJ probe side skips its per-round Sort);
         pure write-side cost for tables that are rewritten every round
@@ -106,6 +112,8 @@ class SnapshotTable:
         self.name = name
         self.dir = os.path.join(base_dir, name)
         self.bucket_col = bucket_col
+        if n_buckets is None:
+            n_buckets = self._recorded_buckets() or default_cores()
         self.n_buckets = n_buckets
         self.sort = sort
         # catalog identifiers must be unique per on-disk table (the
@@ -119,6 +127,17 @@ class SnapshotTable:
     # --- metadata ------------------------------------------------------
     def _meta_path(self) -> str:
         return os.path.join(self.dir, "_table.json")
+
+    def _recorded_buckets(self) -> int | None:
+        """Bucket count in ``_table.json``: the current snapshot's, else
+        the table's own; None when neither is recorded."""
+        try:
+            with open(self._meta_path()) as f:
+                meta = json.load(f)
+        except FileNotFoundError:
+            return None
+        cur = meta["snapshots"].get(str(meta["current"]), {})
+        return cur.get("n_buckets") or meta.get("n_buckets")
 
     def _load_meta(self) -> dict:
         try:

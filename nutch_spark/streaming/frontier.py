@@ -58,8 +58,9 @@ def run_frontier_stream(spark: SparkSession, segments_dir: str,
     OPIC accumulation) against the current crawldb snapshot and
     commits the result as the next snapshot of the crawldb's
     :class:`~nutch_spark.storage.SnapshotTable` (the layout
-    ``CrawlRun`` writes): a crash mid-batch leaves the previous
-    snapshot current. Snapshots older than the last two expire."""
+    ``CrawlRun`` writes, with the crawldb's own bucket count): a crash
+    mid-batch leaves the previous snapshot current. Snapshots older
+    than the last two expire."""
     import os
     import time
 

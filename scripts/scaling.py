@@ -82,7 +82,7 @@ def scaled_inputs(spark, sf: str, repl: int):
 
 
 def one_cycle(spark, crawldb, pages, cores: int) -> int:
-    from pyspark.sql import functions as F
+    from pyspark import StorageLevel
     import __spark_entry__ as e
     from nutch_spark.operators import (fetch as fetch_op,
                                        generate as gen_op,
@@ -90,8 +90,7 @@ def one_cycle(spark, crawldb, pages, cores: int) -> int:
                                        updatedb as update_op)
 
     cfg = e.CFG.with_(generate_top_n=-1, generate_filter=False,
-                      num_fetch_partitions=cores * 2,
-                      page_cache_storage="NONE")
+                      num_fetch_partitions=cores * 2)
     robots = spark.createDataFrame(
         [], "authority string, robots_txt string, fetch_code int")
     # two-phase fetch: generate flows straight into the politeness
@@ -107,15 +106,17 @@ def one_cycle(spark, crawldb, pages, cores: int) -> int:
         fl, pages, robots, None, cfg, e.CUR_TIME_MS) \
         .localCheckpoint(eager=True)
     fr = fetch_op.outputs_from_schedule(sched, pages, cfg)
-    # parse_segment persists its slim parsed output internally
-    # (parse_cache_storage default), so the parse UDF also runs once
+    # the slim parsed output is persisted, so the parse UDF also runs
+    # once for all of its emissions
     pr = parse_op.parse_segment(fr["content"], cfg, e.CUR_TIME_MS)
+    parsed = pr["parsed"].persist(StorageLevel.MEMORY_AND_DISK)
     msgs = (fr["crawl_fetch"].drop("queue_id", "virtual_time")
             .unionByName(pr["crawl_parse"])
             .unionByName(fr["linked"]))
     out = update_op.updatedb(crawldb, msgs, cfg, e.CUR_TIME_MS)
     n = fr["crawl_fetch"].count()
     out.write.format("noop").mode("overwrite").save()
+    parsed.unpersist()
     return n
 
 

@@ -15,6 +15,8 @@ from nutch_spark.crawl import CrawlRun
 from nutch_spark.operators.urlseen import maybe_seen_urls
 from nutch_spark.testdata import fixture_dfs
 
+from tests.helpers import record_seen_splits
+
 START = 1_700_000_000_000
 
 
@@ -33,18 +35,17 @@ def _rows(db):
                   for r in db.collect())
 
 
-def test_cuckoo_split_preserves_crawldb(spark, tmp_path):
+def test_cuckoo_split_preserves_crawldb(spark, tmp_path, monkeypatch):
     fx = fixture_dfs(spark, n_hosts=8, pages_per_host=5,
                      hot_host_pages=12)
+    splits = record_seen_splits(monkeypatch)
     run_c, db_c = _run(spark, tmp_path / "ck", fx, "cuckoo")
+    new, _ = splits[-1]        # the split ran over the cuckoo layer
     _, db_n = _run(spark, tmp_path / "none", fx, "none")
     assert _rows(db_c) == _rows(db_n)
-    # the split actually ran over the cuckoo layer
-    assert hasattr(run_c, "debug_split")
-    new = run_c.debug_split["new"]
     prev_db = run_c.load_crawldb(run_c.resume_round() - 1)
-    assert new.select("url").join(prev_db.select("url"), "url",
-                                  "left_semi").count() == 0
+    assert not set(new) & {r.url for r in
+                           prev_db.select("url").collect()}
 
 
 def test_purge_gone_deletes_from_cuckoo_layer(spark, tmp_path):

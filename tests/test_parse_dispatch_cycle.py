@@ -194,5 +194,3 @@ def test_md5_kind_subparses_share_parent_signature(spark, mixed):
     assert sigs[f"{SITE}/e0"] == sigs[f"{SITE}/feed"]
     assert sigs[f"{SITE}/e1"] == sigs[f"{SITE}/feed"]
     assert sigs[f"{SITE}/archive"] != sigs[f"{SITE}/feed"]
-    out["parsed"].unpersist()
-    out["content_cache"].unpersist()

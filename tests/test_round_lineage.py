@@ -1,13 +1,15 @@
 """The crawldb stage plans over the round's message checkpoint and
 committed tables, never over fetch/parse lineage; commit-record reads
-run no Spark job; and one session runs round after round with at most
-one message checkpoint held per CrawlRun."""
+run no Spark job; and a round, whether it returns or raises, leaves
+the session holding no more cached blocks than before it."""
 
+import pyspark.sql.functions as F
 import pytest
 
 from nutch_spark.config import CrawlConfig
 from nutch_spark.crawl import CrawlRun
 from nutch_spark.testdata import fixture_dfs
+from tests.helpers import record_crawldb_plans, record_seen_splits
 
 START = 1_700_000_000_000
 DAY = 86_400_000
@@ -19,8 +21,8 @@ def fx(spark):
                        hot_host_pages=8)
 
 
-def _injected(spark, out, fx, seen_filter="bloom"):
-    cfg = CrawlConfig(generate_top_n=60, num_fetch_partitions=4)
+def _injected(spark, out, fx, seen_filter="bloom", **cfg_kw):
+    cfg = CrawlConfig(generate_top_n=60, num_fetch_partitions=4, **cfg_kw)
     run = CrawlRun(spark, str(out), cfg, fx["pages"], fx["robots"],
                    fx["http_status"], seen_filter=seen_filter,
                    bloom_buckets=4, db_buckets=4)
@@ -50,12 +52,14 @@ def _rows(db) -> dict:
             for r in db.collect()}
 
 
-def test_crawldb_stage_plans_over_message_checkpoint(spark, tmp_path, fx):
+def test_crawldb_stage_plans_over_message_checkpoint(spark, tmp_path, fx,
+                                                   monkeypatch):
     run = _injected(spark, tmp_path, fx)
+    splits = record_seen_splits(monkeypatch)
+    plans = record_crawldb_plans(monkeypatch)
     run.run_round(1, START + DAY)
-    assert hasattr(run, "debug_split")          # the seen split ran
-    plan = run.debug_plans["updatedb"]._jdf.queryExecution() \
-        .executedPlan().toString()
+    assert len(splits) == 1                     # the seen split ran
+    plan, = plans
     for node in ("ArrowEvalPython", "BatchEvalPython", "InMemoryRelation"):
         assert node not in plan, node
     assert "Scan ExistingRDD" in plan           # the message checkpoint
@@ -74,19 +78,48 @@ def test_install_and_seen_layer_load_run_no_jobs(spark, tmp_path, fx):
 
 
 def test_three_rounds_one_session_match_unsplit_run(spark, tmp_path, fx):
-    """Seen-layer carry-over and checkpoint release only show from the
+    """Seen-layer carry-over and cache release only show from the
     second round on: three consecutive rounds in one session commit
-    the same crawldb as a run without a seen layer, and the session
-    never holds more than the latest round's message checkpoint."""
+    the same crawldb as a run without a seen layer, and after each
+    round the session holds nothing the round cached."""
     ref = _injected(spark, tmp_path / "none", fx, seen_filter="none")
     for rnd in (1, 2, 3):
         assert ref.run_round(rnd, START + rnd * DAY)["fetchlist_rows"] > 0
-    ref._release_messages()
 
     run = _injected(spark, tmp_path / "bloom", fx)
     before = _persistent_rdds(spark)
     for rnd in (1, 2, 3):
         run.run_round(rnd, START + rnd * DAY)
+        assert _persistent_rdds(spark) == before
         assert _rows(run.load_crawldb(rnd)) == _rows(ref.load_crawldb(rnd))
-        held = _persistent_rdds(spark) - before
-        assert held <= {run._messages_rdd.id()}, held
+
+
+@pytest.mark.parametrize("crash_at,dispatch", [
+    ("segments/parse_data", False),
+    ("segments/parse_data", True),
+    ("crawldb", False),
+])
+def test_failed_round_holds_nothing(spark, tmp_path, fx, crash_at,
+                                    dispatch):
+    """A round that raises releases what it cached: the fetch schedule
+    and parse output (raised at the parse_data write, after both were
+    computed), the page content under mime dispatch, and the message
+    checkpoint (raised at the crawldb stage, after it was taken)."""
+    if dispatch:
+        fx = {**fx, "pages": fx["pages"].withColumn(
+            "mime_type", F.lit("text/html"))}
+    run = _injected(spark, tmp_path, fx, parse_mime_dispatch=dispatch)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("simulated crash")
+
+    if crash_at == "crawldb":
+        run.db_table.stage = crash
+    else:
+        write = run.store.write
+        run.store.write = lambda df, name, rnd, **kw: \
+            crash() if name == crash_at else write(df, name, rnd, **kw)
+    before = _persistent_rdds(spark)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run.run_round(1, START + DAY)
+    assert _persistent_rdds(spark) == before

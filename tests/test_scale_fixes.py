@@ -72,26 +72,26 @@ def _frontier(spark, n=500):
         F.lit(None).cast("map<string,string>").alias("metadata"))
 
 
-def test_generate_topn_threshold_matches_takeordered(spark):
+def test_generate_topn_threshold_matches_takeordered(spark, monkeypatch):
     db = _frontier(spark)
     base = CrawlConfig(generate_top_n=120, generate_max_count=-1,
                        generate_filter=False)
     small = gen_op.generate(db, base, cur_time_ms=10**12,
                             gen_time_ms=10**12)
-    dist = gen_op.generate(
-        db, base.with_(generate_topn_distributed_min=0),
-        cur_time_ms=10**12, gen_time_ms=10**12)
+    monkeypatch.setattr(gen_op, "TOPN_DISTRIBUTED_MIN", 0)
+    dist = gen_op.generate(db, base, cur_time_ms=10**12,
+                           gen_time_ms=10**12)
     assert {r.url for r in small.collect()} == \
         {r.url for r in dist.collect()}
     assert dist.count() == 120
 
 
-def test_topn_threshold_tie_break(spark):
+def test_topn_threshold_tie_break(spark, monkeypatch):
     # heavy ties at the boundary: all scores equal → pure tie path
     db = _frontier(spark, 200).withColumn("score", F.lit(5.0))
+    monkeypatch.setattr(gen_op, "TOPN_DISTRIBUTED_MIN", 0)
     cfg = CrawlConfig(generate_top_n=40, generate_max_count=-1,
-                      generate_filter=False,
-                      generate_topn_distributed_min=0)
+                      generate_filter=False)
     out = gen_op.generate(db, cfg, cur_time_ms=10**12, gen_time_ms=10**12)
     urls = sorted(r.url for r in out.collect())
     all_urls = sorted(r.url for r in db.select("url").collect())

@@ -13,6 +13,7 @@ from nutch_spark.config import CrawlConfig
 from nutch_spark.crawl import CrawlRun
 from nutch_spark.storage import SnapshotTable
 from nutch_spark.testdata import fixture_dfs
+from tests.helpers import record_crawldb_plans
 
 START = 1_700_000_000_000
 
@@ -119,7 +120,7 @@ def _cycle_run(spark, tmp, fixture, rounds=2):
 
 
 def test_crawlrun_bucketed_updatedb_no_db_exchange(spark, tmp_path,
-                                                   fixture):
+                                                   fixture, monkeypatch):
     """The round-2 VERDICT's top item: the SHIPPED cycle driver (not
     just the bench scripts) must persist the crawldb bucketed so the
     updatedb merge joins the frontier exchange-free. Compare the actual
@@ -127,17 +128,16 @@ def test_crawlrun_bucketed_updatedb_no_db_exchange(spark, tmp_path,
     parquet read of the same round-1 snapshot files: the bucketed read
     takes the db side in place (Bucketed: true, fewer Exchanges) and
     both converge to the same crawldb."""
+    plans = record_crawldb_plans(monkeypatch)
     b = _cycle_run(spark, tmp_path / "b", fixture)
+    plan_b = plans[-1]                          # round 2's merge
     p = _cycle_run(spark, tmp_path / "p", fixture, rounds=0)
     schema = b.load_crawldb(1).schema
     p.load_crawldb = lambda rnd: spark.read.schema(schema).parquet(
         os.path.join(b.db_table.dir, f"s{rnd}"))
     p.run_round(2, START + 2 * 86_400_000)
+    plan_p = plans[-1]
 
-    plan_b = b.debug_plans["updatedb"]._jdf.queryExecution() \
-        .executedPlan().toString()
-    plan_p = p.debug_plans["updatedb"]._jdf.queryExecution() \
-        .executedPlan().toString()
     assert "Bucketed: true" in plan_b
     assert "Bucketed: true" not in plan_p
     # strictly fewer shuffles: the db side of the merge join reads in

@@ -71,6 +71,30 @@ def test_frontier_stream_matches_batch(spark, tmp_path, segment_rows):
     assert len(glob.glob(os.path.join(db_path, "s[0-9]*"))) <= 2
 
 
+def test_frontier_stream_keeps_crawldb_bucket_count(spark, tmp_path,
+                                                   segment_rows,
+                                                   monkeypatch):
+    """A micro-batch commits the crawldb with the bucket count it was
+    committed with, not a count of its own."""
+    import json
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    db = spark.createDataFrame(
+        [(f"http://s.test/q{i}", "db_unfetched", 0, 0, 3600, 1.0, None,
+          0, None) for i in range(6)], _SEG_SCHEMA)
+    SnapshotTable(spark, str(tmp_path), "crawldb", n_buckets=3,
+                  sort=False).commit(db, 0)
+    q = run_frontier_stream(spark, segment_rows,
+                            str(tmp_path / "crawldb"), CrawlConfig(),
+                            str(tmp_path / "ckpt"), trigger_once=True)
+    q.awaitTermination(120)
+    meta = json.loads((tmp_path / "crawldb" / "_table.json").read_text())
+    assert meta["current"] >= 1
+    assert {snap["n_buckets"] for snap in meta["snapshots"].values()} \
+        == {3}
+    assert SnapshotTable(spark, str(tmp_path), "crawldb").read() \
+        .count() == 26
+
+
 def test_stream_first_seen_dedups_across_batches(spark, tmp_path):
     """applyInPandasWithState URL-seen: a url discovered in batch 0 is
     suppressed when rediscovered in batch 1 (state persists in the

@@ -9,7 +9,7 @@ the frontier joins exchange-free.
 import pyspark.sql.functions as F
 import pytest
 
-from nutch_spark.config import CrawlConfig, DEFAULT
+from nutch_spark.config import DEFAULT
 from nutch_spark.operators import fetch as fetch_op
 from nutch_spark.operators import updatedb as update_op
 from tests.helpers import NOW, crawldb_df, datum
@@ -71,7 +71,7 @@ def test_content_joins_success_subset_once(spark):
     urls = [f"http://h{i % 3}.test/p{i}" for i in range(10)]
     fl, pages = _fetchlist(spark, urls), _pages(spark, urls)
     fr = fetch_op.fetch(fl, pages, _empty_robots(spark), None,
-                        CrawlConfig(page_cache_storage="NONE"), NOW)
+                        DEFAULT, NOW)
     for key in ("crawl_fetch", "linked"):
         plan = fr[key]._jdf.queryExecution().executedPlan().toString()
         assert "html" not in plan, key
