@@ -980,12 +980,13 @@ def q_parse_dispatch(spark, sf):
 
 
 def q_parse_dispatch_segment(spark, sf):
-    """parse_segment_dispatch — the mime-routed parse the SHIPPED
-    cycle runs under cfg.parse_mime_dispatch (ParseUtil.java:74-110,
-    bin/crawl:232-236), with the full 3-way sink contract: the html
-    family's parse_text collapses whitespace (DOMContentUtils), the
-    text/plain family decodes verbatim, and unknown mimes reach NO
-    output (ParseSegment.java:100-108 — ParserNotFound → return).
+    """parse_segment over content with a mime_type column — the
+    mime-routed parse the SHIPPED cycle runs whenever the pages carry
+    their Content-Type (ParseUtil.java:74-110, bin/crawl:232-236),
+    with the full 3-way sink contract: the html family's parse_text
+    collapses whitespace (DOMContentUtils), the text/plain family
+    decodes verbatim, and unknown mimes reach NO output
+    (ParseSegment.java:100-108 — ParserNotFound → return).
     Signatures are the raw-byte md5 of the content for both parsed
     families. Feed/zip families are cycle-tested
     (tests/test_parse_dispatch_cycle.py)."""
@@ -1003,7 +1004,7 @@ def q_parse_dispatch_segment(spark, sf):
         F.lit(1.0).alias("score"),
         F.lit(3600).cast("int").alias("fetch_interval"),
         F.lit(None).cast("map<string,string>").alias("metadata"))
-    pr = parse_op.parse_segment_dispatch(content, CFG, CUR_TIME_MS)
+    pr = parse_op.parse_segment(content, CFG, CUR_TIME_MS)
     out = pr["parse_text"].join(
         pr["parse_data"].select("url", "signature"), "url")
     return out.select("url", "text", "signature")

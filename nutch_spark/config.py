@@ -159,13 +159,6 @@ class CrawlConfig:
     # --- partitioning / scale knobs (ours) ---
     num_fetch_partitions: int = 32            # politeness units per round
     partition_seed: int = 0                   # salt for host partitioning
-    # mime-dispatched parse (ParseUtil.java:74-110 via
-    # parse-plugins.xml; bin/crawl:232-236): route each fetched page
-    # to its mimetype's parser (html/feed/zip/text) instead of the
-    # html-only path. Requires a ``mime_type`` column on the pages
-    # table (it rides through fetch's content output). Off by default:
-    # a pure-html corpus pays nothing for the extra family scans.
-    parse_mime_dispatch: bool = False
 
     # --- URL normalizer chains (URLNormalizers.java:96-170) ---
     # default chain (urlnormalizer.order, nutch-default.xml:1040) plus

@@ -3,7 +3,11 @@ invertlinks → dedup]×rounds, with per-round checkpoints and metrics.
 
 Reference: src/bin/crawl:18-279 — inject once, then loop generate
 (-topN, -noFilter), fetch (-noParsing), parse, updatedb, invertlinks,
-dedup; the loop exits when generate yields an empty fetchlist.
+dedup; the loop exits when generate yields an empty fetchlist. The
+parse step is ``parse_segment``, which routes pages to their parser
+family when the pages table carries a ``mime_type`` column
+(ParseUtil via parse-plugins.xml) and parses every page as html when
+it does not.
 
 Spark shape: each stage is a DataFrame program; round boundaries are
 snapshot commits standing in for Iceberg snapshot commits (atomic
@@ -26,11 +30,12 @@ plan over one ``LogicalRDD`` plus committed tables — never over the
 fetch and parse lineage. The operators only build plans; ``run_round``
 alone decides what a round caches and for how long:
 
-- fetch schedule, parse output and (mime dispatch) page content:
+- fetch schedule, parse output and (mime-routed parse) page content:
   persisted before the first write that reads each, so fetch and
   parse compute once; unpersisted right after the message
   checkpoint, their last reader;
-- message checkpoint: released when the round returns.
+- message checkpoint and, with link scoring, the LinkRank caches and
+  checkpoints: released when the round returns, after the commit.
 
 Whether the round returns, stops at an empty fetchlist or raises, the
 session holds no more cached blocks after ``run_round`` than before.
@@ -265,15 +270,13 @@ class CrawlRun:
                      partitions=cfg.num_fetch_partitions)
 
         t0 = time.time()
-        # parse: html-only path by default; mime-dispatched (ParseUtil
-        # via parse-plugins.xml — html/feed/zip/text families) when
-        # configured, for CC-style mixed-mime corpora (bin/crawl:232)
-        if cfg.parse_mime_dispatch:
-            # one traversal of page bytes for all parser families
-            pr = parse_op.parse_segment_dispatch(cache(content), cfg,
-                                                 now_ms)
-        else:
-            pr = parse_op.parse_segment(content, cfg, now_ms)
+        # parse: html-only, or routed per parser family when the pages
+        # carry their Content-Type (ParseUtil via parse-plugins.xml);
+        # routed content is cached so every family reads the page
+        # bytes of one fetch join
+        if parse_op.is_routed(content):
+            content = cache(content)
+        pr = parse_op.parse_segment(content, cfg, now_ms)
         cache(pr["parsed"])
         parse_text = self.store.write(pr["parse_text"],
                                       "segments/parse_text", rnd)
@@ -349,8 +352,10 @@ class CrawlRun:
         if cfg.scoring_filter == "link":
             t0 = time.time()
             raw_edges = edges.select("from_url", "to_url")
-            loops = linkdb_op.find_loops(raw_edges, depth=2)
-            ranks = linkdb_op.linkrank(raw_edges, loops=loops)
+            # the ranks feed the crawldb write: their caches are
+            # released with the round's, after the commit
+            loops = linkdb_op.find_loops(raw_edges, depth=2, held=held)
+            ranks = linkdb_op.linkrank(raw_edges, loops=loops, held=held)
             nodedb = ranks  # (url, score) is all score_updater needs
             new_db = linkdb_op.score_updater(new_db, nodedb)
             self._metric(rnd, "linkrank", rows=ranks.count(),

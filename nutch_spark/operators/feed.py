@@ -50,8 +50,8 @@ def parse_feeds(blobs: DataFrame, cfg: CrawlConfig,
     carrying addFields' parse-meta. Undecodable blobs yield no rows
     (the reference's empty ParseResult, FeedParser.java:118-125).
     ``keep_source=True`` adds the originating blob's ``source`` url —
-    parse_segment_dispatch joins the fetch datum's attributes back on
-    it (ParseSegment.map shares one Content across all sub-parses).
+    the routed parse_segment joins the fetch datum's attributes back
+    on it (ParseSegment.map shares one Content across all sub-parses).
     """
     from collections.abc import Iterator
 

@@ -285,7 +285,7 @@ def outputs_from_schedule(scheduled: DataFrame, pages: DataFrame,
     # pages side never broadcasts), one traversal of page bytes per
     # round
     # mime_type (the protocol Content-Type) rides through when the
-    # pages table carries it — parse_segment_dispatch routes on it
+    # pages table carries it — parse_segment then routes on it
     extra = [c for c in ("mime_type",) if c in pages.columns]
     page_body = pages.select("url", "html", "text", "lang", *extra) \
         .hint("shuffle_merge")

@@ -16,10 +16,31 @@ db.max.inlinks). One shuffle on to_url with partial aggregation.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..config import CrawlConfig
 from ..functions.urls import host_col, spark_udfs
+
+
+def _cached(df: DataFrame, held: ExitStack | None) -> DataFrame:
+    """``df`` cached; ``held``, when given, unpersists it on close."""
+    df = df.cache()
+    if held is not None:
+        held.callback(df.unpersist)
+    return df
+
+
+def _checkpointed(df: DataFrame, held: ExitStack | None) -> DataFrame:
+    """``df`` behind a lazy local checkpoint, which persists its RDD as
+    soon as it is taken; ``held``, when given, unpersists it on
+    close."""
+    df = df.localCheckpoint(eager=False)
+    if held is not None:
+        held.callback(df._jdf.queryExecution().logical().rdd().unpersist,
+                      True)
+    return df
 
 
 def invert_links(edges: DataFrame, cfg: CrawlConfig) -> DataFrame:
@@ -122,7 +143,8 @@ def webgraph(edges: DataFrame, scores: DataFrame | None,
 
 
 def find_loops(edges: DataFrame, depth: int = 2,
-               max_routes_per_node: int | None = 100_000) -> DataFrame:
+               max_routes_per_node: int | None = 100_000,
+               held: ExitStack | None = None) -> DataFrame:
     """Loops job (Loops.java:186-388): identify link cycles up to
     ``link.loops.depth`` (default 2) hops so LinkRank can exclude them.
 
@@ -149,6 +171,9 @@ def find_loops(edges: DataFrame, depth: int = 2,
     The cap binds only on hubs past the threshold — at the default
     100k it is invisible on the test corpus (loops output unchanged)
     and exists purely as the 100×-scale safety valve.
+
+    Each pass's routes are local checkpoints; ``held`` (an ExitStack)
+    releases them on close, else they stay for the session.
 
     Returns (url, loop_set array<string>)."""
     # one exchange instead of two for the init: hash-partitioning on
@@ -192,9 +217,9 @@ def find_loops(edges: DataFrame, depth: int = 2,
                             F.col("outs"),
                             F.array().cast("array<string>")),
                             F.col("looking_for")))
-        found_i = j.where(F.col("_found")) \
-            .select("looking_for", "first_hop").distinct() \
-            .localCheckpoint(eager=False)
+        found_i = _checkpointed(
+            j.where(F.col("_found")).select("looking_for", "first_hop")
+             .distinct(), held)
         found_parts.append(found_i)
         if not last:
             # prune before the explode: a route only exists to add its
@@ -204,13 +229,12 @@ def find_loops(edges: DataFrame, depth: int = 2,
             # the finalizer dedups pairs anyway). On dense graphs this
             # removes most of the outdeg^depth blow-up the reference
             # warns about.
-            routes = (j.where(~F.col("_found"))
-                      .join(found_i, ["looking_for", "first_hop"],
-                            "left_anti")
-                      .select(F.explode("outs").alias("at"),
-                              "looking_for", "first_hop")
-                      .distinct()
-                      .localCheckpoint(eager=False))
+            routes = _checkpointed(
+                j.where(~F.col("_found"))
+                 .join(found_i, ["looking_for", "first_hop"], "left_anti")
+                 .select(F.explode("outs").alias("at"), "looking_for",
+                         "first_hop")
+                 .distinct(), held)
     found = found_parts[0]
     for p in found_parts[1:]:
         found = found.unionByName(p)
@@ -222,7 +246,8 @@ def find_loops(edges: DataFrame, depth: int = 2,
 def linkrank(edges: DataFrame, iterations: int = 10,
              damping: float = 0.85, loops: DataFrame | None = None,
              limit_pages: bool = True,
-             limit_domains: bool = True) -> DataFrame:
+             limit_domains: bool = True,
+             held: ExitStack | None = None) -> DataFrame:
     """LinkRank (LinkRank.java): PageRank variant — initial score 1.0
     (line 342), per-iteration score = (1−d) + d·Σ inlink share with
     d=0.85 (lines 486-487, 560-561), dangling handling by rank-one
@@ -241,13 +266,15 @@ def linkrank(edges: DataFrame, iterations: int = 10,
 
     Iterative DataFrame loop with localCheckpoint to truncate lineage —
     each iteration is one shuffle on to_url (plus one per enabled
-    dedup key)."""
+    dedup key). ``held`` (an ExitStack) releases the node and edge
+    caches and the per-iteration checkpoints on close, else they stay
+    for the session."""
     e = edges.select("from_url", "to_url").distinct()
     # the node universe is the full webgraph — loop exclusion drops
     # *edges* from inversion, never nodes (the reference's nodedb is
     # untouched by Loops; an all-loop node still scores rank-one)
-    nodes = (e.select(F.col("from_url").alias("url"))
-             .union(e.select("to_url")).distinct().cache())
+    nodes = _cached(e.select(F.col("from_url").alias("url"))
+                    .union(e.select("to_url")).distinct(), held)
     if loops is not None:
         # remove edges contained in the source's loop set
         lo = loops.select(F.col("url").alias("from_url"),
@@ -269,7 +296,7 @@ def linkrank(edges: DataFrame, iterations: int = 10,
     # join (ranks) + the dedup/sum aggregations, instead of paying
     # the outdeg join again every iteration
     outdeg = e.groupBy("from_url").agg(F.count("*").alias("deg"))
-    e = e.join(outdeg, "from_url").cache()
+    e = _cached(e.join(outdeg, "from_url"), held)
     ranks = nodes.withColumn("score", F.lit(1.0))
     rank_one = 1.0 - damping
     for _ in range(iterations):
@@ -299,7 +326,7 @@ def linkrank(edges: DataFrame, iterations: int = 10,
                          (F.lit(rank_one)
                           + F.lit(damping)
                           * F.coalesce("s", F.lit(0.0))).alias("score")))
-        ranks = ranks.localCheckpoint(eager=False)
+        ranks = _checkpointed(ranks, held)
     return ranks
 
 

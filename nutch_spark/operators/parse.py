@@ -6,6 +6,8 @@ parse_text / parse_data / crawl_parse: signature datum, parse_meta
 datum, outlink ``linked`` datums with OPIC score distribution, meta-
 refresh redirect with ``_repr_``), HtmlParser.java + DOMContentUtils
 (the text/title/outlink algorithms — functions/htmlparse.py).
+Content that carries its Content-Type is routed per parser family,
+as ParseUtil does through parse-plugins.xml (ParseUtil.java:74-110).
 
 Spark shape: one Arrow-batched pandas UDF does the DOM work
 (``html binary → struct(text, title, outlinks, redirect)``), everything
@@ -24,8 +26,12 @@ page before the shuffle to updatedb.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import reduce
+from typing import NamedTuple
+
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType, StringType, StructField, StructType,
@@ -41,6 +47,11 @@ from ..schema import (
     FETCH_SUCCESS, META_REPR_URL, OUTLINK, STATUS_LINKED,
     STATUS_PARSE_META, STATUS_SIGNATURE,
 )
+from . import archive as archive_op
+from . import feed as feed_op
+from . import msoffice as ms_op
+from . import pdf as pdf_op
+from . import swf as swf_op
 
 PARSE_UDF_SCHEMA = StructType([
     StructField("text", StringType(), True),
@@ -66,45 +77,262 @@ def parse_udf():
     return _parse
 
 
+# nullable-field DDL (not ArrayType(OUTLINK)): casting a parsed array
+# to a NOT NULL struct field is an AnalysisException
+_LINKS = "array<struct<to_url:string,anchor:string>>"
+_ATTRS = ("fetch_time", "score", "fetch_interval", "metadata")
+# the protocol Content-Type, carried through fetch's content frame when
+# the pages table has it
+MIME_COL = "mime_type"
+
+
+def _struct_p(text: Column, title: Column, outlinks: Column,
+              redirect: Column) -> Column:
+    return F.struct(text.alias("text"), title.alias("title"),
+                    outlinks.alias("outlinks"), redirect.alias("redirect"))
+
+
+def _html_p() -> Column:
+    return parse_udf()(F.col("html"), F.col("url"))
+
+
+def _plain_p() -> Column:
+    return _struct_p(F.decode("html", "UTF-8"), F.lit(""),
+                     F.array().cast(_LINKS), F.lit(None).cast("string"))
+
+
+def _feed_rows(blobs: DataFrame, cfg: CrawlConfig) -> DataFrame:
+    # parse-feed: one non-canonical sub-parse per entry (kind 'entry')
+    # plus the canonical feed row, all keyed back to the feed's content
+    return (feed_op.parse_feeds(blobs, cfg, url_col="url",
+                                keep_source=True)
+            .withColumn("status", F.lit("success")))
+
+
+def _doc_rows(parse_fn):
+    # a one-canonical-parse-per-document kernel, keyed at its own url
+    def rows(blobs: DataFrame, cfg: CrawlConfig) -> DataFrame:
+        return (parse_fn(blobs, cfg, length_col=None)
+                .withColumns({"source": F.col("url"),
+                              "kind": F.lit(None).cast("string")}))
+    return rows
+
+
+class Family(NamedTuple):
+    """One parse-plugins.xml route: the mimetypes ParserFactory maps to
+    a parser plugin, and that plugin's kernel. An in-row family builds
+    the parse struct ``_p`` as a column of the content row (``row``).
+    A kernel family maps ``(url, content)`` blobs to parse rows
+    ``(source, url, status, kind, ...)``: ``source`` is the content's
+    url, ``kind`` is ``'entry'`` on a non-canonical sub-parse, and
+    ``text``/``title``/``outlinks`` name the kernel's columns (None: it
+    yields none)."""
+    parser: str
+    mimes: tuple[str, ...]
+    row: Callable[[], Column] | None = None
+    kernel: Callable[[DataFrame, CrawlConfig], DataFrame] | None = None
+    text: str | None = "text"
+    title: str | None = "title"
+    outlinks: str | None = None
+
+
+# conf/parse-plugins.xml: the reference's ParserFactory resolves the
+# ordered plugin list per content-type, ParseUtil.java:74-110 tries them
+# until one succeeds. Implemented here: parse-html, text-plain (the
+# trivial decode of parse-tika's text/* path), parse-zip, feed,
+# parse-swf and parse-tika's document/image paths (each codec
+# golden-verified against the plugin's own sample files; swf yields
+# getURL outlinks, pdf/oo/rtf/msword text only, images an empty-text
+# metadata parse).
+PARSE_FAMILIES = (
+    Family("parse-html", ("text/html", "application/xhtml+xml"),
+           row=_html_p),
+    Family("text-plain", ("text/plain",), row=_plain_p),
+    Family("parse-zip", ("application/zip",),
+           kernel=_doc_rows(archive_op.parse_zips), outlinks="outlinks"),
+    Family("feed", ("application/rss+xml", "application/atom+xml"),
+           kernel=_feed_rows),
+    Family("parse-swf", ("application/x-shockwave-flash",),
+           kernel=_doc_rows(swf_op.parse_swfs), outlinks="outlinks"),
+    Family("parse-pdf", ("application/pdf",),
+           kernel=_doc_rows(pdf_op.parse_pdfs)),
+    Family("parse-oo", ("application/vnd.oasis.opendocument.text",
+                        "application/vnd.sun.xml.writer"),
+           kernel=_doc_rows(ms_op.parse_oo)),
+    Family("parse-rtf", ("application/rtf", "text/rtf"),
+           kernel=_doc_rows(ms_op.parse_rtf)),
+    Family("parse-msword", ("application/msword",),
+           kernel=_doc_rows(ms_op.parse_msword), title=None),
+    Family("parse-image", ("image/gif", "image/png", "image/jpeg",
+                           "image/bmp"),
+           kernel=_doc_rows(ms_op.parse_images), text=None, title=None),
+)
+
+
+def is_routed(content: DataFrame) -> bool:
+    """Whether :func:`parse_segment` routes ``content`` by mimetype:
+    only when it carries the pages' Content-Type column."""
+    return MIME_COL in content.columns
+
+
+def _mime(content: DataFrame, mime_col: str = MIME_COL) -> Column:
+    return F.lower(F.coalesce(F.col(mime_col), F.lit("")))
+
+
+def _blobs(content: DataFrame) -> DataFrame:
+    return content.select("url", F.col("html").alias("content"))
+
+
+def _in_row(content: DataFrame, row: Callable[[], Column],
+            cfg: CrawlConfig, *extra: Column) -> DataFrame:
+    return (content
+            .withColumn("_p", row())
+            .withColumn(
+                "signature",
+                signature_col(cfg.signature_kind, F.col("html"),
+                              F.col("_p.text"), F.col("url"),
+                              min_token_len=cfg.text_profile_min_token_len,
+                              quant_rate=cfg.text_profile_quant_rate))
+            # slim projection BEFORE the caller's persist of
+            # ``parsed``: html/text/lang are consumed entirely by the
+            # UDF + signature above, so the round cache holds only
+            # parse output — page bytes never sit in executor memory
+            # past this point. On a memory-bandwidth-bound host this
+            # is the difference between the parse stage scaling with
+            # cores and hitting the bus ceiling (BENCH.md hardware
+            # canaries).
+            .select("url", *_ATTRS, "_p", "signature", *extra))
+
+
+def _sig_from_parent_md5(kind: str, text_col, parent_md5_col,
+                         min_token_len: int, quant_rate: float):
+    """signature_col with the raw-bytes branch replaced by a
+    precomputed md5 hex of the PARENT content: ParseSegment.java
+    130-133 calculates every sub-parse's signature from the one shared
+    Content, so MD5Signature is identical across a feed's sub-parses —
+    joining the 32-char hash instead of the blob keeps page bytes off
+    the parse-row path."""
+    from ..functions.signatures import text_profile_udf
+
+    if kind == "md5":
+        return parent_md5_col
+    if kind == "text_md5":
+        return F.when(text_col.isNotNull(),
+                      F.md5(F.encode(text_col, "UTF-8"))) \
+            .otherwise(parent_md5_col)
+    if kind == "text_profile":
+        return F.coalesce(
+            text_profile_udf(min_token_len, quant_rate)(text_col),
+            parent_md5_col)
+    raise ValueError(f"unknown signature kind: {kind}")
+
+
+def _kernel_parsed(content: DataFrame, fam: Family,
+                   cfg: CrawlConfig) -> DataFrame:
+    # parse rows join back to their content's attrs on ``source``; the
+    # page bytes stay out of the join (only the 32-char md5 rides
+    # along for the signature). Failed and truncated parses are
+    # dropped, like a ParseException in ParseSegment.map
+    rows = fam.kernel(_blobs(content), cfg)
+    attrs = content.select(F.col("url").alias("source"), *_ATTRS,
+                           F.md5("html").alias("_bsig"))
+    text = F.col(fam.text) if fam.text else F.lit("")
+    title = (F.coalesce(F.col(fam.title), F.lit("")) if fam.title
+             else F.lit(""))
+    links = (F.coalesce(F.col(fam.outlinks),
+                        F.array().cast(_LINKS)).cast(_LINKS)
+             if fam.outlinks else F.array().cast(_LINKS))
+    return (rows.where(F.col("status") == "success").join(attrs, "source")
+            .withColumn("_p", _struct_p(text, title, links,
+                                        F.lit(None).cast("string")))
+            .withColumn("signature",
+                        _sig_from_parent_md5(
+                            cfg.signature_kind, text, F.col("_bsig"),
+                            cfg.text_profile_min_token_len,
+                            cfg.text_profile_quant_rate))
+            .select("url", *_ATTRS, "_p", "signature",
+                    F.col("kind").alias("_kind")))
+
+
 def parse_segment(content: DataFrame, cfg: CrawlConfig,
                   now_ms: int) -> dict[str, DataFrame]:
-    """Parse fetched content. Input = fetch()'s ``content`` frame
-    (url, html, text, lang, fetch_time, score, fetch_interval,
-    metadata). Returns:
+    """ParseSegment: parse fetched content. Input = fetch()'s
+    ``content`` frame (url, html, text, lang, fetch_time, score,
+    fetch_interval, metadata[, mime_type]). Returns:
 
     - ``parse_text``: url, text  (byte-identity target);
     - ``parse_data``: url, title, outlinks, signature;
     - ``crawl_parse``: CRAWLDB-schema message rows (signature +
-      linked outlinks + meta-refresh redirects [+ parse_meta]).
-    """
-    parsed = (content
-              .withColumn("_p", parse_udf()(F.col("html"), F.col("url")))
-              .withColumn(
-                  "signature",
-                  signature_col(cfg.signature_kind, F.col("html"),
-                                F.col("_p.text"),
-                                F.col("url"),
-                                min_token_len=cfg.text_profile_min_token_len,
-                                quant_rate=cfg.text_profile_quant_rate))
-              # slim projection BEFORE the caller's persist of
-              # ``parsed``: html/text/lang are consumed entirely by the
-              # UDF + signature above, so the round cache holds only
-              # parse output — page bytes never sit in executor memory
-              # past this point. On a memory-bandwidth-bound host this
-              # is the difference between the parse stage scaling with
-              # cores and hitting the bus ceiling (BENCH.md hardware
-              # canaries).
-              .select("url", "fetch_time", "score", "fetch_interval",
-                      "metadata", "_p", "signature"))
-    return _parse_outputs(parsed, cfg, now_ms)
+      linked outlinks + meta-refresh redirects [+ parse_meta]);
+    - ``parsed``: the frame every output reads. A caller that writes
+      more than one output persists it first, or each output re-runs
+      the parsers.
+
+    Without a ``mime_type`` column every row is html. With one, each
+    row goes to its family in :data:`PARSE_FAMILIES`
+    (ParseUtil.java:74-110):
+
+    - html → the HtmlParser UDF path; text/plain → trivial decode;
+    - feed → one NON-canonical sub-parse per entry — its own
+      parse_text/parse_data/signature rows plus a ``fetch_success``
+      crawl_parse datum carrying the parent's fetch time
+      (ParseOutputFormat.java:285-297), which is how discovered
+      entries enter the crawldb — and one canonical feed-level parse
+      with ``Outlink[0]`` (FeedParser.java:143-148);
+    - zip, swf, pdf, oo, rtf, msword, image → one canonical parse per
+      document; failed and truncated documents are dropped;
+    - unknown mime → dropped entirely (ParseSegment.java:100-108:
+      ParserNotFound → ParseException → ``return`` — the row reaches
+      none of the outputs).
+
+    Spark shape: one filtered scan per family, since each family is a
+    different kernel (html pandas UDF, text/plain a column decode, the
+    rest mapInPandas). The
+    caller persists a routed ``content`` (``is_routed``) so the fetch
+    join runs once and each family reads the cached bytes
+    (``CrawlRun.run_round`` does). All families union into ONE slim
+    parsed frame with no page bytes, so the ParseOutputFormat program
+    below exists once in the plan."""
+    if not is_routed(content):
+        return _parse_outputs(_in_row(content, _html_p, cfg), cfg, now_ms)
+
+    mime = _mime(content)
+    frames = []
+    for fam in PARSE_FAMILIES:
+        fam_content = content.where(mime.isin(*fam.mimes))
+        if fam.row is not None:
+            frames.append(_in_row(fam_content, fam.row, cfg,
+                                  F.lit(None).cast("string")
+                                  .alias("_kind")))
+        else:
+            frames.append(_kernel_parsed(fam_content, fam, cfg))
+    out = _parse_outputs(reduce(DataFrame.unionByName, frames), cfg,
+                         now_ms)
+
+    # non-canonical sub-parses: the fetch_success datum
+    # (ParseOutputFormat.java:285-297 — ``new CrawlDatum()`` defaults:
+    # score 0.0, interval 0; fetch time = parent's). Derived from the
+    # shared parsed frame, so with it persisted the feed kernel runs
+    # once.
+    sub = out["parsed"].where(F.col("_kind") == "entry").select(
+        "url", F.lit(FETCH_SUCCESS).alias("status"),
+        F.col("fetch_time").cast("long").alias("fetch_time"),
+        F.lit(0).cast("int").alias("retries"),
+        F.lit(0).cast("int").alias("fetch_interval"),
+        F.lit(0.0).alias("score"),
+        F.lit(None).cast("string").alias("signature"),
+        F.lit(0).cast("long").alias("modified_time"),
+        F.create_map().cast("map<string,string>").alias("metadata"))
+    out["crawl_parse"] = out["crawl_parse"].unionByName(sub)
+    return out
 
 
 def _parse_outputs(parsed: DataFrame, cfg: CrawlConfig,
                    now_ms: int) -> dict[str, DataFrame]:
-    """ParseOutputFormat half, shared by :func:`parse_segment` (html
-    only) and :func:`parse_segment_dispatch` (mime-routed). Input is
-    the slim parsed frame ``(url, fetch_time, score, fetch_interval,
-    metadata, _p, signature)`` — page bytes already dropped."""
+    """ParseOutputFormat half of :func:`parse_segment`, for html-only
+    and routed content alike. Input is the slim parsed frame ``(url,
+    fetch_time, score, fetch_interval, metadata, _p, signature[,
+    _kind])`` — page bytes already dropped."""
     parse_text = parsed.select("url", F.col("_p.text").alias("text"))
     parse_data = parsed.select(
         "url", F.col("_p.title").alias("title"),
@@ -272,371 +500,47 @@ def outlink_edges(parse_data: DataFrame,
     return df
 
 
-# parse-plugins.xml mimetype -> parser routing (conf/parse-plugins.xml;
-# the reference's ParserFactory resolves the ordered plugin list per
-# content-type, ParseUtil.java:74-110 tries them until one succeeds).
-# Parsers implemented here: parse-html, feed, parse-zip, text-plain
-# (parse-tika's text extraction for text/* is the trivial decode).
-PARSE_ROUTES = {
-    "html": ("text/html", "application/xhtml+xml"),
-    "feed": ("application/rss+xml", "application/atom+xml"),
-    "zip": ("application/zip",),
-    "swf": ("application/x-shockwave-flash",),
-    "pdf": ("application/pdf",),
-    "oo": ("application/vnd.oasis.opendocument.text",
-           "application/vnd.sun.xml.writer"),
-    "rtf": ("application/rtf", "text/rtf"),
-    "msword": ("application/msword",),
-    "image": ("image/gif", "image/png", "image/jpeg", "image/bmp"),
-    "text": ("text/plain",),
-}
-
-
 def parse_dispatch(content: DataFrame, cfg: CrawlConfig, now_ms: int,
-                   mime_col: str = "mime_type") -> DataFrame:
-    """ParseUtil/ParserFactory analog: route content rows to the
-    parser registered for their mimetype (conf/parse-plugins.xml,
-    ParseUtil.java:74-110) and union the results on a common summary
-    schema ``(url, parser, status, title, text, n_outlinks)``.
-
-    - text/html, application/xhtml+xml → the HtmlParser path
-      (byte-parity DOMContentUtils extraction);
-    - application/rss+xml, application/atom+xml → the feed plugin
-      (one row per entry + one per feed, like its ParseResult);
-    - application/zip → the parse-zip container walk;
-    - application/x-shockwave-flash → the parse-swf tag walk
-      (golden-verified SWF codec);
-    - text/plain → trivial decode (title '', no outlinks);
-    - anything else → one ``failed_parser_not_found`` row
-      (ParserNotFound, ParseUtil.java:80-86).
-
-    Spark shape: one filtered scan per registered parser family (the
-    mime predicate pushes to the scan; each family's parser is a
-    different kernel — html UDF, feed/zip/swf mapInPandas — so a
-    single-pass dispatch is not expressible). Unknown-mime rows cost a
-    final slim scan that never touches the page bytes."""
-    mime = F.lower(F.coalesce(F.col(mime_col), F.lit("")))
-
+                   mime_col: str = MIME_COL) -> DataFrame:
+    """ParseUtil/ParserFactory analog as a summary: route content rows
+    through :data:`PARSE_FAMILIES` by their mimetype
+    (conf/parse-plugins.xml, ParseUtil.java:74-110) and union the
+    results on ``(url, parser, status, title, text, n_outlinks)``.
+    Unlike :func:`parse_segment` it keeps every kernel row, failed
+    ones included with their status, and gives an unknown mimetype one
+    ``failed_parser_not_found`` row (ParserNotFound,
+    ParseUtil.java:80-86). Unknown-mime rows cost a final slim scan
+    that never touches the page bytes."""
+    mime = _mime(content, mime_col)
     outs = []
-    html = content.where(mime.isin(*PARSE_ROUTES["html"]))
-    p = html.withColumn("_p", parse_udf()(F.col("html"), F.col("url")))
-    outs.append(p.select(
-        "url", F.lit("parse-html").alias("parser"),
-        F.lit("success").alias("status"),
-        F.col("_p.title").alias("title"),
-        F.col("_p.text").alias("text"),
-        F.size(F.coalesce(F.col("_p.outlinks"), F.array()))
-         .alias("n_outlinks")))
+    for fam in PARSE_FAMILIES:
+        fam_content = content.where(mime.isin(*fam.mimes))
+        parser = F.lit(fam.parser).alias("parser")
+        if fam.row is not None:
+            outs.append(fam_content.withColumn("_p", fam.row()).select(
+                "url", parser, F.lit("success").alias("status"),
+                F.col("_p.title").alias("title"),
+                F.col("_p.text").alias("text"),
+                F.size(F.coalesce(F.col("_p.outlinks"), F.array()))
+                 .alias("n_outlinks")))
+            continue
+        rows = fam.kernel(_blobs(fam_content), cfg)
+        outs.append(rows.select(
+            "url", parser, "status",
+            (F.col(fam.title) if fam.title else F.lit("")).alias("title"),
+            (F.col(fam.text) if fam.text else F.lit("")).alias("text"),
+            (F.size(F.coalesce(F.col(fam.outlinks), F.array()))
+             if fam.outlinks else F.lit(0).cast("int"))
+            .alias("n_outlinks")))
 
-    from . import feed as feed_op
-    feeds = (content.where(mime.isin(*PARSE_ROUTES["feed"]))
-             .select(F.col("url").alias("feed_url"),
-                     F.col("html").alias("content")))
-    fp = feed_op.parse_feeds(feeds, cfg)
-    outs.append(fp.select(
-        F.col("url"), F.lit("feed").alias("parser"),
-        F.lit("success").alias("status"),
-        "title", "text",
-        F.lit(0).cast("int").alias("n_outlinks")))
-
-    from . import archive as archive_op
-    zips = (content.where(mime.isin(*PARSE_ROUTES["zip"]))
-            .select("url", F.col("html").alias("content")))
-    zp = archive_op.parse_zips(zips, cfg, length_col=None)
-    outs.append(zp.select(
-        "url", F.lit("parse-zip").alias("parser"), "status", "title",
-        "text",
-        F.size(F.coalesce(F.col("outlinks"), F.array()))
-         .alias("n_outlinks")))
-
-    from . import swf as swf_op
-    swfs = (content.where(mime.isin(*PARSE_ROUTES["swf"]))
-            .select("url", F.col("html").alias("content")))
-    sp = swf_op.parse_swfs(swfs, cfg, length_col=None)
-    outs.append(sp.select(
-        "url", F.lit("parse-swf").alias("parser"), "status", "title",
-        "text",
-        F.size(F.coalesce(F.col("outlinks"), F.array()))
-         .alias("n_outlinks")))
-
-    from . import pdf as pdf_op
-    pdfs = (content.where(mime.isin(*PARSE_ROUTES["pdf"]))
-            .select("url", F.col("html").alias("content")))
-    pp = pdf_op.parse_pdfs(pdfs, cfg, length_col=None)
-    outs.append(pp.select(
-        "url", F.lit("parse-pdf").alias("parser"), "status", "title",
-        "text", F.lit(0).cast("int").alias("n_outlinks")))
-
-    # parse-tika document/image paths: OO, RTF, Word-97, image
-    # metadata (each codec golden-verified against the plugin's own
-    # sample files; none yields outlinks on the Tika path)
-    from . import msoffice as ms_op
-    oos = (content.where(mime.isin(*PARSE_ROUTES["oo"]))
-           .select("url", F.col("html").alias("content")))
-    op = ms_op.parse_oo(oos, cfg, length_col=None)
-    outs.append(op.select(
-        "url", F.lit("parse-oo").alias("parser"), "status", "title",
-        "text", F.lit(0).cast("int").alias("n_outlinks")))
-
-    rtfs = (content.where(mime.isin(*PARSE_ROUTES["rtf"]))
-            .select("url", F.col("html").alias("content")))
-    rp = ms_op.parse_rtf(rtfs, cfg, length_col=None)
-    outs.append(rp.select(
-        "url", F.lit("parse-rtf").alias("parser"), "status", "title",
-        "text", F.lit(0).cast("int").alias("n_outlinks")))
-
-    docs_ = (content.where(mime.isin(*PARSE_ROUTES["msword"]))
-             .select("url", F.col("html").alias("content")))
-    dp = ms_op.parse_msword(docs_, cfg, length_col=None)
-    outs.append(dp.select(
-        "url", F.lit("parse-msword").alias("parser"), "status",
-        F.lit("").alias("title"), "text",
-        F.lit(0).cast("int").alias("n_outlinks")))
-
-    imgs = (content.where(mime.isin(*PARSE_ROUTES["image"]))
-            .select("url", F.col("html").alias("content")))
-    ip = ms_op.parse_images(imgs, cfg, length_col=None)
-    outs.append(ip.select(
-        "url", F.lit("parse-image").alias("parser"), "status",
-        F.lit("").alias("title"), F.lit("").alias("text"),
-        F.lit(0).cast("int").alias("n_outlinks")))
-
-    outs.append(content.where(mime.isin(*PARSE_ROUTES["text"])).select(
-        "url", F.lit("text-plain").alias("parser"),
-        F.lit("success").alias("status"),
-        F.lit("").alias("title"),
-        F.decode(F.col("html"), "UTF-8").alias("text"),
-        F.lit(0).cast("int").alias("n_outlinks")))
-
-    known = [m for ms in PARSE_ROUTES.values() for m in ms]
+    known = [m for fam in PARSE_FAMILIES for m in fam.mimes]
     outs.append(content.where(~mime.isin(*known)).select(
         "url", F.lit(None).cast("string").alias("parser"),
         F.lit("failed_parser_not_found").alias("status"),
         F.lit(None).cast("string").alias("title"),
         F.lit(None).cast("string").alias("text"),
         F.lit(0).cast("int").alias("n_outlinks")))
-
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
-
-
-def _sig_from_parent_md5(kind: str, text_col, parent_md5_col,
-                         min_token_len: int, quant_rate: float):
-    """signature_col with the raw-bytes branch replaced by a
-    precomputed md5 hex of the PARENT content: ParseSegment.java
-    130-133 calculates every sub-parse's signature from the one shared
-    Content, so MD5Signature is identical across a feed's sub-parses —
-    joining the 32-char hash instead of the blob keeps page bytes off
-    the parse-row path."""
-    from ..functions.signatures import text_profile_udf
-
-    if kind == "md5":
-        return parent_md5_col
-    if kind == "text_md5":
-        return F.when(text_col.isNotNull(),
-                      F.md5(F.encode(text_col, "UTF-8"))) \
-            .otherwise(parent_md5_col)
-    if kind == "text_profile":
-        return F.coalesce(
-            text_profile_udf(min_token_len, quant_rate)(text_col),
-            parent_md5_col)
-    raise ValueError(f"unknown signature kind: {kind}")
-
-
-def parse_segment_dispatch(content: DataFrame, cfg: CrawlConfig,
-                           now_ms: int,
-                           mime_col: str = "mime_type"
-                           ) -> dict[str, DataFrame]:
-    """ParseSegment with ParseUtil mime dispatch — the production
-    parse for a mixed-mime corpus (ParseUtil.java:74-110,
-    conf/parse-plugins.xml, wired per bin/crawl:232-236). Same output
-    contract as :func:`parse_segment` (parse_text / parse_data /
-    crawl_parse / parsed), with content routed by ``mime_col``:
-
-    - html family → the HtmlParser UDF path (identical to
-      parse_segment);
-    - feed family → parse-feed: one NON-canonical sub-parse per entry
-      — its own parse_text/parse_data/signature rows plus a
-      ``fetch_success`` crawl_parse datum carrying the parent's fetch
-      time (ParseOutputFormat.java:285-297), which is how discovered
-      entries enter the crawldb — and one canonical feed-level parse
-      with ``Outlink[0]`` (FeedParser.java:143-148);
-    - zip → parse-zip: one canonical parse per archive (combined text
-      + accumulated outlinks, ZipParser.java); ``failed_truncated``
-      archives are dropped;
-    - text/plain → trivial decode, no outlinks;
-    - unknown mime → dropped entirely (ParseSegment.java:100-108:
-      ParserNotFound → ParseException → ``return`` — the row reaches
-      none of the three outputs).
-
-    Spark shape: one filtered scan per parser family (each family is a
-    different kernel — html pandas UDF, feed/zip mapInPandas — so a
-    single-pass dispatch would force all parsing into one Python
-    kernel and off the vectorized html path). To keep the round at ONE
-    traversal of page bytes, the caller persists ``content`` before
-    this call (``CrawlRun.run_round`` does) — the fetch join runs once
-    and each family reads the cached bytes; uncached, each family
-    branch recomputes its (mime-pruned) scan, which is the right trade
-    only when the pages table is clustered by mime so row-group
-    pruning is real. All families then union into ONE slim parsed
-    frame (no page bytes) so the downstream ParseOutputFormat program
-    — signature / parse_meta / linked / meta-refresh emissions —
-    exists once in the plan, exactly as in parse_segment."""
-    from . import archive as archive_op
-    from . import feed as feed_op
-
-    mime = F.lower(F.coalesce(F.col(mime_col), F.lit("")))
-    attrs = ["fetch_time", "score", "fetch_interval", "metadata"]
-    # nullable-field DDL (not ArrayType(OUTLINK)): casting a parsed
-    # array to a NOT NULL struct field is an AnalysisException
-    links_t = "array<struct<to_url:string,anchor:string>>"
-    null_s = F.lit(None).cast("string")
-    mtl, qr = cfg.text_profile_min_token_len, cfg.text_profile_quant_rate
-    slim = ["url", *attrs, "_p", "signature", "_kind"]
-    canonical = F.lit(None).cast("string").alias("_kind")
-
-    def struct_p(text, title, outlinks, redirect):
-        return F.struct(text.alias("text"), title.alias("title"),
-                        outlinks.alias("outlinks"),
-                        redirect.alias("redirect"))
-
-    frames = []
-    html = content.where(mime.isin(*PARSE_ROUTES["html"]))
-    frames.append(
-        html.withColumn("_p", parse_udf()(F.col("html"), F.col("url")))
-            .withColumn(
-                "signature",
-                signature_col(cfg.signature_kind, F.col("html"),
-                              F.col("_p.text"), F.col("url"),
-                              min_token_len=mtl, quant_rate=qr))
-            .select(*slim[:-1], canonical))
-
-    txt = (content.where(mime.isin(*PARSE_ROUTES["text"]))
-           .withColumn("_t", F.decode("html", "UTF-8")))
-    frames.append(
-        txt.withColumn("_p", struct_p(F.col("_t"), F.lit(""),
-                                      F.array().cast(links_t), null_s))
-           .withColumn(
-               "signature",
-               signature_col(cfg.signature_kind, F.col("html"),
-                             F.col("_t"), F.col("url"),
-                             min_token_len=mtl, quant_rate=qr))
-           .select(*slim[:-1], canonical))
-
-    # zip: the archive walk emits one row per archive keyed at the
-    # archive url — attrs join back 1:1 on url, bytes stay out of the
-    # join (only the 32-char md5 rides along for the signature)
-    zfam = content.where(mime.isin(*PARSE_ROUTES["zip"]))
-    zp = archive_op.parse_zips(
-        zfam.select("url", F.col("html").alias("content")), cfg,
-        length_col=None)
-    zslim = zfam.select("url", *attrs, F.md5("html").alias("_bsig"))
-    zj = zp.where(F.col("status") == "success").join(zslim, "url")
-    frames.append(
-        zj.withColumn("_p", struct_p(F.col("text"), F.col("title"),
-                                     F.col("outlinks"), null_s))
-          .withColumn("signature",
-                      _sig_from_parent_md5(cfg.signature_kind,
-                                           F.col("text"),
-                                           F.col("_bsig"), mtl, qr))
-          .select(*slim[:-1], canonical))
-
-    # feed: sub-parse rows keyed at entry urls + one canonical row at
-    # the feed url; the parent fetch datum's attrs join back on the
-    # source feed url (ParseSegment shares one Content per sub-parse)
-    ffam = content.where(mime.isin(*PARSE_ROUTES["feed"]))
-    fp = feed_op.parse_feeds(
-        ffam.select(F.col("url").alias("feed_url"),
-                    F.col("html").alias("content")),
-        cfg, keep_source=True)
-    fslim = ffam.select(F.col("url").alias("source"), *attrs,
-                        F.md5("html").alias("_bsig"))
-    fj = fp.join(fslim, "source")
-    frames.append(
-        fj.withColumn("_p", struct_p(F.col("text"),
-                                     F.coalesce(F.col("title"),
-                                                F.lit("")),
-                                     F.array().cast(links_t), null_s))
-          .withColumn("signature",
-                      _sig_from_parent_md5(cfg.signature_kind,
-                                           F.col("text"),
-                                           F.col("_bsig"), mtl, qr))
-          .select(*slim[:-1], F.col("kind").alias("_kind")))
-
-    # tika document/media families — canonical one-row-per-document
-    # parses: swf carries real outlinks (getURL actions), pdf/oo/rtf/
-    # msword are text-only, images contribute an empty-text parse
-    # whose signature datum still reaches the crawldb (the reference
-    # TikaParser emits ParseData for every succeeding mime;
-    # failed/truncated rows are dropped like every other family).
-    # Same join shape as zip: parse rows keyed at the doc url, attrs
-    # + parent-md5 join back 1:1, page bytes stay out of the join.
-    def _doc_family(fam: str, parse_fn, text_col, title_col,
-                    has_links: bool):
-        famc = content.where(mime.isin(*PARSE_ROUTES[fam]))
-        pf = parse_fn(famc.select(
-            "url", F.col("html").alias("content")))
-        fslim_ = famc.select("url", *attrs,
-                             F.md5("html").alias("_bsig"))
-        j = pf.where(F.col("status") == "success").join(fslim_, "url")
-        text = (F.coalesce(F.col(text_col), F.lit(""))
-                if text_col else F.lit(""))
-        title = (F.coalesce(F.col(title_col), F.lit(""))
-                 if title_col else F.lit(""))
-        links = (F.coalesce(F.col("outlinks"),
-                            F.array().cast(links_t)).cast(links_t)
-                 if has_links else F.array().cast(links_t))
-        return (j.withColumn("_p", struct_p(text, title, links, null_s))
-                 .withColumn("signature",
-                             _sig_from_parent_md5(cfg.signature_kind,
-                                                  text, F.col("_bsig"),
-                                                  mtl, qr))
-                 .select(*slim[:-1], canonical))
-
-    from . import msoffice as ms_op
-    from . import pdf as pdf_op
-    from . import swf as swf_op
-    for fam, fn, text_col, title_col, has_links in (
-            ("swf", lambda b: swf_op.parse_swfs(b, cfg, length_col=None),
-             "text", "title", True),
-            ("pdf", lambda b: pdf_op.parse_pdfs(b, cfg, length_col=None),
-             "text", "title", False),
-            ("oo", lambda b: ms_op.parse_oo(b, cfg, length_col=None),
-             "text", "title", False),
-            ("rtf", lambda b: ms_op.parse_rtf(b, cfg, length_col=None),
-             "text", "title", False),
-            ("msword", lambda b: ms_op.parse_msword(b, cfg,
-                                                    length_col=None),
-             "text", None, False),
-            ("image", lambda b: ms_op.parse_images(b, cfg,
-                                                   length_col=None),
-             None, None, False)):
-        frames.append(_doc_family(fam, fn, text_col, title_col,
-                                  has_links))
-
-    parsed = frames[0]
-    for fr in frames[1:]:
-        parsed = parsed.unionByName(fr)
-    out = _parse_outputs(parsed, cfg, now_ms)
-
-    # non-canonical sub-parses: the fetch_success datum
-    # (ParseOutputFormat.java:285-297 — ``new CrawlDatum()`` defaults:
-    # score 0.0, interval 0; fetch time = parent's). Derived from the
-    # shared parsed frame, so with it persisted the feed kernel runs
-    # once.
-    sub = out["parsed"].where(F.col("_kind") == "entry").select(
-        "url", F.lit(FETCH_SUCCESS).alias("status"),
-        F.col("fetch_time").cast("long").alias("fetch_time"),
-        F.lit(0).cast("int").alias("retries"),
-        F.lit(0).cast("int").alias("fetch_interval"),
-        F.lit(0.0).alias("score"),
-        F.lit(None).cast("string").alias("signature"),
-        F.lit(0).cast("long").alias("modified_time"),
-        F.create_map().cast("map<string,string>").alias("metadata"))
-    out["crawl_parse"] = out["crawl_parse"].unionByName(sub)
-    return out
+    return reduce(DataFrame.unionByName, outs)
 
 
 def parse_metatags(content: DataFrame,

@@ -59,14 +59,19 @@ def run_frontier_stream(spark: SparkSession, segments_dir: str,
     commits the result as the next snapshot of the crawldb's
     :class:`~nutch_spark.storage.SnapshotTable` (the layout
     ``CrawlRun`` writes, with the crawldb's own bucket count): a crash
-    mid-batch leaves the previous snapshot current. Snapshots older
-    than the last two expire."""
+    mid-batch leaves the previous snapshot current; an empty
+    micro-batch commits nothing. Snapshots older than the last two
+    expire."""
     import os
     import time
 
     discovered = stream_discovered(spark, segments_dir)
 
     def merge(batch: DataFrame, batch_id: int) -> None:
+        # Spark runs a no-data batch to advance the dedup watermark;
+        # it must not rewrite the crawldb and expire a snapshot
+        if batch.isEmpty():
+            return
         table = SnapshotTable(batch.sparkSession,
                               os.path.dirname(crawldb_path),
                               os.path.basename(crawldb_path), sort=False)

@@ -171,6 +171,33 @@ def test_signature_emitted(spark, fixture):
     assert all(r.signature and len(r.signature) == 32 for r in sigs)
 
 
+def _multiset(df) -> list:
+    """Rows as sorted, hashable values: maps and structs made tuples."""
+    def canon(v):
+        if hasattr(v, "asDict"):
+            return tuple(canon(x) for x in v)
+        if isinstance(v, dict):
+            return tuple(sorted((k, canon(x)) for k, x in v.items()))
+        if isinstance(v, list):
+            return tuple(canon(x) for x in v)
+        return v
+    return sorted((canon(r) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("output", ["parse_text", "parse_data",
+                                    "crawl_parse"])
+def test_routed_html_matches_unrouted(spark, fixture, output):
+    """Html pages parse the same with no mime_type column (every row
+    is html) and with an all-text/html one (every row is routed to the
+    html family)."""
+    cfg = CrawlConfig(db_parsemeta_to_crawldb=("lang",))
+    content = _content(fixture["pages"])
+    routed = content.withColumn("mime_type", F.lit("text/html"))
+    want = _multiset(parse_segment(content, cfg, 0)[output])
+    assert want
+    assert _multiset(parse_segment(routed, cfg, 0)[output]) == want
+
+
 def test_outlink_edges(spark, fixture):
     cfg = CrawlConfig()
     pr = parse_segment(_content(fixture["pages"]), cfg, 0)

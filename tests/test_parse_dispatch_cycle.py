@@ -1,5 +1,5 @@
-"""Mixed-mime corpus through the shipped CrawlRun cycle with
-``cfg.parse_mime_dispatch`` on — the ParseUtil/parse-plugins.xml
+"""Mixed-mime corpus through the shipped CrawlRun cycle: pages that
+carry a ``mime_type`` column take the ParseUtil/parse-plugins.xml
 routing wired into production (ParseUtil.java:74-110,
 bin/crawl:232-236): html pages parse on the HtmlParser path, feeds
 yield non-canonical per-entry sub-parses whose ``fetch_success``
@@ -23,6 +23,7 @@ from nutch_spark.functions.ooparse import build_odt
 from nutch_spark.functions.pdfparse import build_pdf
 from nutch_spark.functions.rtfparse import build_rtf
 from nutch_spark.functions.ziparse import encode_zip
+from nutch_spark.operators.parse import parse_segment
 
 START = 1_700_000_000_000
 SITE = "http://site.test"
@@ -95,7 +96,6 @@ def run_db(spark, tmp_path_factory, mixed):
     # DeduplicationJob would mark the entries db_duplicate — the exact
     # reason Nutch recommends text signatures for feed crawls
     cfg = CrawlConfig(generate_top_n=100, num_fetch_partitions=2,
-                      parse_mime_dispatch=True,
                       signature_kind="text_md5")
     run = CrawlRun(spark, str(tmp), cfg, mixed["pages"],
                    mixed["robots"], mixed["http_status"],
@@ -171,26 +171,40 @@ def test_signatures_present_per_family(spark, run_db):
     assert sigs[f"{SITE}/e0"] != sigs[f"{SITE}/e1"]
 
 
+def _content(mixed):
+    """fetch()'s content frame over the mixed pages, mime_type kept."""
+    return (mixed["pages"]
+            .select("url", "html", "text", "lang", "mime_type",
+                    F.lit(START).cast("long").alias("fetch_time"),
+                    F.lit(1.0).alias("score"),
+                    F.lit(3600).cast("int").alias("fetch_interval"),
+                    F.lit(None).cast("map<string,string>")
+                     .alias("metadata")))
+
+
 def test_md5_kind_subparses_share_parent_signature(spark, mixed):
     """Raw-md5 kind: every sub-parse's signature is the md5 of the ONE
     shared parent Content (SignatureFactory.calculate(content, parse)
     with MD5Signature ignores the parse) — pinned directly on
-    parse_segment_dispatch, outside the cycle, because in-cycle dedup
-    then marks the entries db_duplicate."""
-    from pyspark.sql import functions as F
-
-    from nutch_spark.operators.parse import parse_segment_dispatch
-
-    content = (mixed["pages"]
-               .select("url", "html", "text", "lang", "mime_type",
-                       F.lit(START).cast("long").alias("fetch_time"),
-                       F.lit(1.0).alias("score"),
-                       F.lit(3600).cast("int").alias("fetch_interval"),
-                       F.lit(None).cast("map<string,string>")
-                        .alias("metadata")))
-    cfg = CrawlConfig(parse_mime_dispatch=True)  # signature_kind=md5
-    out = parse_segment_dispatch(content, cfg, START)
+    the routed parse_segment, outside the cycle, because in-cycle
+    dedup then marks the entries db_duplicate."""
+    cfg = CrawlConfig()  # signature_kind=md5
+    out = parse_segment(_content(mixed), cfg, START)
     sigs = {r.url: r.signature for r in out["parse_data"].collect()}
     assert sigs[f"{SITE}/e0"] == sigs[f"{SITE}/feed"]
     assert sigs[f"{SITE}/e1"] == sigs[f"{SITE}/feed"]
     assert sigs[f"{SITE}/archive"] != sigs[f"{SITE}/feed"]
+
+
+def test_routed_outlinks_per_family(spark, mixed):
+    """Each kernel family's parse_data outlinks, exactly: the zip's
+    accumulated links, and an empty array, never null, for the feed
+    rows, text/plain and the tika document and image families."""
+    out = parse_segment(_content(mixed), CrawlConfig(), START)
+    links = {r.url: r.outlinks for r in out["parse_data"].collect()}
+    assert [(o.to_url, o.anchor) for o in links[f"{SITE}/archive"]] \
+        == [(f"{SITE}/z0", "zlink")]
+    for u in ("feed", "e0", "e1", "notes", "report", "memo", "readme",
+              "word", "logo"):
+        assert links[f"{SITE}/{u}"] == [], u
+    assert f"{SITE}/doc" not in links

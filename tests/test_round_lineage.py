@@ -94,21 +94,31 @@ def test_three_rounds_one_session_match_unsplit_run(spark, tmp_path, fx):
         assert _rows(run.load_crawldb(rnd)) == _rows(ref.load_crawldb(rnd))
 
 
-@pytest.mark.parametrize("crash_at,dispatch", [
+def test_link_scoring_round_holds_nothing(spark, tmp_path, fx):
+    """LinkRank's node and edge caches and its checkpoints feed the
+    crawldb write; the round releases them once it has committed."""
+    run = _injected(spark, tmp_path, fx, scoring_filter="link")
+    before = _persistent_rdds(spark)
+    assert run.run_round(1, START + DAY)["crawldb_rows"] > 0
+    assert _persistent_rdds(spark) == before
+
+
+@pytest.mark.parametrize("crash_at,mime_col", [
     ("segments/parse_data", False),
     ("segments/parse_data", True),
     ("crawldb", False),
 ])
 def test_failed_round_holds_nothing(spark, tmp_path, fx, crash_at,
-                                    dispatch):
+                                    mime_col):
     """A round that raises releases what it cached: the fetch schedule
     and parse output (raised at the parse_data write, after both were
-    computed), the page content under mime dispatch, and the message
-    checkpoint (raised at the crawldb stage, after it was taken)."""
-    if dispatch:
+    computed), the page content when the pages carry a ``mime_type``
+    column (the routed parse caches it), and the message checkpoint
+    (raised at the crawldb stage, after it was taken)."""
+    if mime_col:
         fx = {**fx, "pages": fx["pages"].withColumn(
             "mime_type", F.lit("text/html"))}
-    run = _injected(spark, tmp_path, fx, parse_mime_dispatch=dispatch)
+    run = _injected(spark, tmp_path, fx)
 
     def crash(*args, **kwargs):
         raise RuntimeError("simulated crash")
