@@ -1,5 +1,5 @@
 """Crawl-cycle driver: inject → [generate → fetch → parse → updatedb →
-invertlinks → dedup]×rounds, with per-round checkpoints and metrics.
+invertlinks → dedup]×rounds, with per-round checkpoints.
 
 Reference: src/bin/crawl:18-279 — inject once, then loop generate
 (-topN, -noFilter), fetch (-noParsing), parse, updatedb, invertlinks,
@@ -17,9 +17,12 @@ knows no on-disk format: the crawldb is a url-bucketed
 ``bucket(url, N)``), so the updatedb merge reads its frontier side in
 place with no Exchange, and every other per-round table goes through
 the one round-table store, :class:`~nutch_spark.storage.RoundStore`.
-:meth:`CrawlRun.commit_round` is the one way a crawldb round commits.
-A ``_metrics`` table accumulates per-round, per-stage row counts;
+:meth:`CrawlRun.commit_round` is the one way a crawldb round commits;
 ``resume_round`` restarts from the latest committed crawldb snapshot.
+The commit records are the round's metrics: each table's
+``_snapshot.json`` and the crawldb's ``_table.json`` snapshot entry
+carry its rows, per-partition footer lineage, commit time ``ts`` and
+the wall seconds ``write_s`` of its materializing write.
 
 Lineage boundary. The reference's updatedb reads only the segment's
 committed ``crawl_fetch`` and ``crawl_parse`` outputs. Here the round's
@@ -116,19 +119,8 @@ class CrawlRun:
         self._seen_dir = f"urlseen_{seen_filter}"
         self.bloom_buckets = default_cores() if bloom_buckets is None \
             else bloom_buckets
-        self.metrics: list[dict] = []
 
     # --- checkpoint helpers --------------------------------------------
-    def _metric(self, rnd: int, stage: str, **kv) -> None:
-        self.metrics.append({"round": rnd, "stage": stage,
-                             "ts": time.time(), **kv})
-
-    def flush_metrics(self) -> None:
-        path = os.path.join(self.out, "_metrics.jsonl")
-        with open(path, "w") as f:
-            for m in self.metrics:
-                f.write(json.dumps(m) + "\n")
-
     def resume_round(self) -> int:
         """Latest *committed* crawldb round, or -1 if none (the
         resumability contract: restart continues from here): the
@@ -212,7 +204,6 @@ class CrawlRun:
         n_gone = gone.count()
         n_db = self.commit_round(db.where(F.col("status") != S.DB_GONE),
                                  nxt, gone=gone)
-        self._metric(nxt, "purge", rows=n_db)
         return {"round": nxt, "crawldb_rows": n_db,
                 "purged_rows": n_gone}
 
@@ -222,9 +213,7 @@ class CrawlRun:
         db = self.load_crawldb(prev) if prev >= 0 else None
         rnd = max(prev, 0)
         # the seed set's URL-seen layer: round 1 pre-splits against it
-        n_db = self.commit_round(
-            inject_op.inject(db, seeds, self.cfg, now_ms), rnd)
-        self._metric(rnd, "inject", rows=n_db)
+        self.commit_round(inject_op.inject(db, seeds, self.cfg, now_ms), rnd)
         return self.load_crawldb(rnd)
 
     def run_round(self, rnd: int, now_ms: int) -> dict:
@@ -246,19 +235,15 @@ class CrawlRun:
             return df.persist(StorageLevel.MEMORY_AND_DISK)
 
         db = self.load_crawldb(rnd - 1 if rnd > 0 else 0)
-        t0 = time.time()
-
         fetchlist = gen_op.generate(
             db, cfg.with_(partition_seed=cfg.partition_seed ^ rnd),
             cur_time_ms=now_ms, gen_time_ms=now_ms)
         fetchlist = self.store.write(fetchlist, "segments/crawl_generate",
                                      rnd)
         n_fl = self._rows_or_count(fetchlist)
-        self._metric(rnd, "generate", rows=n_fl, sec=time.time() - t0)
         if n_fl == 0:
             return {"fetchlist_rows": 0}
 
-        t0 = time.time()
         fr = fetch_op.fetch(fetchlist, self.pages, self.robots,
                             self.http_status, cfg, now_ms)
         cache(fr["schedule"])
@@ -266,10 +251,7 @@ class CrawlRun:
                                        "segments/crawl_fetch", rnd)
         n_fetched = self._rows_or_count(crawl_fetch)
         content = fr["content"]
-        self._metric(rnd, "fetch", rows=n_fetched, sec=time.time() - t0,
-                     partitions=cfg.num_fetch_partitions)
 
-        t0 = time.time()
         # parse: html-only, or routed per parser family when the pages
         # carry their Content-Type (ParseUtil via parse-plugins.xml);
         # routed content is cached so every family reads the page
@@ -280,11 +262,8 @@ class CrawlRun:
         cache(pr["parsed"])
         parse_text = self.store.write(pr["parse_text"],
                                       "segments/parse_text", rnd)
-        n_parsed = self._rows_or_count(parse_text)
         parse_data = self.store.write(pr["parse_data"],
                                       "segments/parse_data", rnd)
-        self._metric(rnd, "parse", rows=n_parsed,
-                     sec=time.time() - t0)
 
         # the lineage boundary: the round's message stream is computed
         # once from the fetch and parse caches and checkpointed, so the
@@ -295,7 +274,6 @@ class CrawlRun:
         # so it keeps at most the session's shuffle partition count:
         # every stage that scans it runs that many tasks, not one per
         # fetch/parse input partition
-        t0 = time.time()
         n_part = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         messages = crawl_fetch.drop("queue_id", "virtual_time") \
             .unionByName(pr["crawl_parse"]).unionByName(fr["linked"]) \
@@ -335,14 +313,10 @@ class CrawlRun:
         # count, so the write's repartition is then elided
         new_db = dedup_op.dedup(
             new_db.repartition(self.db_table.n_buckets, "url"))
-        t_updatedb = time.time() - t0
 
-        t0 = time.time()
         edges = parse_op.outlink_edges(parse_data)
         ldb = linkdb_op.invert_links(edges, cfg)
         ldb = self.store.write(ldb, "linkdb", rnd)
-        self._metric(rnd, "invertlinks", rows=self._rows_or_count(ldb),
-                     sec=time.time() - t0)
 
         # link-analysis scoring (bin/crawl:260-277 — the webgraph →
         # linkrank → scoreupdater steps the reference ships commented
@@ -350,39 +324,29 @@ class CrawlRun:
         # on this round's link graph replace the crawldb scores before
         # the snapshot commits, so the NEXT generate orders by LinkRank
         if cfg.scoring_filter == "link":
-            t0 = time.time()
             raw_edges = edges.select("from_url", "to_url")
             # the ranks feed the crawldb write: their caches are
             # released with the round's, after the commit
             loops = linkdb_op.find_loops(raw_edges, depth=2, held=held)
             ranks = linkdb_op.linkrank(raw_edges, loops=loops, held=held)
-            nodedb = ranks  # (url, score) is all score_updater needs
-            new_db = linkdb_op.score_updater(new_db, nodedb)
-            self._metric(rnd, "linkrank", rows=ranks.count(),
-                         sec=time.time() - t0)
+            # (url, score) is all score_updater needs of the nodedb
+            new_db = linkdb_op.score_updater(new_db, ranks)
 
-        # the crawldb is staged AFTER the linkrank branch, so
-        # link-scoring mode pays exactly ONE bucketed write of the
-        # 10^10-row table per round, and BEFORE the index branch, so
-        # docs/deletes scan the staged table instead of re-executing
-        # the updatedb+dedup subtree per write
-        t0 = time.time()
+        # per-round index + clean (bin/crawl:249-256, INDEXFLAG): the
+        # docs/deletes tables are the engine's analog of the Solr/ES
+        # sink (SURVEY §2.7 IndexerMapReduce row). The crawldb is
+        # staged AFTER the linkrank branch, so link-scoring mode pays
+        # exactly ONE bucketed write of the 10^10-row table per round,
+        # and BEFORE the index products, so docs/deletes scan the
+        # staged table instead of re-executing the updatedb+dedup
+        # subtree per write
+        def index(staged: DataFrame) -> None:
+            self._index_products(
+                rnd, staged, ldb, parse_text, parse_data,
+                crawl_fetch.drop("queue_id", "virtual_time"), cfg)
 
-        def products(staged: DataFrame) -> None:
-            self._metric(rnd, "updatedb", rows=self._rows_or_count(staged),
-                         sec=t_updatedb + time.time() - t0)
-            # per-round index + clean (bin/crawl:249-256, INDEXFLAG):
-            # the docs/deletes tables are the engine's analog of the
-            # Solr/ES sink (SURVEY §2.7 IndexerMapReduce row)
-            if cfg.index_enabled:
-                t1 = time.time()
-                docs, _ = self._index_products(
-                    rnd, staged, ldb, parse_text, parse_data,
-                    crawl_fetch.drop("queue_id", "virtual_time"), cfg)
-                self._metric(rnd, "index", rows=self._rows_or_count(docs),
-                             sec=time.time() - t1)
-
-        n_db = self.commit_round(new_db, rnd, products=products)
+        n_db = self.commit_round(
+            new_db, rnd, products=index if cfg.index_enabled else None)
         return {"fetchlist_rows": n_fl, "fetched_rows": n_fetched,
                 "crawldb_rows": n_db}
 
@@ -468,5 +432,4 @@ class CrawlRun:
             stats = self.run_round(r, now + r * round_ms)
             if stats["fetchlist_rows"] == 0:
                 break
-        self.flush_metrics()
         return self.load_crawldb(self.resume_round())

@@ -33,6 +33,8 @@ import re
 import zipfile
 import xml.etree.ElementTree as ET
 
+from .ziparse import _EPOCH
+
 __all__ = ["oo_extract", "build_odt"]
 
 
@@ -182,8 +184,10 @@ def build_odt(paragraphs: list[str], title: str = "",
 
     out = io.BytesIO()
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr("mimetype", mimetype,
-                    compress_type=zipfile.ZIP_STORED)
-        zf.writestr("content.xml", content)
-        zf.writestr("meta.xml", meta)
+        for name, data in (("mimetype", mimetype),
+                           ("content.xml", content), ("meta.xml", meta)):
+            # fixed entry timestamps: one document, one byte string
+            zf.writestr(zipfile.ZipInfo(name, date_time=_EPOCH), data,
+                        compress_type=zipfile.ZIP_STORED
+                        if name == "mimetype" else zipfile.ZIP_DEFLATED)
     return out.getvalue()

@@ -197,7 +197,8 @@ class NutchService:
             with self._crawl_lock(job.crawl_id):
                 db = run.inject(seeds,
                                 run._load_or_pin_start(self.start_ms))
-                return {"crawldb_rows": db.count()}
+                # the committed snapshot's footer rows: no count job
+                return {"crawldb_rows": run._rows_or_count(db)}
         if job.type == "ROUND":
             with self._crawl_lock(job.crawl_id):
                 rnd = run.resume_round() + 1

@@ -46,7 +46,7 @@ def get_spark(app_name: str = "nutch-spark", cores: int | None = None,
     if cores is None:
         cores = default_cores()
     if shuffle_partitions is None:
-        shuffle_partitions = max(cores, 32)
+        shuffle_partitions = cores
     b = (SparkSession.builder
          .appName(app_name)
          .master(f"local[{cores}]")

@@ -121,8 +121,9 @@ class SnapshotTable:
         digest = hashlib.md5(os.path.abspath(self.dir).encode()) \
             .hexdigest()[:10]
         self._prefix = f"snap_{name}_{digest}"
-        # footer lineage captured at stage() time, consumed by publish()
-        self._staged_lineage: dict[int, list[dict]] = {}
+        # footer lineage and write seconds captured at stage() time,
+        # consumed by publish()
+        self._staged: dict[int, tuple[list[dict], float]] = {}
 
     # --- metadata ------------------------------------------------------
     def _meta_path(self) -> str:
@@ -180,6 +181,7 @@ class SnapshotTable:
         data feeds the new plan (re-running a crashed round reads
         round N−1 but re-staging round 0 at inject reads round 0) never
         overwrites its own input mid-job."""
+        t0 = time.monotonic()
         tbl = self._table_name(snapshot_id)
         wtbl = tbl + "_w"
         path = os.path.join(self.dir, f"s{snapshot_id}")
@@ -209,8 +211,8 @@ class SnapshotTable:
         os.rename(tmp, path)
         self._create_external(tbl, schema, path, self.bucket_col,
                               self.n_buckets, self.sort)
-        lineage = self._staged_lineage[snapshot_id] = \
-            partition_lineage(path)
+        lineage = partition_lineage(path)
+        self._staged[snapshot_id] = (lineage, time.monotonic() - t0)
         out = self.spark.table(tbl)
         out._nutch_lineage_rows = lineage_rows(lineage)
         return out
@@ -234,11 +236,12 @@ class SnapshotTable:
     def publish(self, df_schema_src: DataFrame, snapshot_id: int) -> None:
         """Commit: record the staged snapshot in the metadata (with
         per-partition lineage from the parquet footers — north rule:
-        checkpoints carry per-partition lineage) and swap the current
-        pointer (atomic)."""
+        checkpoints carry per-partition lineage — the commit time and
+        the wall seconds of its :meth:`stage` write, None when another
+        process staged it) and swap the current pointer (atomic)."""
         path = os.path.join(self.dir, f"s{snapshot_id}")
-        lineage = self._staged_lineage.get(snapshot_id) \
-            or partition_lineage(path)
+        lineage, write_s = self._staged.pop(snapshot_id, None) \
+            or (partition_lineage(path), None)
         meta = self._load_meta()
         meta["snapshots"][str(snapshot_id)] = {
             "table": self._table_name(snapshot_id),
@@ -249,6 +252,8 @@ class SnapshotTable:
             "sort": self.sort,
             "rows": sum(p["rows"] or 0 for p in lineage),
             "partitions": lineage,
+            "ts": time.time(),
+            "write_s": write_s,
         }
         meta["current"] = snapshot_id
         self._save_meta(meta)
@@ -270,7 +275,8 @@ class SnapshotTable:
 
     def read(self, snapshot_id: int | None = None) -> DataFrame:
         """Current snapshot, or time-travel to ``snapshot_id``
-        (Iceberg ``VERSION AS OF``)."""
+        (Iceberg ``VERSION AS OF``), its footer row count attached as
+        ``_nutch_lineage_rows``."""
         meta = self._load_meta()
         sid = meta["current"] if snapshot_id is None else snapshot_id
         if sid is None:
@@ -282,7 +288,9 @@ class SnapshotTable:
                 f"table {self.name}: snapshot {sid} not found "
                 f"(retained: {self.snapshots()})") from None
         self._ensure_registered(snap)
-        return self.spark.table(snap["table"])
+        out = self.spark.table(snap["table"])
+        out._nutch_lineage_rows = lineage_rows(snap.get("partitions"))
+        return out
 
     # --- maintenance -----------------------------------------------------
     def expire_snapshots(self, keep_last: int = 2) -> list[int]:
@@ -304,18 +312,20 @@ class SnapshotTable:
 class RoundStore:
     """The crawl's per-round tables: ``<name>/round=N`` parquet dirs
     under ``base_dir``, each committed by a ``_snapshot.json`` record
-    (footer lineage plus the writer's extra fields). ``marker`` is the
-    crawldb, whose current snapshot is the latest done round: a later
-    round's tables, installed before a crash cut that round's crawldb
-    commit, are not committed, and a resume overwrites them."""
+    (rows, footer lineage, commit time, the write's wall seconds and
+    the writer's extra fields). ``marker`` is the crawldb, whose
+    current snapshot is the latest done round: a later round's tables,
+    installed before a crash cut that round's crawldb commit, are not
+    committed, and a resume overwrites them."""
 
     def __init__(self, spark: SparkSession, base_dir: str,
                  marker: SnapshotTable):
         self.spark = spark
         self.dir = base_dir
         self.marker = marker
-        # writer schema per staged ``.tmp`` dir, consumed by install()
-        self._staged_schema: dict[str, StructType] = {}
+        # writer schema and write seconds per staged ``.tmp`` dir,
+        # consumed by install()
+        self._staged: dict[str, tuple[StructType, float]] = {}
 
     def path(self, name: str, rnd: int) -> str:
         return os.path.join(self.dir, name, f"round={rnd}")
@@ -334,8 +344,9 @@ class RoundStore:
         tmp = self.path(name, rnd) + ".tmp"
         if os.path.isdir(tmp):
             shutil.rmtree(tmp)
+        t0 = time.monotonic()
         df.write.mode("overwrite").parquet(tmp)
-        self._staged_schema[tmp] = df.schema
+        self._staged[tmp] = (df.schema, time.monotonic() - t0)
         return tmp
 
     def install(self, name: str, rnd: int, **record) -> DataFrame:
@@ -345,10 +356,11 @@ class RoundStore:
         POSIX). Returns the table read with its writer's schema."""
         path = self.path(name, rnd)
         tmp, old = path + ".tmp", path + ".old"
-        schema = self._staged_schema.pop(tmp)
+        schema, write_s = self._staged.pop(tmp)
         lineage = partition_lineage(tmp)
         with open(os.path.join(tmp, "_snapshot.json"), "w") as f:
             json.dump({"name": name, "round": rnd, "ts": time.time(),
+                       "write_s": write_s,
                        "rows": sum(p["rows"] or 0 for p in lineage),
                        "partitions": lineage, **record}, f)
         shutil.rmtree(old, ignore_errors=True)

@@ -48,7 +48,7 @@ def main(argv: list[str] | None = None) -> int:
                         "tab-separated metadata (Injector format)")
     p.add_argument("--out", required=True,
                    help="crawl state dir (crawldb snapshots, segments, "
-                        "linkdb, bloom, metrics)")
+                        "linkdb, bloom, their commit records)")
     p.add_argument("--robots", default=None,
                    help="optional robots table path (authority, "
                         "robots_txt, fetch_code)")
@@ -99,7 +99,9 @@ def main(argv: list[str] | None = None) -> int:
     final_db = run.crawl(seeds, rounds=args.rounds)
     n = final_db.count()
     print(f"crawl complete: {n} crawldb rows after "
-          f"round {run.resume_round()} (metrics: {args.out}/_metrics.jsonl)")
+          f"round {run.resume_round()} (per-table metrics: the "
+          f"_snapshot.json commit records under {args.out} and "
+          f"{args.out}/crawldb/_table.json)")
     return 0
 
 

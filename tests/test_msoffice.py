@@ -61,6 +61,17 @@ def test_oo_builder_roundtrip():
         assert r["title"] == "T"
 
 
+def test_oo_builder_bytes_ignore_wall_clock(monkeypatch):
+    """The same document has the same bytes whenever it is built, so
+    a raw-md5 signature of an ODT fixture is reproducible."""
+    import time
+    built = []
+    for now in (1_000_000_000, 1_700_000_000):
+        monkeypatch.setattr(time, "time", lambda now=now: now)
+        built.append(build_odt(["same text"], title="T"))
+    assert built[0] == built[1]
+
+
 def test_oo_not_a_container_raises():
     with pytest.raises(Exception):
         oo_extract(b"{\\rtf1 not a zip}")

@@ -1,7 +1,10 @@
 """The crawldb stage plans over the round's message checkpoint and
 committed tables, never over fetch/parse lineage; commit-record reads
-run no Spark job; and a round, whether it returns or raises, leaves
-the session holding no more cached blocks than before it."""
+run no Spark job; a round, whether it returns or raises, leaves the
+session holding no more cached blocks than before it; and a warm
+round runs no more Spark jobs than its recorded ceiling."""
+
+import itertools
 
 import pyspark.sql.functions as F
 import pytest
@@ -13,6 +16,15 @@ from tests.helpers import record_crawldb_plans, record_seen_splits
 
 START = 1_700_000_000_000
 DAY = 86_400_000
+
+# Spark jobs of round 2 (the first warm round) of a one-session crawl,
+# per config. A change that lowers a count lowers its ceiling here.
+ROUND_JOB_CEILINGS = {
+    "default": 31,
+    "link": 85,
+}
+
+_probe_groups = itertools.count()
 
 
 @pytest.fixture(scope="module")
@@ -31,14 +43,16 @@ def _injected(spark, out, fx, seen_filter="bloom", **cfg_kw):
 
 
 def _jobs_of(spark, fn) -> list[int]:
-    """Spark job ids ``fn()`` ran, via a job group around the call."""
+    """Spark job ids ``fn()`` ran, via a job group of its own around
+    the call."""
     sc = spark.sparkContext
-    sc.setJobGroup("probe-jobs", "probe-jobs")
+    group = f"probe-jobs-{next(_probe_groups)}"
+    sc.setJobGroup(group, group)
     try:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return list(sc.statusTracker().getJobIdsForGroup("probe-jobs"))
+    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _persistent_rdds(spark) -> set[int]:
@@ -133,3 +147,14 @@ def test_failed_round_holds_nothing(spark, tmp_path, fx, crash_at,
     with pytest.raises(RuntimeError, match="simulated crash"):
         run.run_round(1, START + DAY)
     assert _persistent_rdds(spark) == before
+
+
+@pytest.mark.parametrize("scoring", sorted(ROUND_JOB_CEILINGS))
+def test_warm_round_job_ceiling(spark, tmp_path, fx, scoring):
+    """Fixed cost per round is mostly Spark jobs; their count does not
+    move with host noise, so a new job shows here as a failure."""
+    kw = {"scoring_filter": "link"} if scoring == "link" else {}
+    run = _injected(spark, tmp_path, fx, **kw)
+    assert run.run_round(1, START + DAY)["fetchlist_rows"] > 0
+    jobs = _jobs_of(spark, lambda: run.run_round(2, START + 2 * DAY))
+    assert len(jobs) <= ROUND_JOB_CEILINGS[scoring], len(jobs)

@@ -100,6 +100,30 @@ def test_seed_and_crawl_jobs(server):
     assert code == 501 and "ROUND" in msg
 
 
+def test_inject_job_reports_snapshot_rows(server, monkeypatch):
+    """INJECT reports the committed crawldb snapshot's footer rows and
+    runs no count job for it."""
+    import os
+    port, svc, seeds = server
+    _, seed_dir = _req(port, "/seed/create",
+                       {"name": "s_rows", "seedUrls": seeds})
+
+    def no_count(self):
+        raise AssertionError("DataFrame.count ran")
+
+    # the session's own DataFrame class, which defines count itself
+    monkeypatch.setattr(type(svc.spark.range(0)), "count", no_count)
+    _, job = _req(port, "/job/create",
+                  {"crawlId": "c_rows", "type": "INJECT",
+                   "confId": "default", "args": {"url_dir": seed_dir}})
+    info = _wait_job(port, job["id"])
+    assert info["state"] == "FINISHED", info["msg"]
+    with open(os.path.join(svc.base, "crawls", "c_rows", "crawldb",
+                           "_table.json")) as f:
+        snap = json.load(f)["snapshots"]["0"]
+    assert info["result"]["crawldb_rows"] == snap["rows"] == len(seeds)
+
+
 def test_db_resource_and_admin(server):
     port, _, seeds = server
     code, stats = _req(port, "/db/crawldb",

@@ -15,3 +15,14 @@ def test_default_cores_from_affinity_mask(monkeypatch):
     monkeypatch.setattr(session.os, "sched_getaffinity",
                         lambda pid: {0, 2, 5}, raising=False)
     assert session.default_cores() == 3
+
+
+def test_shuffle_partitions_default_to_cores(monkeypatch):
+    """No ``shuffle_partitions``: one shuffle partition per task thread,
+    not a 32-partition floor."""
+    from pyspark.sql import SparkSession
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate",
+                        lambda self: dict(self._options))
+    conf = session.get_spark(cores=3)
+    assert conf["spark.master"] == "local[3]"
+    assert conf["spark.sql.shuffle.partitions"] == "3"
