@@ -39,12 +39,14 @@ state between stages the optimizer otherwise fuses. ``invertlinks``
 IS standalone (the reference job re-inverts arbitrary committed
 segments), as are all the reader/merger/indexer jobs.
 
-Per-round tables are read through the crawl's
-:class:`~nutch_spark.storage.RoundStore`, which lists committed rounds.
+A command opens a crawl as a :class:`~nutch_spark.crawl.CrawlRun` and
+goes through its ``commit_round`` and its per-round table store (the
+webgraph tables included); written row counts come from footers.
 
-The pages/robots/http_status tables come from ``--pages-dir`` (parquet
+The pages/robots/http_status corpus comes from ``--pages-dir`` (parquet
 dirs named pages/, robots/, http_status/) or, with ``--fixture``, from
-the deterministic synthesizer (testdata.py).
+the deterministic synthesizer (testdata.py); only crawl, dump and
+startserver read it.
 """
 
 from __future__ import annotations
@@ -65,63 +67,41 @@ def _spark(args):
 
 
 def _tables(spark, args):
+    """The corpus tables found; None for each one absent. A pages dir
+    without robots/ has no robots rules."""
     if getattr(args, "fixture", False):
         from .testdata import fixture_dfs
         return fixture_dfs(spark)
     base = getattr(args, "pages_dir", None)
-    if not base:
-        return _empty_tables(spark)
-    pages = spark.read.parquet(os.path.join(base, "pages"))
-    robots_p = os.path.join(base, "robots")
-    http_p = os.path.join(base, "http_status")
-    robots = (spark.read.parquet(robots_p)
-              if os.path.isdir(robots_p) else spark.createDataFrame(
-                  [], "authority string, robots_txt string, "
-                      "fetch_code int"))
-    http = (spark.read.parquet(http_p)
-            if os.path.isdir(http_p) else None)
-    return {"pages": pages, "robots": robots, "http_status": http,
-            "seeds": None}
+    found = {n: spark.read.parquet(os.path.join(base, n))
+             for n in ("pages", "robots", "http_status")
+             if base and os.path.isdir(os.path.join(base, n))}
+    if base and "robots" not in found:
+        from .schema import ROBOTS
+        found["robots"] = spark.createDataFrame([], ROBOTS)
+    return {"pages": None, "robots": None, "http_status": None,
+            "seeds": None, **found}
 
 
-def _empty_tables(spark):
-    """Placeholder pages/robots for jobs that never touch them
-    (index/clean/purge/readers run over committed round tables)."""
-    pages = spark.createDataFrame(
-        [], "url string, warc_ts timestamp, html binary, "
-            "text string, lang string")
-    robots = spark.createDataFrame(
-        [], "authority string, robots_txt string, fetch_code int")
-    return {"pages": pages, "robots": robots, "http_status": None,
-            "seeds": None}
-
-
-def _run_for(spark, args, out_dir=None):
+def _open(spark, out_dir: str):
+    """The crawl under ``out_dir``, opened without a corpus."""
     from .config import CrawlConfig
     from .crawl import CrawlRun
-    t = _tables(spark, args)
-    cfg = CrawlConfig(num_fetch_partitions=args.cores * 2)
-    return CrawlRun(spark, out_dir or args.out_dir, cfg, t["pages"],
-                    t["robots"], t["http_status"])
+    return CrawlRun(spark, out_dir, CrawlConfig())
 
 
-def _crawldb_table(spark, out_dir: str):
-    from .storage import SnapshotTable
-    return SnapshotTable(spark, out_dir, "crawldb", sort=False)
+def _crawldb(run):
+    """``run``'s latest committed crawldb snapshot."""
+    rnd = run.resume_round()
+    if rnd < 0:
+        raise SystemExit(f"no committed crawldb under {run.out}")
+    return run.load_crawldb(rnd)
 
 
-def _store(spark, out_dir: str):
-    """The crawl's committed per-round tables."""
-    from .storage import RoundStore
-    return RoundStore(spark, out_dir, _crawldb_table(spark, out_dir))
-
-
-def _load_crawldb(spark, out_dir: str):
-    """Latest committed crawldb snapshot."""
-    table = _crawldb_table(spark, out_dir)
-    if table.current_id() is None:
-        raise SystemExit(f"no committed crawldb under {out_dir}")
-    return table.read()
+def _footer_rows(path: str) -> int | None:
+    """Rows of the parquet table at ``path``, from its footers."""
+    from .storage import lineage_rows, partition_lineage
+    return lineage_rows(partition_lineage(path))
 
 
 def _emit(obj) -> None:
@@ -154,10 +134,10 @@ def cmd_crawl(args):
 
 def cmd_inject(args):
     spark = _spark(args)
-    run = _run_for(spark, args)
+    run = _open(spark, args.out_dir)
     seeds = spark.read.text(args.seeds).withColumnRenamed("value", "line")
     db = run.inject(seeds, int(time.time() * 1000))
-    _emit({"urls": db.count()})
+    _emit({"urls": run.rows_or_count(db)})
 
 
 def cmd_freegen(args):
@@ -172,8 +152,7 @@ def cmd_freegen(args):
                               normalize=args.normalize,
                               filter_urls=args.filter)
     fl.write.mode("overwrite").parquet(args.dest)
-    _emit({"fetchlist": spark.read.parquet(args.dest).count(),
-           "dest": args.dest})
+    _emit({"fetchlist": _footer_rows(args.dest), "dest": args.dest})
 
 
 def cmd_round_stage(args):
@@ -184,8 +163,7 @@ def cmd_round_stage(args):
 
 
 def cmd_purge(args):
-    spark = _spark(args)
-    run = _run_for(spark, args)
+    run = _open(_spark(args), args.out_dir)
     _emit(run.purge_gone(run.resume_round()))
 
 
@@ -193,8 +171,7 @@ def cmd_purge(args):
 
 def cmd_readdb(args):
     from .operators import readers
-    spark = _spark(args)
-    db = _load_crawldb(spark, args.out_dir)
+    db = _crawldb(_open(_spark(args), args.out_dir))
     if args.stats:
         readers.crawldb_stats(db).show(truncate=False)
     elif args.top_n:
@@ -211,24 +188,22 @@ def cmd_readdb(args):
 def cmd_mergedb(args):
     """CrawlDbMerger (crawl/CrawlDbMerger.java): newest datum per url
     across dbs, metadata merged, committed as round 0 of ``dest``'s
-    crawldb — a crawl can resume from it."""
+    crawldb, with its URL-seen layer — a crawl can resume from it."""
     from .operators import merge as merge_op
     spark = _spark(args)
-    dbs = [_load_crawldb(spark, d) for d in args.dbs]
-    out = _crawldb_table(spark, args.dest).commit(
+    dbs = [_crawldb(_open(spark, d)) for d in args.dbs]
+    n = _open(spark, args.dest).commit_round(
         merge_op.merge_crawldbs(dbs), 0)
-    _emit({"urls": out.count()})
+    _emit({"urls": n})
 
 
 def cmd_dedup(args):
     """DeduplicationJob: mark signature-duplicates db_duplicate in the
     latest snapshot and commit it as the next round."""
     from .operators import dedup as dedup_op
-    spark = _spark(args)
-    run = _run_for(spark, args)
+    run = _open(_spark(args), args.out_dir)
     rnd = run.resume_round()
-    db = run.load_crawldb(rnd)
-    n = run.commit_round(dedup_op.dedup(db), rnd + 1)
+    n = run.commit_round(dedup_op.dedup(_crawldb(run)), rnd + 1)
     dupes = run.load_crawldb(rnd + 1) \
         .where("status = 'db_duplicate'").count()
     _emit({"round": rnd + 1, "crawldb_rows": n, "duplicates": dupes})
@@ -242,7 +217,7 @@ def cmd_readlinkdb(args):
     spark = _spark(args)
     # the reference LinkDb is cumulative; per-round inversions are
     # merged on read (LinkDbMerger semantics)
-    store = _store(spark, args.out_dir)
+    store = _open(spark, args.out_dir).store
     dbs = [store.read("linkdb", r) for r in store.rounds("linkdb")]
     if not dbs:
         raise SystemExit(f"no linkdb under {args.out_dir}")
@@ -258,8 +233,7 @@ def cmd_readlinkdb(args):
 
 def cmd_readseg(args):
     from .operators import readers
-    spark = _spark(args)
-    store = _store(spark, args.out_dir)
+    store = _open(_spark(args), args.out_dir).store
     tables = {n: store.read(f"segments/{n}", args.round)
               for n in ("crawl_generate", "crawl_fetch", "parse_text",
                         "parse_data")}
@@ -271,8 +245,7 @@ def cmd_readseg(args):
 
 def cmd_mergesegs(args):
     from .operators import merge as merge_op
-    spark = _spark(args)
-    store = _store(spark, args.out_dir)
+    store = _open(_spark(args), args.out_dir).store
     rounds = [int(r) for r in args.rounds.split(",")] if args.rounds \
         else store.rounds("segments/crawl_fetch")
     segs = [s for s in (store.read("segments/crawl_fetch", r)
@@ -281,8 +254,7 @@ def cmd_mergesegs(args):
         raise SystemExit("no crawl_fetch segments to merge")
     out = merge_op.merge_segments(segs, status_col="status")
     out.write.mode("overwrite").parquet(args.dest)
-    _emit({"urls": spark.read.parquet(args.dest).count(),
-           "rounds": rounds})
+    _emit({"urls": _footer_rows(args.dest), "rounds": rounds})
 
 
 def cmd_invertlinks(args):
@@ -292,8 +264,7 @@ def cmd_invertlinks(args):
     (e.g. after changing ignore-internal settings)."""
     from .config import CrawlConfig
     from .operators import linkdb as linkdb_op, parse as parse_op
-    spark = _spark(args)
-    store = _store(spark, args.out_dir)
+    store = _open(_spark(args), args.out_dir).store
     rounds = [args.round] if args.round is not None else \
         store.rounds("segments/parse_data")
     edges = None
@@ -307,8 +278,7 @@ def cmd_invertlinks(args):
         raise SystemExit(f"no parse_data under {args.out_dir}")
     ldb = linkdb_op.invert_links(edges, CrawlConfig())
     ldb.write.mode("overwrite").parquet(args.dest)
-    _emit({"urls": spark.read.parquet(args.dest).count(),
-           "rounds": rounds})
+    _emit({"urls": _footer_rows(args.dest), "rounds": rounds})
 
 
 def cmd_mergelinkdb(args):
@@ -319,21 +289,19 @@ def cmd_mergelinkdb(args):
     dbs = [spark.read.parquet(d) for d in args.dbs]
     out = linkdb_op.merge_linkdbs(dbs, CrawlConfig())
     out.write.mode("overwrite").parquet(args.dest)
-    _emit({"urls": spark.read.parquet(args.dest).count()})
+    _emit({"urls": _footer_rows(args.dest)})
 
 
 # --- index / dumps -------------------------------------------------------
 
 def cmd_index(args):
-    spark = _spark(args)
-    run = _run_for(spark, args)
+    run = _open(_spark(args), args.out_dir)
     _emit(run.index_round(args.round))
 
 
 def cmd_clean(args):
     from .operators import readers
-    spark = _spark(args)
-    db = _load_crawldb(spark, args.out_dir)
+    db = _crawldb(_open(_spark(args), args.out_dir))
     readers.cleaning_job(db).show(truncate=False)
 
 
@@ -343,12 +311,15 @@ def cmd_dump(args):
     from .operators.sources import file_dumper
     from pyspark.sql import functions as F
     spark = _spark(args)
-    t = _tables(spark, args)
-    cf = _store(spark, args.out_dir).read("segments/crawl_fetch")
+    pages = _tables(spark, args)["pages"]
+    if pages is None:
+        raise SystemExit("dump reads page content: pass --pages-dir "
+                         "or --fixture")
+    cf = _open(spark, args.out_dir).store.read("segments/crawl_fetch")
     if cf is None:
         raise SystemExit(f"no crawl_fetch under {args.out_dir}")
     content = (cf.where(F.col("status") == "fetch_success")
-               .select("url").join(t["pages"], "url")
+               .select("url").join(pages, "url")
                .select("url", "html"))
     if args.mime_stats:
         file_dumper(content, mime_types=args.mime_types,
@@ -356,14 +327,12 @@ def cmd_dump(args):
     else:
         out = file_dumper(content, mime_types=args.mime_types)
         out.write.mode("overwrite").parquet(args.dest)
-        _emit({"files": spark.read.parquet(args.dest).count(),
-               "dest": args.dest})
+        _emit({"files": _footer_rows(args.dest), "dest": args.dest})
 
 
 def cmd_commoncrawldump(args):
     from .operators.sources import dump_commoncrawl
-    spark = _spark(args)
-    store = _store(spark, args.out_dir)
+    store = _open(_spark(args), args.out_dir).store
     pt, pd_, cf = (store.read(f"segments/{n}")
                    for n in ("parse_text", "parse_data", "crawl_fetch"))
     if None in (pt, pd_, cf):
@@ -426,69 +395,66 @@ def cmd_indexchecker(args):
 
 def cmd_domainstats(args):
     from .operators import readers
-    spark = _spark(args)
-    db = _load_crawldb(spark, args.out_dir)
+    db = _crawldb(_open(_spark(args), args.out_dir))
     readers.domain_statistics(db, mode=args.mode) \
         .show(args.topn, truncate=False)
 
 
 # --- webgraph family -----------------------------------------------------
 
-def _graph_edges(spark, args):
+def _graph_edges(run):
     from .operators import parse as parse_op
-    pd_ = _store(spark, args.out_dir).read("segments/parse_data")
+    pd_ = run.store.read("segments/parse_data")
     if pd_ is None:
-        raise SystemExit(f"no parse_data under {args.out_dir}")
+        raise SystemExit(f"no parse_data under {run.out}")
     return parse_op.outlink_edges(pd_)
+
+
+def _webgraph(run, name: str):
+    table = run.store.read(f"webgraph/{name}")
+    if table is None:
+        raise SystemExit(f"no webgraph/{name} under {run.out}")
+    return table
 
 
 def cmd_webgraph(args):
     from .config import CrawlConfig
     from .operators import linkdb as linkdb_op
-    spark = _spark(args)
-    db = _load_crawldb(spark, args.out_dir)
-    wg = linkdb_op.webgraph(_graph_edges(spark, args),
-                            db.select("url", "score"), CrawlConfig())
-    base = os.path.join(args.out_dir, "webgraph")
-    wg["outlinkdb"].write.mode("overwrite") \
-        .parquet(os.path.join(base, "outlinkdb"))
-    wg["nodedb"].write.mode("overwrite") \
-        .parquet(os.path.join(base, "nodedb"))
-    _emit({"nodes": spark.read.parquet(
-        os.path.join(base, "nodedb")).count()})
+    run = _open(_spark(args), args.out_dir)
+    db = _crawldb(run)
+    wg = linkdb_op.webgraph(_graph_edges(run), db.select("url", "score"),
+                            CrawlConfig())
+    rnd = run.resume_round()
+    run.store.write(wg["outlinkdb"], "webgraph/outlinkdb", rnd)
+    nodes = run.store.write(wg["nodedb"], "webgraph/nodedb", rnd)
+    _emit({"nodes": run.rows_or_count(nodes)})
 
 
 def cmd_linkrank(args):
     from .operators import linkdb as linkdb_op
-    spark = _spark(args)
-    edges = _graph_edges(spark, args).select("from_url", "to_url")
+    run = _open(_spark(args), args.out_dir)
+    edges = _graph_edges(run).select("from_url", "to_url")
     loops = linkdb_op.find_loops(edges, depth=2)
-    ranks = linkdb_op.linkrank(edges, iterations=args.iterations,
-                               loops=loops)
-    path = os.path.join(args.out_dir, "webgraph", "linkrank")
-    ranks.write.mode("overwrite").parquet(path)
-    _emit({"ranked": spark.read.parquet(path).count()})
+    ranks = run.store.write(
+        linkdb_op.linkrank(edges, iterations=args.iterations, loops=loops),
+        "webgraph/linkrank", run.resume_round())
+    _emit({"ranked": run.rows_or_count(ranks)})
 
 
 def cmd_scoreupdater(args):
     from .operators import linkdb as linkdb_op
-    spark = _spark(args)
-    run = _run_for(spark, args)
+    run = _open(_spark(args), args.out_dir)
     rnd = run.resume_round()
-    ranks = spark.read.parquet(
-        os.path.join(args.out_dir, "webgraph", "linkrank"))
-    db = linkdb_op.score_updater(run.load_crawldb(rnd), ranks)
+    db = linkdb_op.score_updater(_crawldb(run), _webgraph(run, "linkrank"))
     n = run.commit_round(db, rnd + 1)
     _emit({"round": rnd + 1, "crawldb_rows": n})
 
 
 def cmd_nodedumper(args):
     from .operators import linkdb as linkdb_op
-    spark = _spark(args)
-    nodedb = spark.read.parquet(
-        os.path.join(args.out_dir, "webgraph", "nodedb"))
-    linkdb_op.node_dumper(nodedb, by=args.by, n=args.topn) \
-        .show(args.topn, truncate=False)
+    run = _open(_spark(args), args.out_dir)
+    linkdb_op.node_dumper(_webgraph(run, "nodedb"), by=args.by,
+                          n=args.topn).show(args.topn, truncate=False)
 
 
 # --- server --------------------------------------------------------------
@@ -552,10 +518,9 @@ def main(argv=None):
     r.add_argument("--dump")
     r.add_argument("--format", default="json")
 
-    m = sub.add_parser("mergedb")
+    m = add("mergedb", cmd_mergedb, out_dir=False)
     m.add_argument("dest")
     m.add_argument("dbs", nargs="+")
-    m.set_defaults(fn=cmd_mergedb)
 
     add("dedup", cmd_dedup, tables=True)
     add("purge", cmd_purge, tables=True)
@@ -576,10 +541,9 @@ def main(argv=None):
     il.add_argument("dest")
     il.add_argument("--round", type=int)
 
-    ml = sub.add_parser("mergelinkdb")
+    ml = add("mergelinkdb", cmd_mergelinkdb, out_dir=False)
     ml.add_argument("dest")
     ml.add_argument("dbs", nargs="+")
-    ml.set_defaults(fn=cmd_mergelinkdb)
 
     ix = add("index", cmd_index, tables=True)
     ix.add_argument("--round", type=int)

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
 
+from .session import default_cores
+
 
 SECONDS_PER_DAY = 60 * 60 * 24
 
@@ -157,7 +159,8 @@ class CrawlConfig:
     text_profile_quant_rate: float = 0.01
 
     # --- partitioning / scale knobs (ours) ---
-    num_fetch_partitions: int = 32            # politeness units per round
+    # politeness units per round: the session's task threads
+    num_fetch_partitions: int = field(default_factory=default_cores)
     partition_seed: int = 0                   # salt for host partitioning
 
     # --- URL normalizer chains (URLNormalizers.java:96-170) ---

@@ -30,8 +30,9 @@ message stream (``crawl_fetch`` ∪ ``crawl_parse`` ∪ fetch redirects) is
 materialized once with an eager ``localCheckpoint`` right after parse,
 so the URL-seen split, updatedb, dedup and the bucketed crawldb write
 plan over one ``LogicalRDD`` plus committed tables — never over the
-fetch and parse lineage. The operators only build plans; ``run_round``
-alone decides what a round caches and for how long:
+fetch and parse lineage. The operators only build plans (but link
+scoring's ``localCheckpoint``s run their shuffle stages under AQE);
+``run_round`` alone decides what a round caches and for how long:
 
 - fetch schedule, parse output and (mime-routed parse) page content:
   persisted before the first write that reads each, so fetch and
@@ -72,7 +73,9 @@ ROUND_MS = 24 * 3600 * 1000
 
 
 class CrawlRun:
-    """One crawl over a pages table, checkpointed under ``out_dir``.
+    """One crawl over a pages table, checkpointed under ``out_dir``:
+    the one way into a crawl directory. Only rounds read the ``pages``
+    and ``robots`` corpus; other jobs open the directory without it.
 
     Crawldb snapshots are commits of one url-bucketed
     :class:`~nutch_spark.storage.SnapshotTable` with ``db_buckets``
@@ -91,8 +94,9 @@ class CrawlRun:
     scoreupdater, purge) keep a cuckoo crawl's layer."""
 
     def __init__(self, spark: SparkSession, out_dir: str,
-                 cfg: CrawlConfig, pages: DataFrame,
-                 robots: DataFrame, http_status: DataFrame | None = None,
+                 cfg: CrawlConfig, pages: DataFrame | None = None,
+                 robots: DataFrame | None = None,
+                 http_status: DataFrame | None = None,
                  bloom_buckets: int | None = None,
                  seen_filter: str | None = None,
                  db_buckets: int | None = None):
@@ -134,7 +138,7 @@ class CrawlRun:
         return self.db_table.read(rnd)
 
     @staticmethod
-    def _rows_or_count(df: DataFrame) -> int:
+    def rows_or_count(df: DataFrame) -> int:
         """Row count of the frame just written: read from the write's
         parquet-footer lineage, carried ON the returned frame itself
         (zero Spark jobs — the metric counts in the reference come
@@ -157,7 +161,7 @@ class CrawlRun:
         marker, so resume_round() counts a round done only once every
         per-round product exists. Returns the crawldb's row count."""
         staged = self.db_table.stage(db, rnd)
-        n = self._rows_or_count(staged)
+        n = self.rows_or_count(staged)
         if products is not None:
             products(staged)
         self._write_bloom(staged, rnd, gone)
@@ -201,11 +205,11 @@ class CrawlRun:
         db = self.load_crawldb(rnd)
         gone = db.where(F.col("status") == S.DB_GONE).select("url")
         nxt = rnd + 1
-        n_gone = gone.count()
         n_db = self.commit_round(db.where(F.col("status") != S.DB_GONE),
                                  nxt, gone=gone)
+        # both snapshots' footer rows: no job counts the purged urls
         return {"round": nxt, "crawldb_rows": n_db,
-                "purged_rows": n_gone}
+                "purged_rows": self.rows_or_count(db) - n_db}
 
     # --- stages --------------------------------------------------------
     def inject(self, seeds: DataFrame, now_ms: int) -> DataFrame:
@@ -221,6 +225,7 @@ class CrawlRun:
         Returns the per-stage row counts; ``fetchlist_rows == 0``
         signals the caller to stop (bin/crawl:195-207). Whatever the
         round caches is released before it returns or raises."""
+        self._need_corpus("run_round")
         with ExitStack() as held:
             return self._round(rnd, now_ms, held)
 
@@ -240,7 +245,7 @@ class CrawlRun:
             cur_time_ms=now_ms, gen_time_ms=now_ms)
         fetchlist = self.store.write(fetchlist, "segments/crawl_generate",
                                      rnd)
-        n_fl = self._rows_or_count(fetchlist)
+        n_fl = self.rows_or_count(fetchlist)
         if n_fl == 0:
             return {"fetchlist_rows": 0}
 
@@ -249,7 +254,7 @@ class CrawlRun:
         cache(fr["schedule"])
         crawl_fetch = self.store.write(fr["crawl_fetch"],
                                        "segments/crawl_fetch", rnd)
-        n_fetched = self._rows_or_count(crawl_fetch)
+        n_fetched = self.rows_or_count(crawl_fetch)
         content = fr["content"]
 
         # parse: html-only, or routed per parser family when the pages
@@ -394,18 +399,18 @@ class CrawlRun:
             _seg("segments/crawl_fetch").drop("queue_id",
                                               "virtual_time"),
             self.cfg)
-        return {"round": rnd, "docs_rows": self._rows_or_count(docs),
-                "deletes_rows": self._rows_or_count(deletes)}
+        return {"round": rnd, "docs_rows": self.rows_or_count(docs),
+                "deletes_rows": self.rows_or_count(deletes)}
 
-    def _clock_path(self) -> str:
-        return os.path.join(self.out, "_crawl.json")
+    def _need_corpus(self, job: str) -> None:
+        if self.pages is None or self.robots is None:
+            raise ValueError(f"{job} needs the pages and robots tables")
 
-    def _load_or_pin_start(self, start_ms: int | None) -> int:
-        """The virtual clock's epoch is pinned on first use and reused
-        on resume: resumed rounds must run on the SAME clock as the
-        committed ones, or fetch_time / re-fetch comparisons against
-        pre-crash snapshots stop being deterministic."""
-        path = self._clock_path()
+    def epoch_ms(self, start_ms: int | None = None) -> int:
+        """The virtual clock's epoch, pinned in ``_crawl.json`` on first
+        use (``start_ms``, else the wall clock) and reused on resume, so
+        resumed rounds run on the SAME clock as the committed ones."""
+        path = os.path.join(self.out, "_crawl.json")
         if os.path.isfile(path):
             with open(path) as f:
                 return int(json.load(f)["start_ms"])
@@ -415,21 +420,27 @@ class CrawlRun:
             json.dump({"start_ms": now}, f)
         return now
 
+    def next_round(self, start_ms: int | None = None,
+                   round_ms: int = ROUND_MS) -> tuple[int, int]:
+        """The round clock: the next round, ``resume_round() + 1``, and
+        its virtual time, the epoch plus one ``round_ms`` per round."""
+        rnd = self.resume_round() + 1
+        return rnd, self.epoch_ms(start_ms) + rnd * round_ms
+
     def crawl(self, seeds: DataFrame, rounds: int,
               start_ms: int | None = None,
               round_ms: int = ROUND_MS) -> DataFrame:
-        """Full crawl; virtual clock advances one ``round_ms`` per
-        round so re-fetch scheduling behaves deterministically (the
-        epoch persists in ``_crawl.json`` and survives resume)."""
-        now = self._load_or_pin_start(start_ms)
+        """Full crawl of ``rounds`` rounds on the round clock
+        (:meth:`next_round`)."""
+        self._need_corpus("crawl")
         # resume: completed rounds are skipped — a crash between stage
         # commits restarts its round from the last committed crawldb
         # snapshot (per-round checkpoints, north-rule resumability)
-        done = self.resume_round()
-        if done <= 0:
-            self.inject(seeds, now)
-        for r in range(max(1, done + 1), rounds + 1):
-            stats = self.run_round(r, now + r * round_ms)
-            if stats["fetchlist_rows"] == 0:
-                break
+        if self.resume_round() <= 0:
+            self.inject(seeds, self.epoch_ms(start_ms))
+        # an empty fetchlist ends the crawl (bin/crawl:195-207)
+        rnd, now_ms = self.next_round(start_ms, round_ms)
+        while rnd <= rounds and \
+                self.run_round(rnd, now_ms)["fetchlist_rows"]:
+            rnd, now_ms = self.next_round(start_ms, round_ms)
         return self.load_crawldb(self.resume_round())

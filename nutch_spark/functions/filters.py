@@ -138,21 +138,36 @@ def accepts_udf(rules):
     return _accepts
 
 
+@lru_cache(maxsize=32)
+def _jvm_compiles(patterns: tuple[str, ...]) -> bool:
+    """Whether ``java.util.regex`` compiles every pattern (``rlike``
+    compiles only when the job runs)."""
+    from pyspark import SparkContext
+    from pyspark.errors import IllegalArgumentException
+    compile_ = SparkContext._jvm.java.util.regex.Pattern.compile
+    try:
+        for pattern in patterns:
+            compile_(pattern)
+    except IllegalArgumentException:   # PatternSyntaxException
+        return False
+    return True
+
+
 def filter_accepts_col(df, rules, url_col: str = "url",
                        out: str = "accepted"):
     """Add a boolean acceptance column.
 
     For small rule sets this compiles to chained JVM ``rlike``
     expressions (whole-stage codegen, no Python); falls back to the
-    pandas UDF when a rule uses Python-only regex syntax."""
-    try:
-        expr = None
-        for sign, pattern in rules:
-            cond = F.col(url_col).rlike(pattern)
-            hit = F.lit(sign == "+")
-            expr = F.when(cond, hit) if expr is None else expr.when(cond, hit)
-        col = expr.otherwise(F.lit(False)) if expr is not None \
-            else F.lit(False)
-        return df.withColumn(out, col)
-    except Exception:
-        return df.withColumn(out, accepts_udf(tuple(rules))(F.col(url_col)))
+    pandas UDF when the JVM rejects a rule (Python-only regex syntax)."""
+    rules = tuple(tuple(r) for r in rules)
+    if not _jvm_compiles(tuple(pattern for _, pattern in rules)):
+        return df.withColumn(out, accepts_udf(rules)(F.col(url_col)))
+    expr = None
+    for sign, pattern in rules:
+        cond = F.col(url_col).rlike(pattern)
+        hit = F.lit(sign == "+")
+        expr = F.when(cond, hit) if expr is None else expr.when(cond, hit)
+    col = expr.otherwise(F.lit(False)) if expr is not None \
+        else F.lit(False)
+    return df.withColumn(out, col)

@@ -32,6 +32,7 @@ queries collect only reader-sized results (stats rows, topN, one url).
 from __future__ import annotations
 
 import json
+import os
 import threading
 import time
 from dataclasses import fields
@@ -125,7 +126,6 @@ class NutchService:
     def _run_for(self, crawl_id: str, cid: str):
         from .crawl import CrawlRun
         if crawl_id not in self.runs:
-            import os
             self.runs[crawl_id] = CrawlRun(
                 self.spark, os.path.join(self.base, "crawls", crawl_id),
                 self.configs[cid], self.pages, self.robots,
@@ -184,10 +184,9 @@ class NutchService:
         return job.info()
 
     def _execute(self, job: _Job, cid: str, args: dict):
-        from .crawl import ROUND_MS
         run = self._run_for(job.crawl_id, cid)
-        # INJECT and ROUND run on the crawl's pinned epoch
-        # (_crawl.json), as CrawlRun.crawl does: a crawl continued here,
+        # INJECT and ROUND run on the crawl's round clock, as
+        # CrawlRun.crawl does: a crawl continued here,
         # by the CLI or after a server restart stays on one clock, and
         # ``start_ms`` only pins the epoch of a new crawl
         if job.type == "INJECT":
@@ -195,15 +194,13 @@ class NutchService:
             seeds = self.spark.read.text(seed_path) \
                 .withColumnRenamed("value", "line")
             with self._crawl_lock(job.crawl_id):
-                db = run.inject(seeds,
-                                run._load_or_pin_start(self.start_ms))
+                db = run.inject(seeds, run.epoch_ms(self.start_ms))
                 # the committed snapshot's footer rows: no count job
-                return {"crawldb_rows": run._rows_or_count(db)}
+                return {"crawldb_rows": run.rows_or_count(db)}
         if job.type == "ROUND":
             with self._crawl_lock(job.crawl_id):
-                rnd = run.resume_round() + 1
-                now = run._load_or_pin_start(self.start_ms)
-                stats = run.run_round(rnd, now + rnd * ROUND_MS)
+                rnd, now = run.next_round(self.start_ms)
+                stats = run.run_round(rnd, now)
             return {"round": rnd, **{k: v for k, v in stats.items()
                                      if isinstance(v, (int, float))}}
         if job.type == "INDEX":
@@ -267,7 +264,6 @@ class NutchService:
 
     # --- seed lists (SeedResource.java:56-74) --------------------------
     def seed_create(self, name: str, urls: list[str]) -> str:
-        import os
         d = os.path.join(self.base, "seeds", name)
         os.makedirs(d, exist_ok=True)
         with open(os.path.join(d, "seed.txt"), "w") as f:

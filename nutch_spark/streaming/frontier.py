@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import CrawlConfig
 from ..operators import updatedb as update_op
-from ..storage import SnapshotTable
 from .. import schema as S
 
 
@@ -56,15 +55,20 @@ def run_frontier_stream(spark: SparkSession, segments_dir: str,
 
     Each micro-batch applies the batch updatedb (state machine +
     OPIC accumulation) against the current crawldb snapshot and
-    commits the result as the next snapshot of the crawldb's
-    :class:`~nutch_spark.storage.SnapshotTable` (the layout
-    ``CrawlRun`` writes, with the crawldb's own bucket count): a crash
+    commits the result as the next crawldb round through
+    :meth:`~nutch_spark.crawl.CrawlRun.commit_round`, with the
+    crawldb's own bucket count and no URL-seen layer: a crash
     mid-batch leaves the previous snapshot current; an empty
     micro-batch commits nothing. Snapshots older than the last two
-    expire."""
+    expire. ``crawldb_path`` is a crawl directory's ``crawldb``."""
     import os
     import time
 
+    from ..crawl import CrawlRun
+
+    crawl_dir, name = os.path.split(crawldb_path.rstrip(os.sep))
+    if name != "crawldb":
+        raise ValueError(f"not a crawl's crawldb dir: {crawldb_path}")
     discovered = stream_discovered(spark, segments_dir)
 
     def merge(batch: DataFrame, batch_id: int) -> None:
@@ -72,15 +76,14 @@ def run_frontier_stream(spark: SparkSession, segments_dir: str,
         # it must not rewrite the crawldb and expire a snapshot
         if batch.isEmpty():
             return
-        table = SnapshotTable(batch.sparkSession,
-                              os.path.dirname(crawldb_path),
-                              os.path.basename(crawldb_path), sort=False)
-        cur = table.current_id()
-        db = None if cur is None else table.read(cur)
+        run = CrawlRun(batch.sparkSession, crawl_dir, cfg,
+                       seen_filter="none")
+        cur = run.resume_round()
+        db = None if cur < 0 else run.load_crawldb(cur)
         new_db = update_op.updatedb(db, batch, cfg,
                                     int(time.time() * 1000))
-        table.commit(new_db, 0 if cur is None else cur + 1)
-        table.expire_snapshots(keep_last=2)
+        run.commit_round(new_db, cur + 1)
+        run.db_table.expire_snapshots(keep_last=2)
 
     writer = (discovered.writeStream
               .outputMode("append")

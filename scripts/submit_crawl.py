@@ -96,8 +96,8 @@ def main(argv: list[str] | None = None) -> int:
 
     run = CrawlRun(spark, args.out, cfg, pages, robots, http_status,
                    db_buckets=args.db_buckets)
-    final_db = run.crawl(seeds, rounds=args.rounds)
-    n = final_db.count()
+    # the committed snapshot's footer rows: no job re-scans it
+    n = run.rows_or_count(run.crawl(seeds, rounds=args.rounds))
     print(f"crawl complete: {n} crawldb rows after "
           f"round {run.resume_round()} (per-table metrics: the "
           f"_snapshot.json commit records under {args.out} and "

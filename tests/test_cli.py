@@ -142,8 +142,7 @@ def test_mergedb(monkeypatch, capsys, spark, crawl_dir, tmp_path):
     # and the crawldb readers open it
     from nutch_spark.config import CrawlConfig
     from nutch_spark.crawl import CrawlRun
-    t = cli._empty_tables(spark)
-    run = CrawlRun(spark, dest, CrawlConfig(), t["pages"], t["robots"])
+    run = CrawlRun(spark, dest, CrawlConfig())
     assert run.resume_round() == 0
     assert run.load_crawldb(0).count() == n
     _main(monkeypatch, spark, ["readdb", dest, "--stats"])
@@ -201,6 +200,96 @@ def test_webgraph_linkrank_nodedumper(monkeypatch, capsys, spark,
     assert json.loads(_out(capsys)[-1])["crawldb_rows"] > 0
 
 
+def test_linkrank_failure_keeps_committed_ranks(monkeypatch, capsys,
+                                               spark, crawl_dir):
+    """The webgraph tables install atomically: a linkrank that fails
+    mid-write leaves the previously committed ranks readable."""
+    from pyspark.sql import functions as F
+    from nutch_spark.config import CrawlConfig
+    from nutch_spark.crawl import CrawlRun
+    from nutch_spark.operators import linkdb as linkdb_op
+    _main(monkeypatch, spark, ["linkrank", crawl_dir])
+    ranked = json.loads(_out(capsys)[-1])["ranked"]
+    store = CrawlRun(spark, crawl_dir, CrawlConfig()).store
+
+    def ranks_of():
+        return sorted(tuple(r) for r in
+                      store.read("webgraph/linkrank").collect())
+
+    before = ranks_of()
+    assert len(before) == ranked > 0
+
+    @F.udf("double")
+    def crash(score):
+        raise RuntimeError("simulated crash")
+
+    linkrank = linkdb_op.linkrank
+    monkeypatch.setattr(
+        linkdb_op, "linkrank", lambda *a, **kw: linkrank(*a, **kw)
+        .withColumn("score", crash("score")))
+    with pytest.raises(Exception, match="simulated crash"):
+        _main(monkeypatch, spark, ["linkrank", crawl_dir])
+    assert ranks_of() == before
+
+
+def test_written_tables_report_footer_rows(monkeypatch, capsys, spark,
+                                           crawl_dir, tmp_path):
+    """Every command that writes a table reports its row count from the
+    table's footers or commit record: the counts match the written
+    tables with the session's DataFrame.count raising throughout."""
+    from nutch_spark.config import CrawlConfig
+    from nutch_spark.crawl import CrawlRun
+    seeds = tmp_path / "seeds.txt"
+    seeds.write_text("http://a.test/\nhttp://b.test/\n")
+    urls = tmp_path / "urls.txt"
+    urls.write_text("http://host1.test/a\nhttp://host2.test/b\n")
+    d = {n: str(tmp_path / n) for n in
+         ("inj", "fl", "mdb", "segs", "ldb", "ldb2", "files")}
+    runs = [
+        ("inject", ["inject", d["inj"], str(seeds)], "urls"),
+        ("freegen", ["freegen", str(urls), d["fl"]], "fetchlist"),
+        ("mergedb", ["mergedb", d["mdb"], crawl_dir, crawl_dir], "urls"),
+        ("mergesegs", ["mergesegs", crawl_dir, d["segs"]], "urls"),
+        ("invertlinks", ["invertlinks", crawl_dir, d["ldb"]], "urls"),
+        ("mergelinkdb", ["mergelinkdb", d["ldb2"], d["ldb"]], "urls"),
+        ("dump", ["dump", crawl_dir, d["files"], "--fixture"], "files"),
+        ("webgraph", ["webgraph", crawl_dir], "nodes"),
+        ("linkrank", ["linkrank", crawl_dir], "ranked"),
+    ]
+    emitted = {}
+
+    def no_count(self):
+        raise AssertionError("DataFrame.count ran")
+
+    with monkeypatch.context() as m:
+        # the session's own DataFrame class, which defines count itself
+        m.setattr(type(spark.range(0)), "count", no_count)
+        for name, argv, key in runs:
+            _main(m, spark, argv)
+            emitted[name] = json.loads(_out(capsys)[-1])[key]
+
+    def store(out):
+        return CrawlRun(spark, out, CrawlConfig()).store
+
+    written = {
+        "inject": CrawlRun(spark, d["inj"], CrawlConfig())
+        .load_crawldb(0).count(),
+        "mergedb": CrawlRun(spark, d["mdb"], CrawlConfig())
+        .load_crawldb(0).count(),
+        "webgraph": store(crawl_dir).read("webgraph/nodedb").count(),
+        "linkrank": store(crawl_dir).read("webgraph/linkrank").count(),
+        **{n: spark.read.parquet(d[k]).count() for n, k in (
+            ("freegen", "fl"), ("mergesegs", "segs"),
+            ("invertlinks", "ldb"), ("mergelinkdb", "ldb2"),
+            ("dump", "files"))},
+    }
+    assert emitted == written
+    assert emitted["inject"] == 2 and emitted["freegen"] == 2
+    assert all(n > 0 for n in emitted.values()), emitted
+    # like inject, mergedb commits round 0 with its URL-seen layer
+    assert store(d["mdb"]).record("urlseen_bloom", 0) is not None
+
+
 def test_checkers_on_local_file(monkeypatch, capsys, spark, tmp_path):
     page = tmp_path / "p.html"
     page.write_text("<html><head><title>T</title></head><body>"
@@ -243,7 +332,10 @@ def test_rounds_of_skips_leftover_old_dir(spark, tmp_path):
     (tmp_path / "crawldb").mkdir()
     (tmp_path / "crawldb" / "_table.json").write_text(
         json.dumps({"snapshots": {}, "current": 2}))
-    assert cli._store(spark, str(tmp_path)).rounds("linkdb") == [1]
+    from nutch_spark.config import CrawlConfig
+    from nutch_spark.crawl import CrawlRun
+    assert CrawlRun(spark, str(tmp_path), CrawlConfig()).store \
+        .rounds("linkdb") == [1]
 
 
 def test_readers_skip_round_cut_before_crawldb_commit(

@@ -213,9 +213,9 @@ def test_bucket_defaults_follow_session_cores(spark, tmp_path, fixture,
                                              monkeypatch):
     """Without bucket arguments the crawldb and its URL-seen layer get
     one bucket per task thread (session.default_cores), and so does
-    the CLI's mergedb writer."""
+    a crawl opened without a corpus, as the CLI's mergedb opens its
+    destination."""
     import json
-    from nutch_spark import cli
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     run = CrawlRun(spark, str(tmp_path), CrawlConfig(), fixture["pages"],
                    fixture["robots"], fixture["http_status"])
@@ -225,7 +225,8 @@ def test_bucket_defaults_follow_session_cores(spark, tmp_path, fixture,
     assert len({f for f in (tmp_path / "crawldb" / "s0").iterdir()
                 if f.suffix == ".parquet"}) <= 3
     assert run.store.record("urlseen_bloom", 0)["n_buckets"] == 3
-    assert cli._crawldb_table(spark, str(tmp_path)).n_buckets == 3
+    assert CrawlRun(spark, str(tmp_path), CrawlConfig()).db_table \
+        .n_buckets == 3
 
 
 def test_resume_reuses_pinned_virtual_clock(spark, tmp_path, fixture):
@@ -247,6 +248,32 @@ def test_resume_reuses_pinned_virtual_clock(spark, tmp_path, fixture):
     rows_re = sorted((r.url, r.status, r.fetch_time)
                      for r in db_res.collect())
     assert rows_ok == rows_re
+
+
+def test_round_clock_is_pinned_epoch_plus_round(spark, tmp_path):
+    """next_round: the round after the latest committed one, at the
+    pinned epoch plus one round per round; a later start_ms does not
+    move a pinned epoch."""
+    from nutch_spark.crawl import ROUND_MS
+    run = CrawlRun(spark, str(tmp_path), CrawlConfig())
+    assert run.next_round(START) == (0, START)
+    assert run.next_round(START + 5) == (0, START)
+    run.db_table.commit(
+        spark.createDataFrame([("http://a.test/",)], "url string"), 0)
+    assert run.next_round() == (1, START + ROUND_MS)
+
+
+def test_corpus_less_run_refuses_to_fetch(spark, tmp_path, fixture):
+    """A CrawlRun opened without pages and robots commits and reads
+    rounds, but a round or a crawl, which fetch, raise a clear error
+    before any Spark job."""
+    run = CrawlRun(spark, str(tmp_path), CrawlConfig())
+    run.inject(fixture["seeds"], START)
+    assert run.resume_round() == 0
+    with pytest.raises(ValueError, match="pages and robots"):
+        run.run_round(1, START)
+    with pytest.raises(ValueError, match="pages and robots"):
+        run.crawl(fixture["seeds"], rounds=1)
 
 
 def test_link_scoring_cycle(spark, tmp_path, fixture):

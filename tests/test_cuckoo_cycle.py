@@ -93,3 +93,23 @@ def test_purge_gone_bloom_path_rebuilds(spark, tmp_path):
     assert new_db.where(F.col("status") == S.DB_GONE).count() == 0
     assert out["crawldb_rows"] == db.count() - n_gone
     assert run._load_bloom(rnd + 1) is not None
+
+
+def test_purge_gone_counts_from_snapshot_entries(spark, tmp_path,
+                                                 monkeypatch):
+    """purge_gone reports the purged rows as the difference of the two
+    crawldb snapshots' footer rows: the same dict, with no count job."""
+    fx = fixture_dfs(spark, n_hosts=8, pages_per_host=5,
+                     hot_host_pages=12)
+    run, db = _run(spark, tmp_path, fx, "bloom")
+    rnd = run.resume_round()
+    n_gone = db.where(F.col("status") == S.DB_GONE).count()
+    expected = {"round": rnd + 1, "crawldb_rows": db.count() - n_gone,
+                "purged_rows": n_gone}
+
+    def no_count(self):
+        raise AssertionError("DataFrame.count ran")
+
+    # the session's own DataFrame class, which defines count itself
+    monkeypatch.setattr(type(db), "count", no_count)
+    assert run.purge_gone(rnd) == expected

@@ -78,3 +78,15 @@ def test_chain_and_semantics():
     ])
     assert chain.filter("http://a.example.com/") == "http://a.example.com/"
     assert chain.filter("http://a.other.org/") is None
+
+
+def test_accepts_col_falls_back_on_python_only_regex(spark):
+    """A rule java.util.regex rejects (a Python named group) runs on
+    the Python filter chain instead of failing the job."""
+    from nutch_spark.functions.filters import filter_accepts_col
+    urls = spark.createDataFrame(
+        [("http://evil.test/",), ("http://good.test/",)], "url string")
+    rules = (("-", r"(?P<h>evil)"), ("+", "."))
+    got = {r.url: r.accepted
+           for r in filter_accepts_col(urls, rules).collect()}
+    assert got == {"http://evil.test/": False, "http://good.test/": True}

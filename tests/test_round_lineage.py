@@ -2,7 +2,8 @@
 committed tables, never over fetch/parse lineage; commit-record reads
 run no Spark job; a round, whether it returns or raises, leaves the
 session holding no more cached blocks than before it; and a warm
-round runs no more Spark jobs than its recorded ceiling."""
+round runs no more Spark jobs per stage, and tasks in all, than its
+recorded ceilings."""
 
 import itertools
 
@@ -18,10 +19,28 @@ START = 1_700_000_000_000
 DAY = 86_400_000
 
 # Spark jobs of round 2 (the first warm round) of a one-session crawl,
-# per config. A change that lowers a count lowers its ceiling here.
-ROUND_JOB_CEILINGS = {
-    "default": 31,
-    "link": 85,
+# per config and per write or call that ran them: each round-table
+# write by table name, the crawldb stage, the link-scoring calls, and
+# "other" for the jobs outside all of them (the message checkpoint).
+# TASK_CEILINGS bounds the tasks those jobs ran. A change that lowers a
+# count lowers its ceiling here.
+_SHARED_JOBS = {
+    "segments/crawl_generate": 2,
+    "segments/crawl_fetch": 7,
+    "segments/parse_text": 3,
+    "segments/parse_data": 1,
+    "other": 1,
+    "linkdb": 2,
+    "urlseen_bloom": 2,
+}
+STAGE_JOB_CEILINGS = {
+    "default": {**_SHARED_JOBS, "crawldb": 13},
+    "link": {**_SHARED_JOBS, "crawldb": 15, "find_loops": 13,
+             "linkrank": 39},
+}
+TASK_CEILINGS = {
+    "default": 111,
+    "link": 250,
 }
 
 _probe_groups = itertools.count()
@@ -53,6 +72,53 @@ def _jobs_of(spark, fn) -> list[int]:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _jobs_by_stage(spark, monkeypatch, run, fn) -> dict[str, list[int]]:
+    """Spark job ids ``fn()`` ran, grouped by the write or call that ran
+    them (the keys of ``STAGE_JOB_CEILINGS``), each through a job group
+    of its own."""
+    from nutch_spark.operators import linkdb
+    sc = spark.sparkContext
+    tag = f"probe-stages-{next(_probe_groups)}"
+    seen = {"other"}
+
+    def grouped(name, call):
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        seen.add(name)
+        sc.setJobGroup(f"{tag}:{name}", name)
+        try:
+            return call()
+        finally:
+            sc.setJobGroup(prev, prev)
+
+    def wrap(m, obj, attr, name=None):
+        call = getattr(obj, attr)
+        m.setattr(obj, attr, lambda *a, **kw: grouped(
+            name or a[1], lambda: call(*a, **kw)))
+
+    with monkeypatch.context() as m:
+        wrap(m, run.store, "write")         # (df, name, rnd)
+        wrap(m, run.db_table, "stage", "crawldb")
+        wrap(m, linkdb, "find_loops", "find_loops")
+        wrap(m, linkdb, "linkrank", "linkrank")
+        try:
+            grouped("other", fn)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    return {name: list(tracker.getJobIdsForGroup(f"{tag}:{name}"))
+            for name in seen}
+
+
+def _tasks_of(spark, jobs) -> int:
+    """Tasks the stages of ``jobs`` ran (stages a job skipped, their
+    shuffle output reused, ran none)."""
+    tracker = spark.sparkContext.statusTracker()
+    stages = {sid for jid in jobs
+              for sid in tracker.getJobInfo(jid).stageIds}
+    infos = (tracker.getStageInfo(sid) for sid in stages)
+    return sum(i.numCompletedTasks for i in infos if i is not None)
 
 
 def _persistent_rdds(spark) -> set[int]:
@@ -149,12 +215,20 @@ def test_failed_round_holds_nothing(spark, tmp_path, fx, crash_at,
     assert _persistent_rdds(spark) == before
 
 
-@pytest.mark.parametrize("scoring", sorted(ROUND_JOB_CEILINGS))
-def test_warm_round_job_ceiling(spark, tmp_path, fx, scoring):
-    """Fixed cost per round is mostly Spark jobs; their count does not
-    move with host noise, so a new job shows here as a failure."""
+@pytest.mark.parametrize("scoring", sorted(STAGE_JOB_CEILINGS))
+def test_warm_round_job_ceiling(spark, tmp_path, fx, monkeypatch,
+                                scoring):
+    """Fixed cost per round is mostly Spark jobs; their count per stage
+    and the round's task count do not move with host noise, so a new
+    job or stage shows here as a failure, in the stage that added it."""
     kw = {"scoring_filter": "link"} if scoring == "link" else {}
     run = _injected(spark, tmp_path, fx, **kw)
     assert run.run_round(1, START + DAY)["fetchlist_rows"] > 0
-    jobs = _jobs_of(spark, lambda: run.run_round(2, START + 2 * DAY))
-    assert len(jobs) <= ROUND_JOB_CEILINGS[scoring], len(jobs)
+    jobs = _jobs_by_stage(spark, monkeypatch, run,
+                          lambda: run.run_round(2, START + 2 * DAY))
+    counts = {name: len(ids) for name, ids in jobs.items() if ids}
+    ceilings = STAGE_JOB_CEILINGS[scoring]
+    assert set(counts) <= set(ceilings), counts
+    assert all(n <= ceilings[name] for name, n in counts.items()), counts
+    tasks = _tasks_of(spark, [j for ids in jobs.values() for j in ids])
+    assert tasks <= TASK_CEILINGS[scoring], tasks

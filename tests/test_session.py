@@ -26,3 +26,11 @@ def test_shuffle_partitions_default_to_cores(monkeypatch):
     conf = session.get_spark(cores=3)
     assert conf["spark.master"] == "local[3]"
     assert conf["spark.sql.shuffle.partitions"] == "3"
+
+
+def test_fetch_partitions_default_to_cores(monkeypatch):
+    """A default CrawlConfig fetches in one partition per task thread,
+    not 32."""
+    from nutch_spark.config import CrawlConfig
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert CrawlConfig().num_fetch_partitions == 3
