@@ -98,10 +98,16 @@ def _crawldb(run):
     return run.load_crawldb(rnd)
 
 
-def _footer_rows(path: str) -> int | None:
-    """Rows of the parquet table at ``path``, from its footers."""
+def _write(df, path: str) -> int:
+    """Write ``df`` as the parquet table at ``path``; its rows, from the
+    written footers (:meth:`CrawlRun.rows_or_count`: a count job only
+    when a footer is unreadable)."""
+    from .crawl import CrawlRun
     from .storage import lineage_rows, partition_lineage
-    return lineage_rows(partition_lineage(path))
+    df.write.mode("overwrite").parquet(path)
+    out = df.sparkSession.read.schema(df.schema).parquet(path)
+    out._nutch_lineage_rows = lineage_rows(partition_lineage(path))
+    return CrawlRun.rows_or_count(out)
 
 
 def _emit(obj) -> None:
@@ -115,9 +121,11 @@ def cmd_crawl(args):
     t = _tables(spark, args)
     from .config import CrawlConfig
     from .crawl import CrawlRun
+    # one politeness unit per task thread, CrawlConfig's default rule
+    # applied to the session --cores sized
     cfg = CrawlConfig(generate_top_n=args.top_n,
                       generate_max_count=args.max_count,
-                      num_fetch_partitions=args.cores * 2)
+                      num_fetch_partitions=args.cores)
     run = CrawlRun(spark, args.out_dir, cfg, t["pages"], t["robots"],
                    t["http_status"], seen_filter=args.seen_filter)
     if args.seeds:
@@ -151,8 +159,7 @@ def cmd_freegen(args):
                               int(time.time() * 1000),
                               normalize=args.normalize,
                               filter_urls=args.filter)
-    fl.write.mode("overwrite").parquet(args.dest)
-    _emit({"fetchlist": _footer_rows(args.dest), "dest": args.dest})
+    _emit({"fetchlist": _write(fl, args.dest), "dest": args.dest})
 
 
 def cmd_round_stage(args):
@@ -253,8 +260,7 @@ def cmd_mergesegs(args):
     if not segs:
         raise SystemExit("no crawl_fetch segments to merge")
     out = merge_op.merge_segments(segs, status_col="status")
-    out.write.mode("overwrite").parquet(args.dest)
-    _emit({"urls": _footer_rows(args.dest), "rounds": rounds})
+    _emit({"urls": _write(out, args.dest), "rounds": rounds})
 
 
 def cmd_invertlinks(args):
@@ -277,8 +283,7 @@ def cmd_invertlinks(args):
     if edges is None:
         raise SystemExit(f"no parse_data under {args.out_dir}")
     ldb = linkdb_op.invert_links(edges, CrawlConfig())
-    ldb.write.mode("overwrite").parquet(args.dest)
-    _emit({"urls": _footer_rows(args.dest), "rounds": rounds})
+    _emit({"urls": _write(ldb, args.dest), "rounds": rounds})
 
 
 def cmd_mergelinkdb(args):
@@ -288,8 +293,7 @@ def cmd_mergelinkdb(args):
     spark = _spark(args)
     dbs = [spark.read.parquet(d) for d in args.dbs]
     out = linkdb_op.merge_linkdbs(dbs, CrawlConfig())
-    out.write.mode("overwrite").parquet(args.dest)
-    _emit({"urls": _footer_rows(args.dest)})
+    _emit({"urls": _write(out, args.dest)})
 
 
 # --- index / dumps -------------------------------------------------------
@@ -326,8 +330,7 @@ def cmd_dump(args):
                     mime_stats=True).show(truncate=False)
     else:
         out = file_dumper(content, mime_types=args.mime_types)
-        out.write.mode("overwrite").parquet(args.dest)
-        _emit({"files": _footer_rows(args.dest), "dest": args.dest})
+        _emit({"files": _write(out, args.dest), "dest": args.dest})
 
 
 def cmd_commoncrawldump(args):
@@ -498,7 +501,7 @@ def main(argv=None):
     c.add_argument("--seen-filter",
                    choices=["bloom", "cuckoo", "none"], default=None)
 
-    i = add("inject", cmd_inject, tables=True)
+    i = add("inject", cmd_inject)
     i.add_argument("seeds")
 
     fg = add("freegen", cmd_freegen, out_dir=False)
@@ -522,8 +525,8 @@ def main(argv=None):
     m.add_argument("dest")
     m.add_argument("dbs", nargs="+")
 
-    add("dedup", cmd_dedup, tables=True)
-    add("purge", cmd_purge, tables=True)
+    add("dedup", cmd_dedup)
+    add("purge", cmd_purge)
 
     rl = add("readlinkdb", cmd_readlinkdb)
     rl.add_argument("--url")
@@ -545,7 +548,7 @@ def main(argv=None):
     ml.add_argument("dest")
     ml.add_argument("dbs", nargs="+")
 
-    ix = add("index", cmd_index, tables=True)
+    ix = add("index", cmd_index)
     ix.add_argument("--round", type=int)
 
     add("clean", cmd_clean)
@@ -572,7 +575,7 @@ def main(argv=None):
     add("webgraph", cmd_webgraph)
     lr = add("linkrank", cmd_linkrank)
     lr.add_argument("--iterations", type=int, default=10)
-    add("scoreupdater", cmd_scoreupdater, tables=True)
+    add("scoreupdater", cmd_scoreupdater)
     nd = add("nodedumper", cmd_nodedumper)
     nd.add_argument("--by", choices=["score", "inlinks", "outlinks"],
                     default="score")

@@ -159,7 +159,8 @@ class CrawlConfig:
     text_profile_quant_rate: float = 0.01
 
     # --- partitioning / scale knobs (ours) ---
-    # politeness units per round: the session's task threads
+    # politeness units per round: the session's task threads (the
+    # CLI's crawl passes the --cores its session runs with)
     num_fetch_partitions: int = field(default_factory=default_cores)
     partition_seed: int = 0                   # salt for host partitioning
 

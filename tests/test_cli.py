@@ -151,10 +151,10 @@ def test_mergedb(monkeypatch, capsys, spark, crawl_dir, tmp_path):
 
 def test_dedup_and_purge_commit_next_round(monkeypatch, capsys, spark,
                                            crawl_dir):
-    _main(monkeypatch, spark, ["dedup", crawl_dir, "--fixture"])
+    _main(monkeypatch, spark, ["dedup", crawl_dir])
     res = json.loads(_out(capsys)[-1])
     assert res["crawldb_rows"] > 0
-    _main(monkeypatch, spark, ["purge", crawl_dir, "--fixture"])
+    _main(monkeypatch, spark, ["purge", crawl_dir])
     res2 = json.loads(_out(capsys)[-1])
     assert res2["round"] == res["round"] + 1
 
@@ -165,8 +165,8 @@ def test_dedup_and_purge_keep_cuckoo_layer(monkeypatch, capsys, spark,
     after a cuckoo crawl, the rounds dedup and purge commit carry a
     cuckoo layer, not a rebuilt bloom one."""
     out = _fixture_crawl(spark, tmp_path / "ck", seen_filter="cuckoo")
-    _main(monkeypatch, spark, ["dedup", out, "--fixture"])
-    _main(monkeypatch, spark, ["purge", out, "--fixture"])
+    _main(monkeypatch, spark, ["dedup", out])
+    _main(monkeypatch, spark, ["purge", out])
     last = json.loads(_out(capsys)[-1])["round"]
     assert last == 4
     for rnd in range(last + 1):
@@ -196,7 +196,7 @@ def test_webgraph_linkrank_nodedumper(monkeypatch, capsys, spark,
     _main(monkeypatch, spark, ["nodedumper", crawl_dir,
                                "--by", "inlinks", "--topn", "5"])
     assert _out(capsys)
-    _main(monkeypatch, spark, ["scoreupdater", crawl_dir, "--fixture"])
+    _main(monkeypatch, spark, ["scoreupdater", crawl_dir])
     assert json.loads(_out(capsys)[-1])["crawldb_rows"] > 0
 
 
@@ -288,6 +288,18 @@ def test_written_tables_report_footer_rows(monkeypatch, capsys, spark,
     assert all(n > 0 for n in emitted.values()), emitted
     # like inject, mergedb commits round 0 with its URL-seen layer
     assert store(d["mdb"]).record("urlseen_bloom", 0) is not None
+
+
+def test_unreadable_footer_falls_back_to_count(monkeypatch, capsys,
+                                               spark, tmp_path):
+    """A written table whose footers cannot be read still reports its
+    row count, from a count job, never null."""
+    from nutch_spark import storage
+    urls = tmp_path / "urls.txt"
+    urls.write_text("http://host1.test/a\nhttp://host2.test/b\n")
+    monkeypatch.setattr(storage, "lineage_rows", lambda lineage: None)
+    _main(monkeypatch, spark, ["freegen", str(urls), str(tmp_path / "fl")])
+    assert json.loads(_out(capsys)[-1])["fetchlist"] == 2
 
 
 def test_checkers_on_local_file(monkeypatch, capsys, spark, tmp_path):
